@@ -37,29 +37,15 @@ object Engine {
     spark
   }
 
-  /** Drop every session-scoped memo the engine keeps for `spark` — the
-    * blocked embedding pair scan, the verified near-dup pair graph, the
-    * curation status frame, the at-rest IVF index, and the bucketed
-    * tables — unpersisting their checkpoints and deleting the index and
-    * bucket scratch dirs (catalog registrations dropped too). The memos
+  /** Drop every session-scoped memo the engine keeps for `spark` (each
+    * `graft.store.SessionMemo`), releasing what the entries hold:
+    * checkpoint blocks, scratch roots, catalog registrations. The memos
     * self-invalidate on source-table rewrites (fingerprint keys;
     * DedupSpec), so this exists for the remaining cases: reclaiming
-    * block-manager space mid-session, or forcing a rebuild after an
-    * in-place mutation the fingerprint cannot see.
+    * block-manager and disk space mid-session, forcing a rebuild after an
+    * in-place mutation the fingerprint cannot see, or timing a cold pass.
     */
-  def clearCaches(spark: SparkSession): Unit = {
-    graft.llm.Similarity.clearPairCache(spark)
-    graft.llm.Similarity.clearIndexCache(spark)
-    graft.llm.Dedup.clearVerifiedCache(spark)
-    graft.llm.Curation.clearStatusCache(spark)
-    graft.store.Bucketed.clearBucketCache(spark)
-    graft.store.CatalogTable.clearCatalogCache(spark)
-    graft.store.Lake.clearOrcCache(spark)
-    graft.llm.TextAnalysis.clearWinnowPostingsCache(spark)
-    graft.llm.Suffix.clearRanksCache(spark)
-    graft.llm.CorpusSuffix.clearRanksCache(spark)
-    graft.stream.StreamReplay.clearReplayCache(spark)
-  }
+  def clearCaches(spark: SparkSession): Unit = graft.store.SessionMemo.clearAll(spark)
 
   /** Runtime SQL confs that are safe to set on a session we did not build
     * (e.g. the driver harness's). Idempotent.

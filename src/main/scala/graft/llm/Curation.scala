@@ -131,32 +131,21 @@ object Curation {
   // ---- registered queries -------------------------------------------------
 
   /** Both registered queries are views over ONE annotated status frame
-    * (doc_id, lang, n_chars, status — narrow), memoized per session with
-    * the same fingerprint-keyed one-entry shape as the pair memos: the
-    * corpus survives curation once, then the report is an aggregation
-    * over checkpointed rows instead of a second full pipeline run. The
-    * library API (annotate/curate/report) stays un-memoized — callers
-    * compose those over arbitrary frames.
+    * (doc_id, lang, n_chars, status — narrow), memoized per session and
+    * documents-table fingerprint: the corpus survives curation once, then
+    * the report is an aggregation over checkpointed rows instead of a
+    * second full pipeline run. The library API (annotate/curate/report)
+    * stays un-memoized — callers compose those over arbitrary frames.
     */
-  private val statusCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, DataFrame)]
+  private val statusCache = new graft.store.SessionMemo[(String, Long), DataFrame](
+    1, (_, df) => graft.store.Checkpoints.free(df))
 
-  private[graft] def clearStatusCache(spark: SparkSession): Unit =
-    statusCache.remove(spark).foreach(e => graft.store.Checkpoints.free(e._3))
-
-  private def statusFrame(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.store.Snapshot.fingerprint(dir, "documents.parquet")
-    statusCache.get(spark) match {
-      case Some((d, f, df)) if d == dir && f == fp => df
-      case stale =>
-        stale.foreach(e => graft.store.Checkpoints.free(e._3))
-        val df = annotate(Tables.documents(spark, dir))
-          .select(col("doc_id"), col("lang"), col("n_chars"), col("status"))
-          .localCheckpoint()
-        statusCache(spark) = (dir, fp, df)
-        df
+  private def statusFrame(spark: SparkSession, dir: String): DataFrame =
+    statusCache.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "documents.parquet"))) {
+      annotate(Tables.documents(spark, dir))
+        .select(col("doc_id"), col("lang"), col("n_chars"), col("status"))
+        .localCheckpoint()
     }
-  }
 
   /** The curated corpus ids. Oracle-checked: every stage is ANSI-
     * expressible, and the LSH near-dup stage agrees with the oracle's

@@ -332,23 +332,16 @@ object Similarity {
     * session (every PQ-family query gates on the same
     * `embeddings.filter(vec_id < NumQueries)` plan, and warm bench
     * iterations re-run each query), so the count is memoized per
-    * (session, canonicalized plan, source fingerprint) — the same
-    * session-keyed cache discipline as the at-rest index roots above.
-    * The fingerprint (path/size/mtime of every file under the plan's
-    * scan roots, `Snapshot.fingerprintPath`) closes the staleness
-    * window the plan key alone had: a same-plan source REWRITE now
-    * re-counts instead of reusing stale — the `Snapshot.fingerprint`
-    * discipline CatalogTable.built already uses. One cheap listing of
-    * the (small-by-contract) query source per gate call buys it.
+    * (session, canonicalized plan, source fingerprint). The fingerprint
+    * (path/size/mtime of every file under the plan's scan roots,
+    * `Snapshot.fingerprintPath`) closes the staleness window a plan key
+    * alone has: a same-plan source REWRITE re-counts instead of reusing
+    * stale. One cheap listing of the (small-by-contract) query source per
+    * gate call buys it. Bounded at 64 plans PER SESSION, so a noisy
+    * session never evicts another's warm entries (r17 verdict).
     */
-  private val querySideCounts = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long), Long]
-
-  private[graft] def clearQuerySideGateCache(spark: SparkSession): Unit =
-    querySideCounts.keys.filter(_._1 eq spark).foreach(querySideCounts.remove)
-
-  private[graft] def querySideGateMemoSize(spark: SparkSession): Int =
-    querySideCounts.keys.count(_._1 eq spark)
+  private[graft] val querySideCounts = new graft.store.SessionMemo[
+    (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long), Long](64)
 
   /** Summed-mix fingerprint of every file-source root the query plan
     * scans; 17L for purely in-memory plans. Order-independent (Long
@@ -376,16 +369,8 @@ object Similarity {
   }
 
   private def requireQuerySide(queries: DataFrame, op: String, maxRows: Long): Unit = {
-    val session = queries.sparkSession
-    // bound the memo PER SESSION (a 65th distinct plan in one session
-    // must not evict another session's warm entries — r17 verdict), and
-    // drop entries pinned by stopped sessions while here
-    querySideCounts.keys
-      .filter(_._1.sparkContext.isStopped).foreach(querySideCounts.remove)
-    if (querySideGateMemoSize(session) > 64) clearQuerySideGateCache(session)
-    val key = (session, queries.queryExecution.analyzed.canonicalized,
-      querySourceFingerprint(queries))
-    val n = querySideCounts.getOrElseUpdate(key, queries.count())
+    val key = (queries.queryExecution.analyzed.canonicalized, querySourceFingerprint(queries))
+    val n = querySideCounts.get(queries.sparkSession, key)(queries.count())
     require(n <= maxRows,
       s"$op builds DRIVER-HELD per-query artifacts (LUTs/coarse terms, " +
         s"broadcast to every probe); the query side is the small side by " +
@@ -1272,67 +1257,43 @@ object Similarity {
     * the pruned scan, and the ranking end-to-end.
     *
     * The index build is ONE-OFF by design (an at-rest index exists to be
-    * probed many times), so it is memoized per session exactly like the
-    * bucketed-table build: repeat invocations probe the already-built
-    * index, a source rewrite (fingerprint) or dir switch rebuilds, the
-    * old root is deleted on eviction and at JVM exit — disk stays flat
-    * and the benched time measures the pruned probe path.
+    * probed many times), so it is memoized per session: repeat
+    * invocations probe the already-built index, a source rewrite
+    * (fingerprint) or dir switch rebuilds, the old root is deleted on
+    * eviction — disk stays flat and the benched time measures the pruned
+    * probe path.
     */
   private val ivfIndexCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, String)]
+    new graft.store.SessionMemo[(String, Long), String](1, (_, idx) => graft.store.ScratchDirs.release(idx))
 
-  /** ONE JVM exit hook for all index roots, registered at first build and
-    * consulting the live cache — rebuilds never accumulate hooks (each
-    * rebuild already deletes the root it evicts).
-    */
-  private lazy val indexExitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      ivfIndexCache.values.foreach { case (_, _, idx) =>
-        graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(idx))
-      }))
-
-  private[graft] def clearIndexCache(spark: SparkSession): Unit =
-    ivfIndexCache.remove(spark).foreach { case (_, _, old) =>
-      graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(old))
+  private def indexRoot(spark: SparkSession, dir: String): String =
+    ivfIndexCache.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "embeddings.parquet"))) {
+      val emb = Tables.embeddings(spark, dir)
+      val codes = trainCentroidCodes(emb, NList, SampleSize, KmIters)
+      val idx = graft.store.ScratchDirs.create("ivf_index")
+      // seed the index with a deterministic slice via the batch build,
+      // then ingest the rest THROUGH the stream that maintains the
+      // index in production (`MicroBatch.annIngestStream`). Assignment
+      // is a pure per-vector function of the fixed centroid table and
+      // the replay guard is per-vec_id, so the at-rest index is
+      // batching-invariant — llm_ann_ivf_indexed's oracle therefore
+      // gates the streaming list-append path, not just the probe.
+      buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(4L)) === 0), codes, idx)
+      val landing = s"$idx/landing"
+      emb.filter(pmod(col("vec_id"), lit(4L)) =!= 0)
+        .select(col("vec_id"), col("embedding"))
+        .repartition(4, pmod(col("vec_id"), lit(4L)))
+        .write.json(landing)
+      import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
+      graft.stream.MicroBatch.runToCompletion(
+        graft.stream.MicroBatch.annIngestStream(
+          spark, landing,
+          StructType(Seq(
+            StructField("vec_id", LongType),
+            StructField("embedding", ArrayType(FloatType)))),
+          idx, s"$idx/ckpt"))
+      idx
     }
-
-  private def indexRoot(spark: SparkSession, dir: String): String = {
-    val fp = graft.store.Snapshot.fingerprint(dir, "embeddings.parquet")
-    ivfIndexCache.get(spark) match {
-      case Some((d, f, idx)) if d == dir && f == fp => idx
-      case stale =>
-        stale.foreach { case (_, _, old) =>
-          graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(old))
-        }
-        val emb = Tables.embeddings(spark, dir)
-        val codes = trainCentroidCodes(emb, NList, SampleSize, KmIters)
-        val idx = java.nio.file.Files.createTempDirectory("ivf_index").toString
-        indexExitHook
-        // seed the index with a deterministic slice via the batch build,
-        // then ingest the rest THROUGH the stream that maintains the
-        // index in production (`MicroBatch.annIngestStream`). Assignment
-        // is a pure per-vector function of the fixed centroid table and
-        // the replay guard is per-vec_id, so the at-rest index is
-        // batching-invariant — llm_ann_ivf_indexed's oracle therefore
-        // gates the streaming list-append path, not just the probe.
-        buildIvfIndex(emb.filter(pmod(col("vec_id"), lit(4L)) === 0), codes, idx)
-        val landing = s"$idx/landing"
-        emb.filter(pmod(col("vec_id"), lit(4L)) =!= 0)
-          .select(col("vec_id"), col("embedding"))
-          .repartition(4, pmod(col("vec_id"), lit(4L)))
-          .write.json(landing)
-        import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
-        graft.stream.MicroBatch.runToCompletion(
-          graft.stream.MicroBatch.annIngestStream(
-            spark, landing,
-            StructType(Seq(
-              StructField("vec_id", LongType),
-              StructField("embedding", ArrayType(FloatType)))),
-            idx, s"$idx/ckpt"))
-        ivfIndexCache(spark) = (dir, fp, idx)
-        idx
-    }
-  }
 
   def ivfIndexedQuery(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
@@ -1366,30 +1327,16 @@ object Similarity {
     * is impossible — and the entry is keyed on a filesystem fingerprint
     * (path, size, mtime of every file under the table) so rewriting the
     * embeddings table within a session rebuilds instead of silently
-    * serving the stale scan. `clearPairCache` is the explicit escape
-    * hatch (and frees the checkpoint blocks).
+    * serving the stale scan.
     */
-  private val pairCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, DataFrame)]
+  private[graft] val pairCache = new graft.store.SessionMemo[(String, Long), DataFrame](
+    1, (_, df) => graft.store.Checkpoints.free(df))
 
-  private def tableFingerprint(dir: String): Long =
-    graft.store.Snapshot.fingerprint(dir, "embeddings.parquet")
-
-  private[graft] def clearPairCache(spark: SparkSession): Unit =
-    pairCache.remove(spark).foreach(e => graft.store.Checkpoints.free(e._3))
-
-  private def blockedPairs(spark: SparkSession, dir: String): DataFrame = {
-    val fp = tableFingerprint(dir)
-    pairCache.get(spark) match {
-      case Some((d, f, df)) if d == dir && f == fp => df
-      case stale =>
-        stale.foreach(e => graft.store.Checkpoints.free(e._3))
-        val df = bruteForcePairsBlocked(Tables.embeddings(spark, dir), PairTau, PairBlocks)
-          .localCheckpoint()
-        pairCache(spark) = (dir, fp, df)
-        df
+  private def blockedPairs(spark: SparkSession, dir: String): DataFrame =
+    pairCache.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "embeddings.parquet"))) {
+      bruteForcePairsBlocked(Tables.embeddings(spark, dir), PairTau, PairBlocks)
+        .localCheckpoint()
     }
-  }
 
   /** Exact near-dup pairs at the data's threshold regime (oracle: all-pairs
     * cosine in DuckDB). Runs the BLOCKED plan — the one that survives past

@@ -237,28 +237,17 @@ object Suffix {
     Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(SampleMod)) === 0)
 
   /** Both registered queries read ONE rank build per (session, corpus
-    * snapshot) — the same fingerprint-keyed one-entry memo the curation
-    * status frame uses; suffixRanks already returns a checkpointed
-    * frame, so the memo stores it as-is. The library API
+    * snapshot); suffixRanks already returns a checkpointed frame, so the
+    * memo stores it as-is. The library API
     * (suffixRanks / longestRepeatedSubstring) stays un-memoized.
     */
-  private val ranksCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, DataFrame)]
+  private val ranksCache = new graft.store.SessionMemo[(String, Long), DataFrame](
+    1, (_, df) => graft.store.Checkpoints.free(df))
 
-  private[graft] def clearRanksCache(spark: SparkSession): Unit =
-    ranksCache.remove(spark).foreach(e => graft.store.Checkpoints.free(e._3))
-
-  private def sampledRanks(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.store.Snapshot.fingerprint(dir, "documents.parquet")
-    ranksCache.get(spark) match {
-      case Some((d, f, df)) if d == dir && f == fp => df
-      case stale =>
-        stale.foreach(e => graft.store.Checkpoints.free(e._3))
-        val df = suffixRanks(sampled(spark, dir), "text", "doc_id")
-        ranksCache(spark) = (dir, fp, df)
-        df
+  private def sampledRanks(spark: SparkSession, dir: String): DataFrame =
+    ranksCache.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "documents.parquet"))) {
+      suffixRanks(sampled(spark, dir), "text", "doc_id")
     }
-  }
 
   def suffixArrayQuery(spark: SparkSession, dir: String): DataFrame =
     sampledRanks(spark, dir)
@@ -628,23 +617,13 @@ object CorpusSuffix {
   private def sampled(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(SampleMod)) === 0)
 
-  private val ranksCache =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, DataFrame)]
+  private val ranksCache = new graft.store.SessionMemo[(String, Long), DataFrame](
+    1, (_, df) => graft.store.Checkpoints.free(df))
 
-  private[graft] def clearRanksCache(spark: SparkSession): Unit =
-    ranksCache.remove(spark).foreach(e => graft.store.Checkpoints.free(e._3))
-
-  private def sampledRanks(spark: SparkSession, dir: String): DataFrame = {
-    val fp = graft.store.Snapshot.fingerprint(dir, "documents.parquet")
-    ranksCache.get(spark) match {
-      case Some((d, f, df)) if d == dir && f == fp => df
-      case stale =>
-        stale.foreach(e => graft.store.Checkpoints.free(e._3))
-        val df = corpusSuffixRanks(sampled(spark, dir), "text", "doc_id")
-        ranksCache(spark) = (dir, fp, df)
-        df
+  private def sampledRanks(spark: SparkSession, dir: String): DataFrame =
+    ranksCache.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "documents.parquet"))) {
+      corpusSuffixRanks(sampled(spark, dir), "text", "doc_id")
     }
-  }
 
   /** Registered-parameter plan forms for PlanDiag's scale-flip sweep
     * (the ranks build itself executes — memoized and inherently

@@ -688,60 +688,40 @@ object TextAnalysis {
 
   private[graft] val WinnowBands = 16L
 
-  /** One postings build per (session, source dir, source fingerprint) —
-    * the same memo discipline as the ORC/bucketed/IVF builds: repeat
-    * invocations probe the already-written index, a rewritten documents
-    * table rebuilds via the fingerprint, one exit hook cleans up.
+  /** One postings build per (session, source dir, source fingerprint):
+    * repeat invocations probe the already-written index, a rewritten
+    * documents table rebuilds via the fingerprint.
     */
-  private val winnowPostingsBuilt =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, String)]
+  private val winnowPostingsBuilt = new graft.store.SessionMemo[(String, Long), String](
+    1, (_, root) => graft.store.ScratchDirs.release(root))
 
-  private lazy val winnowPostingsExitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      winnowPostingsBuilt.values.foreach { case (_, _, root) =>
-        graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(root))
-      }))
-
-  private[graft] def clearWinnowPostingsCache(spark: SparkSession): Unit =
-    winnowPostingsBuilt.remove(spark).foreach { case (_, _, root) =>
-      graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(root))
+  private[graft] def winnowPostingsRoot(spark: SparkSession, dir: String): String =
+    winnowPostingsBuilt.get(spark, (dir, graft.store.Snapshot.fingerprint(dir, "documents.parquet"))) {
+      val root = graft.store.ScratchDirs.create("graft_winnow")
+      // the index is built by the STREAM that maintains it in
+      // production (`MicroBatch.winnowIngestStream`): documents land as
+      // JSONL slices, micro-batches winnow them and append (doc_id,
+      // pos, fp) postings partitioned by band = fp mod nBands. Postings
+      // are a pure per-document function and the replay guard is
+      // per-doc, so the at-rest table is batching-invariant — which is
+      // what lets llm_winnow_probe's oracle gate the streaming
+      // maintenance path, not just the probe
+      val landing = java.nio.file.Paths.get(root, "landing")
+      Tables.documents(spark, dir)
+        .select(col("doc_id"), col("text"))
+        .repartition(4, pmod(col("doc_id"), lit(4L)))
+        .write.json(landing.toString) // writer creates the dir itself
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text",
+          org.apache.spark.sql.types.StringType)))
+      graft.stream.MicroBatch.runToCompletion(
+        graft.stream.MicroBatch.winnowIngestStream(
+          spark, landing.toString, schema, s"$root/postings",
+          s"$root/ckpt", nBands = WinnowBands.toInt))
+      root
     }
-
-  private[graft] def winnowPostingsRoot(spark: SparkSession, dir: String): String = {
-    val fp = graft.store.Snapshot.fingerprint(dir, "documents.parquet")
-    winnowPostingsBuilt.get(spark) match {
-      case Some((d, f, root)) if d == dir && f == fp => root
-      case stale =>
-        stale.foreach { case (_, _, old) =>
-          graft.store.Lake.deleteRecursive(java.nio.file.Paths.get(old)) }
-        winnowPostingsExitHook
-        val root = java.nio.file.Files.createTempDirectory("graft_winnow").toString
-        // the index is built by the STREAM that maintains it in
-        // production (`MicroBatch.winnowIngestStream`): documents land as
-        // JSONL slices, micro-batches winnow them and append (doc_id,
-        // pos, fp) postings partitioned by band = fp mod nBands. Postings
-        // are a pure per-document function and the replay guard is
-        // per-doc, so the at-rest table is batching-invariant — which is
-        // what lets llm_winnow_probe's oracle gate the streaming
-        // maintenance path, not just the probe
-        val landing = java.nio.file.Paths.get(root, "landing")
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), col("text"))
-          .repartition(4, pmod(col("doc_id"), lit(4L)))
-          .write.json(landing.toString) // writer creates the dir itself
-        val schema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("text",
-            org.apache.spark.sql.types.StringType)))
-        graft.stream.MicroBatch.runToCompletion(
-          graft.stream.MicroBatch.winnowIngestStream(
-            spark, landing.toString, schema, s"$root/postings",
-            s"$root/ckpt", nBands = WinnowBands.toInt))
-        winnowPostingsBuilt(spark) = (dir, fp, root)
-        root
-    }
-  }
 
   /** `winnowProbe` through the CORRECTNESS gate: build the banded at-rest
     * postings index over the documents table (memoized per session ×

@@ -410,8 +410,7 @@ object Analytics {
     * dir). Staleness after an in-place rewrite is benign — the value
     * only sizes exchanges, never results (the candEstCache argument).
     */
-  private val liCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private[graft] val liCountCache = new graft.store.SessionMemo[String, Long](256)
 
   /** Target rows per basket-pair exchange partition — the containment
     * family's calibrated ~0.2 GB/task byte budget at ids-only row width.
@@ -431,9 +430,7 @@ object Analytics {
     // count (pair rows ≈ 1.3× lineitem rows at bounded basket size,
     // measured sf0.1; 2× headroom) — at bench SF the estimate stays
     // under the session default and the plan is unchanged.
-    if (liCountCache.size > 256) liCountCache.clear()
-    val liRows: Long = liCountCache.computeIfAbsent(dir, _ =>
-      Tables.lineitem(spark, dir).count())
+    val liRows: Long = liCountCache.get(spark, dir)(Tables.lineitem(spark, dir).count())
     val sessionP = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val autoP = math.min(Int.MaxValue.toLong,
       2L * liRows / BasketRowsPerPartition + 1).toInt

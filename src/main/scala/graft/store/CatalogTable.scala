@@ -23,100 +23,61 @@ import graft.Tables
   */
 object CatalogTable {
 
-  // Same memo discipline as Bucketed/orcRoot: one partitioned write +
-  // registration per (session, source dir, source fingerprint); rebuilds
-  // drop the stale registration and root, one exit hook reaps live roots.
-  // All three session-keyed maps are WEAK-keyed: a strong TrieMap key
-  // would pin every SparkSession (SessionState, caches, catalogs) that
-  // ever touched this object for the life of the driver.
-  private def weakMap[V <: AnyRef]: java.util.Map[SparkSession, V] =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[SparkSession, V])
-
-  private val built = weakMap[(String, Long, String)]
-
-  // one lock per session: registration is DROP+CREATE+recover against a
-  // shared-metastore name, so two concurrent builders for the same
-  // session would both register and the loser's root would fall out of
-  // `built` untracked (never reaped)
-  private val buildLocks = weakMap[Object]
-
-  private def lockFor(spark: SparkSession): Object =
-    buildLocks.computeIfAbsent(spark, _ => new Object)
-
-  private def sourceFingerprint(dir: String): Long =
-    Snapshot.fingerprint(dir, "events.parquet")
-
-  // the exit hook reaps from a session-FREE root registry: a root whose
-  // session was GC'd (weak `built` entry gone) must still be deleted at
-  // JVM exit, so the strings are tracked separately from the weak memo
-  private val exitRoots = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
-  private lazy val exitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      exitRoots.keys.foreach(Fs.delete)))
-
   /** Catalog names must be session-unique on a SHARED metastore and
     * unique across session lifetimes, so the tag is a memoized random
     * UUID — an identity-hash name can be reused after GC (or plainly
     * collide between live sessions), letting this session's
-    * `DROP TABLE IF EXISTS` take another session's live table.
+    * `DROP TABLE IF EXISTS` take another session's live table. Every
+    * session-named table of the store (here and `Bucketed`) carries it.
     */
-  private val sessionTag = weakMap[String]
+  private val tags = new SessionMemo[Unit, String](1)
 
-  private def tableName(spark: SparkSession): String =
-    "graft_events_cat_" + sessionTag.computeIfAbsent(spark,
-      _ => java.util.UUID.randomUUID().toString.replace("-", ""))
+  private[store] def sessionTag(spark: SparkSession): String =
+    tags.get(spark, ())(java.util.UUID.randomUUID().toString.replace("-", ""))
 
-  private[graft] def trackedRoot(spark: SparkSession): Option[String] =
-    Option(built.get(spark)).map(_._3)
+  private[graft] def sessionTableName(spark: SparkSession): String =
+    "graft_events_cat_" + sessionTag(spark)
 
-  private[graft] def sessionTableName(spark: SparkSession): String = tableName(spark)
-
-  private[graft] def clearCatalogCache(spark: SparkSession): Unit =
-    lockFor(spark).synchronized {
-      Option(built.remove(spark)).foreach { case (_, _, oldRoot) =>
-        spark.sql(s"DROP TABLE IF EXISTS ${tableName(spark)}")
-        Fs.delete(oldRoot)
-        exitRoots.remove(oldRoot)
-      }
-    }
+  /** One partitioned write + registration per (session, source dir,
+    * source fingerprint), as (table name, scratch root). The memo's
+    * per-session build lock matters here: registration is
+    * DROP+CREATE+recover against a shared-metastore name, so two
+    * concurrent builders for one session would both register and
+    * orphan the loser's root.
+    */
+  private[graft] val built = new SessionMemo[(String, Long), (String, String)](1,
+    (spark, e) => {
+      spark.sql(s"DROP TABLE IF EXISTS ${e._1}")
+      ScratchDirs.release(e._2)
+    })
 
   /** The registered catalog table, built/registered on first use:
     * date-partitioned lake write → external-table DDL → ONE
     * `recoverPartitions`. Returns the catalog name to `spark.table`.
     */
   private def registeredEvents(spark: SparkSession, dir: String): String =
-    lockFor(spark).synchronized {
-      val name = tableName(spark)
-      val fp = sourceFingerprint(dir)
-      if (!Option(built.get(spark)).exists(e => e._1 == dir && e._2 == fp)) {
-        clearCatalogCache(spark)
-        exitHook
-        // driver-local scratch, but created/addressed through the Fs seam
-        // with a fully qualified LOCATION: the identical DDL shape deploys
-        // against any registered scheme (swap the root, nothing else)
-        val root =
-          s"${sys.props("java.io.tmpdir")}/graft_catalog_${java.util.UUID.randomUUID()}"
-        Fs.mkdirs(root)
-        val tableLoc = Fs.qualified(s"$root/events")
-        val data = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
-        data.write.partitionBy("event_date").parquet(tableLoc)
-        // external-table DDL over the layout: schema declared (never
-        // inferred — the Athena-table shape), partition column last
-        val colDdl = data.schema.filterNot(_.name == "event_date")
-          .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        spark.sql(
-          s"CREATE TABLE $name ($colDdl, event_date DATE) USING PARQUET " +
-            s"PARTITIONED BY (event_date) LOCATION '$tableLoc'")
-        // the MSCK REPAIR / ALTER TABLE ADD PARTITION replacement: one
-        // catalog-side listing, no per-batch DDL
-        spark.catalog.recoverPartitions(name)
-        built.put(spark, (dir, fp, root))
-        exitRoots.put(root, ())
-      }
-      name
-    }
+    built.get(spark, (dir, Snapshot.fingerprint(dir, "events.parquet"))) {
+      val name = sessionTableName(spark)
+      // driver-local scratch, but addressed through the Fs seam with a
+      // fully qualified LOCATION: the identical DDL shape deploys
+      // against any registered scheme (swap the root, nothing else)
+      val root = ScratchDirs.create("graft_catalog_")
+      val tableLoc = Fs.qualified(s"$root/events")
+      val data = Tables.events(spark, dir).withColumn("event_date", to_date(col("ts")))
+      data.write.partitionBy("event_date").parquet(tableLoc)
+      // external-table DDL over the layout: schema declared (never
+      // inferred — the Athena-table shape), partition column last
+      val colDdl = data.schema.filterNot(_.name == "event_date")
+        .map(f => s"${f.name} ${f.dataType.sql}").mkString(", ")
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      spark.sql(
+        s"CREATE TABLE $name ($colDdl, event_date DATE) USING PARQUET " +
+          s"PARTITIONED BY (event_date) LOCATION '$tableLoc'")
+      // the MSCK REPAIR / ALTER TABLE ADD PARTITION replacement: one
+      // catalog-side listing, no per-batch DDL
+      spark.catalog.recoverPartitions(name)
+      (name, root)
+    }._1
 
   // must stay identical to Web.engagement's range — the oracle is shared
   private val RangeStart = "2024-01-05"

@@ -484,35 +484,18 @@ object Lake {
   // ---- registered query ---------------------------------------------------
 
   /** One ORC build per (session, source dir, source fingerprint) — the
-    * format hop is the one-off cost (same memo discipline as the
-    * bucketed/IVF builds: repeat invocations read the already-written
-    * table, an in-place rewrite of orders rebuilds via the fingerprint,
-    * one exit hook consults the live cache).
+    * format hop is the one-off cost: repeat invocations read the
+    * already-written table, an in-place rewrite of orders rebuilds via
+    * the fingerprint. Driver-local scratch by design.
     */
-  private val orcBuilt =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, String)]
+  private val orcBuilt = new SessionMemo[(String, Long), String](1, (_, root) => ScratchDirs.release(root))
 
-  private lazy val orcExitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      orcBuilt.values.foreach { case (_, _, root) => Fs.delete(root) }))
-
-  private[graft] def clearOrcCache(spark: SparkSession): Unit =
-    orcBuilt.remove(spark).foreach { case (_, _, root) => Fs.delete(root) }
-
-  private def orcRoot(spark: SparkSession, dir: String): String = {
-    val fp = Snapshot.fingerprint(dir, "orders.parquet")
-    orcBuilt.get(spark) match {
-      case Some((d, f, root)) if d == dir && f == fp => root
-      case stale =>
-        stale.foreach { case (_, _, old) => Fs.delete(old) }
-        orcExitHook
-        // driver-local scratch by design (session-scoped memo table)
-        val root = java.nio.file.Files.createTempDirectory("graft_orc").toString
-        writeOrcPartitioned(graft.Tables.orders(spark, dir), "o_orderstatus", s"$root/orders")
-        orcBuilt(spark) = (dir, fp, root)
-        root
+  private def orcRoot(spark: SparkSession, dir: String): String =
+    orcBuilt.get(spark, (dir, Snapshot.fingerprint(dir, "orders.parquet"))) {
+      val root = ScratchDirs.create("graft_orc")
+      writeOrcPartitioned(graft.Tables.orders(spark, dir), "o_orderstatus", s"$root/orders")
+      root
     }
-  }
 
   /** ORC interchange round-trip through the ORACLE gate: orders hops
     * parquet → partitioned ORC → back, then filters and aggregates; the

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Tables
-import graft.store.{Lake, Snapshot, Versioned}
+import graft.store.{Lake, ScratchDirs, SessionMemo, Snapshot, Versioned}
 
 /** The streaming state tables, deterministically replayed through the
   * CORRECTNESS gate (SURVEY.md §2.9 T2/T4/T5 — the at-rest side).
@@ -37,8 +37,8 @@ import graft.store.{Lake, Snapshot, Versioned}
   *    closes at the key's next change point.
   *
   * Build cost is paid once per (session, source-dir, source
-  * fingerprint) — the ORC/bucketed/IVF memo discipline — so repeated
-  * invocations (bench passes) read the already-built tables.
+  * fingerprint), so repeated invocations (bench passes) read the
+  * already-built tables.
   */
 object StreamReplay {
 
@@ -58,8 +58,8 @@ object StreamReplay {
 
   // ---- scratch memo (per session × source dir × source fingerprint) ------
   //
-  // Two layers. In-JVM: a TrieMap memo, as every other session-scoped
-  // build. Cross-JVM: the built root is PERSISTED content-addressed by
+  // Two layers. In-JVM: a one-entry `SessionMemo`. Cross-JVM: the built
+  // root is PERSISTED content-addressed by
   // (source fingerprint, compiled-code fingerprint) under
   // /tmp/graft_replay_cache — within one round the driver's verify run,
   // the bench run, and any chunked sweep are separate JVMs over the SAME
@@ -71,21 +71,11 @@ object StreamReplay {
   // can only ever be adopted by the code+data that built it. A crashed
   // build never publishes (the `_COMPLETE`-marked dir is renamed into
   // place only after every family finished). Opt out with
-  // SPARK_GRAFT_REPLAY_CACHE=0 (falls back to per-JVM temp roots).
+  // SPARK_GRAFT_REPLAY_CACHE=0 (falls back to per-JVM temp roots, the
+  // only roots the memo owns and deletes; adopted roots stay shared).
 
   private val built =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, (String, Long, String, Boolean)]
-
-  private lazy val exitHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      built.values.foreach { case (_, _, root, owned) =>
-        if (owned) Lake.deleteRecursive(Paths.get(root))
-      }))
-
-  private[graft] def clearReplayCache(spark: SparkSession): Unit =
-    built.remove(spark).foreach { case (_, _, root, owned) =>
-      if (owned) Lake.deleteRecursive(Paths.get(root))
-    }
+    new SessionMemo[(String, Long), String](1, (_, root) => ScratchDirs.release(root))
 
   private def sourceFingerprint(dir: String): Long =
     (((Snapshot.fingerprint(dir, "lineitem.parquet") * 1000003L ^
@@ -152,10 +142,10 @@ object StreamReplay {
   /** Test hook: drop the in-JVM memo AND the persisted entry for `dir`,
     * so the next query provably re-runs the full streaming build (the
     * rebuild-determinism property needs a real rebuild to test — with
-    * the persistent cache, `clearReplayCache` alone just re-adopts).
+    * the persistent cache, clearing the memo alone just re-adopts).
     */
   private[graft] def dropPersistentCache(spark: SparkSession, dir: String): Unit = {
-    clearReplayCache(spark)
+    built.clear(spark)
     codeFingerprint().foreach { cfp =>
       val key = f"r_${sourceFingerprint(dir)}%016x_${cfp}%016x"
       Lake.deleteRecursive(cacheBase.resolve(key))
@@ -167,121 +157,102 @@ object StreamReplay {
 
   private def replayRoot(spark: SparkSession, dir: String): String = {
     val fp = sourceFingerprint(dir)
-    built.get(spark) match {
-      case Some((d, f, root, owned)) if d == dir && f == fp =>
-        // a hit on an ADOPTED (shared-cache) root refreshes its mtime so
-        // the 24h reap tests last USE, not adoption time: a session
-        // querying the same root for >24h must not lose it to a
-        // concurrent builder's cleanup mid-session (r15 advice)
-        if (!owned)
-          try Files.setLastModifiedTime(Paths.get(root),
-            java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-          catch { case _: java.io.IOException => () }
-        root
-      case stale =>
-        stale.foreach { case (_, _, old, owned) =>
-          if (owned) Lake.deleteRecursive(Paths.get(old)) }
-        exitHook
-        // no code identity (null code source under bundled/boot
-        // classloaders) → no safe cross-JVM key → per-JVM temp root
-        val codeFp = codeFingerprint()
-        val useCache = cacheEnabled && codeFp.isDefined
-        val key = f"r_${fp}%016x_${codeFp.getOrElse(0L)}%016x"
-        val cached = cacheBase.resolve(key)
-        if (useCache && Files.exists(cached.resolve("_COMPLETE"))) {
-          Console.err.println(s"[stream-replay] adopting cached root $cached")
-          // bump the root's mtime: the 24h reap below must test LAST USE,
-          // not build time, or a long-lived adopter could lose its root
-          // to another JVM's cleanup mid-session
-          try Files.setLastModifiedTime(cached,
-            java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-          catch { case _: java.io.IOException => () }
-          built(spark) = (dir, fp, cached.toString, false)
-          return cached.toString
-        }
-        val root =
-          if (useCache) {
-            Files.createDirectories(cacheBase)
-            // reap: any sibling is stale by construction (different code
-            // or data) once old enough that no concurrent JVM still reads
-            // it (adoption refreshes the mtime above); crashed builds
-            // leave .building dirs reaped the same way. Per-entry Try:
-            // a concurrent reaper may delete between list and stat.
-            Lake.listDir(cacheBase).foreach { p =>
-              scala.util.Try {
-                if (Files.getLastModifiedTime(p).toMillis <
-                    System.currentTimeMillis() - 24L * 3600 * 1000)
-                  Lake.deleteRecursive(p)
-              }
-            }
-            Files.createTempDirectory(cacheBase, s"$key.building.").toString
-          } else Files.createTempDirectory("graft_stream").toString
-        // The 7 state families are fully independent — disjoint landing
-        // dirs, checkpoints, and output tables — and each one's cost is
-        // dominated by per-micro-batch FIXED overhead (trigger waits,
-        // tiny sequential jobs), not data volume. Building them
-        // CONCURRENTLY overlaps those idle gaps, so the whole replay
-        // build (which lands on the first stream_* query's cold pass)
-        // costs ~the slowest family instead of the sum. Measured at
-        // sf0.1: 68s sequential → bounded by scd2's ~26s. Determinism is
-        // untouched: batch ORDER only matters WITHIN a family's landing
-        // dir (mtime-stamped there), never across families.
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(9)
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        def timed(name: String)(f: => Unit): Future[Unit] = Future {
-          val t0 = System.nanoTime()
-          f
-          Console.err.println(
-            f"[stream-replay] $name built in ${(System.nanoTime() - t0) / 1e9}%.1fs")
-        }
-        val builds = Seq(
-          timed("kpi")(buildKpi(spark, dir, root)),
-          timed("scd2")(buildScd2(spark, dir, root)),
-          timed("quality")(buildQualityCorpus(spark, dir, root)),
-          timed("er")(buildEr(spark, dir, root)),
-          timed("sessions")(buildSessions(spark, dir, root)),
-          timed("mg")(buildMgState(spark, dir, root)),
-          timed("triangles")(buildTriangles(spark, dir, root)),
-          timed("video")(buildVideoScenes(spark, dir, root)),
-          timed("dhash")(buildImageHashes(spark, dir, root)))
-        // On a family failure, fail the whole memo — but only after EVERY
-        // builder has stopped: a fail-fast Await(Future.sequence) would
-        // leave the other six still streaming under a root that `built`
-        // never records (so neither clearReplayCache nor the exit hook
-        // deletes it), and a retry would then race the strays against a
-        // second root. Await each future to completion, then delete the
-        // half-built root before rethrowing so retries start clean.
-        val outcomes =
-          try builds.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-          finally pool.shutdown()
-        outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
-          Lake.deleteRecursive(Paths.get(root))
-          throw e
-        }
-        if (useCache) {
-          // publish: mark complete INSIDE the staging dir, then one
-          // rename — a crash before the rename leaves only a .building
-          // dir (reaped above); losing the rename race to a concurrent
-          // builder just means adopting theirs
-          Files.write(Paths.get(root, "_COMPLETE"), Array.emptyByteArray)
-          try {
-            Files.move(Paths.get(root), cached)
-            built(spark) = (dir, fp, cached.toString, false)
-            cached.toString
-          } catch {
-            case _: java.nio.file.FileAlreadyExistsException
-                 | _: java.nio.file.DirectoryNotEmptyException =>
-              Lake.deleteRecursive(Paths.get(root))
-              built(spark) = (dir, fp, cached.toString, false)
-              cached.toString
-          }
-        } else {
-          built(spark) = (dir, fp, root, true)
-          root
-        }
+    val root = built.get(spark, (dir, fp))(buildReplay(spark, dir, fp))
+    // every use refreshes the root's mtime so the 24h reap below tests
+    // LAST USE, not build or adoption time: a session querying an
+    // adopted root for >24h must not lose it to a concurrent builder's
+    // cleanup mid-session (r15 advice); on an owned temp root it is moot
+    try Files.setLastModifiedTime(Paths.get(root),
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+    catch { case _: java.io.IOException => () }
+    root
+  }
+
+  private def buildReplay(spark: SparkSession, dir: String, fp: Long): String = {
+    // no code identity (null code source under bundled/boot
+    // classloaders) → no safe cross-JVM key → per-JVM temp root
+    val codeFp = codeFingerprint()
+    val useCache = cacheEnabled && codeFp.isDefined
+    val key = f"r_${fp}%016x_${codeFp.getOrElse(0L)}%016x"
+    val cached = cacheBase.resolve(key)
+    if (useCache && Files.exists(cached.resolve("_COMPLETE"))) {
+      Console.err.println(s"[stream-replay] adopting cached root $cached")
+      return cached.toString
     }
+    val root =
+      if (useCache) {
+        Files.createDirectories(cacheBase)
+        // reap: any sibling is stale by construction (different code
+        // or data) once old enough that no concurrent JVM still reads
+        // it (adoption refreshes the mtime above); crashed builds
+        // leave .building dirs reaped the same way. Per-entry Try:
+        // a concurrent reaper may delete between list and stat.
+        Lake.listDir(cacheBase).foreach { p =>
+          scala.util.Try {
+            if (Files.getLastModifiedTime(p).toMillis <
+                System.currentTimeMillis() - 24L * 3600 * 1000)
+              Lake.deleteRecursive(p)
+          }
+        }
+        Files.createTempDirectory(cacheBase, s"$key.building.").toString
+      } else ScratchDirs.create("graft_stream")
+    // The 7 state families are fully independent — disjoint landing
+    // dirs, checkpoints, and output tables — and each one's cost is
+    // dominated by per-micro-batch FIXED overhead (trigger waits,
+    // tiny sequential jobs), not data volume. Building them
+    // CONCURRENTLY overlaps those idle gaps, so the whole replay
+    // build (which lands on the first stream_* query's cold pass)
+    // costs ~the slowest family instead of the sum. Measured at
+    // sf0.1: 68s sequential → bounded by scd2's ~26s. Determinism is
+    // untouched: batch ORDER only matters WITHIN a family's landing
+    // dir (mtime-stamped there), never across families.
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(9)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    def timed(name: String)(f: => Unit): Future[Unit] = Future {
+      val t0 = System.nanoTime()
+      f
+      Console.err.println(
+        f"[stream-replay] $name built in ${(System.nanoTime() - t0) / 1e9}%.1fs")
+    }
+    val builds = Seq(
+      timed("kpi")(buildKpi(spark, dir, root)),
+      timed("scd2")(buildScd2(spark, dir, root)),
+      timed("quality")(buildQualityCorpus(spark, dir, root)),
+      timed("er")(buildEr(spark, dir, root)),
+      timed("sessions")(buildSessions(spark, dir, root)),
+      timed("mg")(buildMgState(spark, dir, root)),
+      timed("triangles")(buildTriangles(spark, dir, root)),
+      timed("video")(buildVideoScenes(spark, dir, root)),
+      timed("dhash")(buildImageHashes(spark, dir, root)))
+    // On a family failure, fail the whole memo — but only after EVERY
+    // builder has stopped: a fail-fast Await(Future.sequence) would
+    // leave the other families still streaming under a root the memo
+    // never records, and a retry would then race the strays against a
+    // second root. Await each future to completion, then delete the
+    // half-built root before rethrowing so retries start clean.
+    val outcomes =
+      try builds.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
+      finally pool.shutdown()
+    outcomes.collectFirst { case scala.util.Failure(e) => e }.foreach { e =>
+      if (useCache) Lake.deleteRecursive(Paths.get(root)) else ScratchDirs.release(root)
+      throw e
+    }
+    if (useCache) {
+      // publish: mark complete INSIDE the staging dir, then one
+      // rename — a crash before the rename leaves only a .building
+      // dir (reaped above); losing the rename race to a concurrent
+      // builder just means adopting theirs
+      Files.write(Paths.get(root, "_COMPLETE"), Array.emptyByteArray)
+      try Files.move(Paths.get(root), cached)
+      catch {
+        case _: java.nio.file.FileAlreadyExistsException
+             | _: java.nio.file.DirectoryNotEmptyException =>
+          Lake.deleteRecursive(Paths.get(root))
+      }
+      cached.toString
+    } else root
   }
 
   /** Move a one-file JSON write to `dest` and stamp its mtime — the file

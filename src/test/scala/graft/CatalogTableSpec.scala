@@ -17,8 +17,10 @@ class CatalogTableSpec extends SparkSpec {
       .filter(e => e.isDir && e.name.startsWith("graft_catalog_"))
       .map(_.path).toSet
 
+  private def trackedRoot: Option[String] = CatalogTable.built.values(spark).headOption.map(_._2)
+
   test("concurrent first use registers ONE table and tracks ONE reapable root") {
-    CatalogTable.clearCatalogCache(spark)
+    CatalogTable.built.clear(spark)
     val before = catalogRoots()
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
     val counts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]
@@ -33,7 +35,7 @@ class CatalogTableSpec extends SparkSpec {
 
     // exactly one NEW scratch root appeared, and it is the tracked one —
     // an unserialized build would leave the losers' roots untracked here
-    val root = CatalogTable.trackedRoot(spark)
+    val root = trackedRoot
     assert(root.isDefined && Fs.exists(root.get), s"tracked root missing: $root")
     assert(catalogRoots() -- before == Set(root.get),
       s"untracked scratch roots leaked: ${catalogRoots() -- before -- root}")
@@ -52,10 +54,10 @@ class CatalogTableSpec extends SparkSpec {
 
     // memo hit: a repeat use builds nothing new
     assert(CatalogTable.queries("web_engagement_catalog")(spark, dir).count() > 0)
-    assert(CatalogTable.trackedRoot(spark) == root && catalogRoots() -- before == Set(root.get))
+    assert(trackedRoot == root && catalogRoots() -- before == Set(root.get))
 
     // clear drops the registration AND the root — nothing dangles
-    CatalogTable.clearCatalogCache(spark)
+    CatalogTable.built.clear(spark)
     assert(!spark.catalog.tableExists(name))
     assert(catalogRoots() == before, "clear left a scratch root behind")
   }

@@ -349,15 +349,15 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
   test("query-side gate memoizes the count per (plan, session); the bound compares per call") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val books = Similarity.trainPqCodebooks(emb, 2, 4, 64, 2)
-    Similarity.clearQuerySideGateCache(spark)
-    assert(Similarity.querySideGateMemoSize(spark) == 0)
+    Similarity.querySideCounts.clear(spark)
+    assert(Similarity.querySideCounts.values(spark).size == 0)
     // first probe pays the count job and warms the memo
     assert(Similarity.pqLuts(emb.filter($"vec_id" < 4), books).count() == 4)
-    assert(Similarity.querySideGateMemoSize(spark) == 1)
+    assert(Similarity.querySideCounts.values(spark).size == 1)
     // a FRESH DataFrame over the same logical plan hits the same memo key —
-    // still one entry means getOrElseUpdate returned without a count job
+    // still one entry means the memo returned without a count job
     assert(Similarity.pqLuts(emb.filter($"vec_id" < 4), books).count() == 4)
-    assert(Similarity.querySideGateMemoSize(spark) == 1)
+    assert(Similarity.querySideCounts.values(spark).size == 1)
     // the memo stores the COUNT, not the verdict: a tighter bound against
     // the same (memoized) plan still refuses
     val e = intercept[IllegalArgumentException] {
@@ -366,9 +366,9 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
     assert(e.getMessage.contains("DRIVER-HELD"), e.getMessage)
     // a different query plan is a different key
     assert(Similarity.pqLuts(emb.filter($"vec_id" < 5), books).count() == 5)
-    assert(Similarity.querySideGateMemoSize(spark) == 2)
-    Similarity.clearQuerySideGateCache(spark)
-    assert(Similarity.querySideGateMemoSize(spark) == 0)
+    assert(Similarity.querySideCounts.values(spark).size == 2)
+    Similarity.querySideCounts.clear(spark)
+    assert(Similarity.querySideCounts.values(spark).size == 0)
   }
 
   test("overflow oracle rig engages the cap: the planted family oversizes buckets, classes collapse") {
@@ -403,23 +403,23 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
     val books = Similarity.trainPqCodebooks(
       Tables.embeddings(spark, "/root/testdata/sf0.001"), 2, 4, 64, 2)
     val other = spark.newSession()
-    Similarity.clearQuerySideGateCache(spark)
-    Similarity.clearQuerySideGateCache(other)
+    Similarity.querySideCounts.clear(spark)
+    Similarity.querySideCounts.clear(other)
     // warm ONE entry in the quiet session
     def q(s: org.apache.spark.sql.SparkSession, n: Int) =
       s.range(n).select(col("id").as("vec_id"),
         org.apache.spark.sql.functions.array(lit(1.0f), lit(0.0f)).as("embedding"))
     Similarity.pqLuts(q(other, 3), books)
-    assert(Similarity.querySideGateMemoSize(other) == 1)
+    assert(Similarity.querySideCounts.values(other).size == 1)
     // 70 distinct plans in the noisy session cross its own 64-entry
     // bound and trigger ITS eviction...
     (1 to 70).foreach(i => Similarity.pqLuts(q(spark, i), books))
-    assert(Similarity.querySideGateMemoSize(spark) <= 65)
+    assert(Similarity.querySideCounts.values(spark).size <= 65)
     // ...while the quiet session's warm entry survives (the r17 global
     // clear() wiped every session here)
-    assert(Similarity.querySideGateMemoSize(other) == 1)
-    Similarity.clearQuerySideGateCache(spark)
-    Similarity.clearQuerySideGateCache(other)
+    assert(Similarity.querySideCounts.values(other).size == 1)
+    Similarity.querySideCounts.clear(spark)
+    Similarity.querySideCounts.clear(other)
   }
 
   test("gate memo re-counts after a same-plan source rewrite (fingerprint key)") {
@@ -431,7 +431,7 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
           org.apache.spark.sql.functions.array(lit(1.0f), lit(0.0f)).as("embedding"))
         .coalesce(1).write.mode("overwrite").parquet(dir)
     def queries() = spark.read.parquet(dir)
-    Similarity.clearQuerySideGateCache(spark)
+    Similarity.querySideCounts.clear(spark)
     write(4)
     assert(Similarity.pqLuts(queries(), books, maxQueryRows = 10).count() == 4)
     // REWRITE the source in place: the canonicalized plan of a fresh
@@ -442,7 +442,7 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
       Similarity.pqLuts(queries(), books, maxQueryRows = 10)
     }
     assert(e.getMessage.contains("100 rows"), e.getMessage)
-    Similarity.clearQuerySideGateCache(spark)
+    Similarity.querySideCounts.clear(spark)
   }
 
   test("knnIvfPqResidual's raised maxQueryRows reaches the LUT build (no inner default gate)") {
@@ -456,7 +456,7 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
       array((col("id") % 3).cast("float"), lit(2.0f)).as("embedding"))
     val coarse = Array(Array(1000L, 1000L), Array(-1000L, -1000L))
     val books = Array.fill(2)(Array(Array(0L), Array(500L)))
-    Similarity.clearQuerySideGateCache(spark)
+    Similarity.querySideCounts.clear(spark)
     // at the default bound this query set is refused up front...
     val e = intercept[IllegalArgumentException] {
       Similarity.knnIvfPqResidual(corpus, queries, coarse, books, 1, 1)
@@ -467,7 +467,7 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
     val got = Similarity.knnIvfPqResidual(corpus, queries, coarse, books, 1, 1,
       maxQueryRows = nq)
     assert(got.count() > 0)
-    Similarity.clearQuerySideGateCache(spark)
+    Similarity.querySideCounts.clear(spark)
   }
 
   test("hot vector family: candidates stay under the cap's linear bound, family loss is measurable") {
@@ -999,7 +999,7 @@ class SimilaritySpec extends SparkSpec with PropertyCheck {
 
   test("hubness registered plan never moves the embedding column (no corpus broadcast)") {
     val dir = "/root/testdata/sf0.001"
-    Similarity.clearPairCache(spark)
+    Similarity.pairCache.clear(spark)
     val qe = Similarity.hubnessQuery(spark, dir).queryExecution
     val plan = qe.executedPlan.toString
     // the embedding column is consumed entirely inside the memoized

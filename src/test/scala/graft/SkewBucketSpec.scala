@@ -8,6 +8,8 @@ import graft.store.Skew
 class SkewBucketSpec extends SparkSpec with PropertyCheck {
   import spark.implicits._
 
+  private def activeRoot: Option[String] = store.Bucketed.built.values(spark).headOption.map(_._3)
+
   test("salted join equals plain join on skewed data") {
     // hot key: 90% of big side is key 1
     val big = ((1 to 900).map(i => (1, s"v$i")) ++ (1 to 100).map(i => (i % 7 + 2, s"w$i")))
@@ -93,13 +95,13 @@ class SkewBucketSpec extends SparkSpec with PropertyCheck {
         s"bucket layout not reused (hash exchange present):\n$plan")
       // repeated invocation must reuse the built tables, not rewrite:
       // same root, file set untouched (disk stays flat across calls)
-      val root = store.Bucketed.activeRoot(spark).get
+      val root = activeRoot.get
       def listing = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
         .toArray.map(_.toString).sorted.toSeq
       val before = listing
       val again = store.Bucketed.spendBucketedQuery(spark, "/root/testdata/sf0.001")
       assert(again.count() == rows.length)
-      assert(store.Bucketed.activeRoot(spark).contains(root), "root changed on re-invocation")
+      assert(activeRoot.contains(root), "root changed on re-invocation")
       assert(listing == before, "re-invocation rewrote the bucketed tables")
     } finally spark.conf.set(thresholdKey, prev)
   }
@@ -114,7 +116,7 @@ class SkewBucketSpec extends SparkSpec with PropertyCheck {
     seed(1.0)
     val first = store.Bucketed.spendBucketedQuery(spark, dir)
       .agg(sum("total_spend")).as[Double].head()
-    val root1 = store.Bucketed.activeRoot(spark).get
+    val root1 = activeRoot.get
     // rewrite orders IN PLACE (same dir, new files): the fingerprint must
     // catch it and rebuild — stale bucketed results were a correctness bug
     seed(2.0)
@@ -122,17 +124,27 @@ class SkewBucketSpec extends SparkSpec with PropertyCheck {
       .agg(sum("total_spend")).as[Double].head()
     assert(math.abs(second - 2.0 * first) < 1e-6 * math.abs(first),
       s"stale bucketed result served: first=$first second=$second")
-    assert(!store.Bucketed.activeRoot(spark).contains(root1), "memo not rebuilt")
+    assert(!activeRoot.contains(root1), "memo not rebuilt")
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root1)),
       "evicted bucket root not deleted")
     // clearCaches is the explicit escape hatch: tables unregistered, root gone
-    val root2 = store.Bucketed.activeRoot(spark).get
+    val root2 = activeRoot.get
     Engine.clearCaches(spark)
-    assert(store.Bucketed.activeRoot(spark).isEmpty)
+    assert(activeRoot.isEmpty)
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(root2)), "bucket root not deleted")
     assert(spark.catalog.listTables().collect()
       .forall(t => !t.name.startsWith("graft_b_")), "catalog registrations not dropped")
     store.Lake.deleteRecursive(java.nio.file.Paths.get(dir))
+  }
+
+  test("bucketed table names carry the session's UUID tag, not an identity hash") {
+    // an identity-hash suffix can be reused after GC (or collide), so one
+    // session's DROP TABLE IF EXISTS could take another's live table
+    val (orders, customer) = store.Bucketed.tableNames(spark)
+    assert(orders.matches("graft_b_orders_[0-9a-f]{32}"), orders)
+    assert(customer == "graft_b_customer_" + orders.stripPrefix("graft_b_orders_"))
+    assert(store.Bucketed.tableNames(spark) == ((orders, customer)), "tag not stable per session")
+    assert(store.Bucketed.tableNames(spark.newSession())._1 != orders)
   }
 
   test("bucketed tables join without a shuffle exchange") {
