@@ -54,7 +54,7 @@ object PlanDump {
         org.apache.spark.sql.execution.FormattedMode)
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${q}_$tag.txt"), txt)
-      toFree.foreach(graft.store.Checkpoints.free)
+      graft.store.Checkpoints.free(toFree: _*)
       println(s"[plandump] wrote $outDir/${q}_$tag.txt (${txt.length} chars)")
     }
     spark.stop()

@@ -558,8 +558,7 @@ object Dedup {
     // checkpointed), so an evicted edge partition recomputes through p0 —
     // freeing p0 mid-loop would strand that lineage (localCheckpoint
     // blocks cannot recompute)
-    graft.store.Checkpoints.free(edges)
-    graft.store.Checkpoints.free(p0)
+    graft.store.Checkpoints.free(edges, p0)
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 

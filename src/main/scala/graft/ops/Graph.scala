@@ -167,9 +167,7 @@ object Graph {
     // CacheManager entries, and these frames hold LOCALCHECKPOINT blocks
     // (LogicalRDD leaves) that bare unpersist never touched
     val out = ranks.localCheckpoint()
-    graft.store.Checkpoints.free(directed)
-    graft.store.Checkpoints.free(deg)
-    graft.store.Checkpoints.free(e)
+    graft.store.Checkpoints.free(directed, deg, e)
     out
   }
 

@@ -17,12 +17,17 @@ import org.apache.spark.sql.execution.LogicalRDD
   * themselves (plus the CacheManager call, for frames that were ALSO
   * persisted). Safe on arbitrary frames: non-persisted RDDs treat
   * unpersist as a no-op.
+  *
+  * Each checkpointed RDD is unpersisted once per call, however many
+  * leaves reach it: a frame that unions a checkpoint with itself, or
+  * frames freed together that share one, would otherwise remove the
+  * same blocks again (a WARN and "block does not exist" lines each).
   */
 private[graft] object Checkpoints {
-  def free(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
+  def free(dfs: DataFrame*): Unit = {
+    dfs.foreach(_.unpersist(blocking = false))
+    dfs.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd })
+      .distinctBy(_.id)
+      .foreach(_.unpersist(blocking = false))
   }
 }

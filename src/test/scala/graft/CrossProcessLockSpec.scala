@@ -95,63 +95,13 @@ object CrossProcessCrashWriter {
   */
 class CrossProcessLockSpec extends AnyFunSuite {
 
-  private def codeLocation(c: Class[_]): String =
-    Paths.get(c.getProtectionDomain.getCodeSource.getLocation.toURI).toString
-
-  // child classpath: graft main + test classes, scala-library, and the
-  // directory holding the spark/hadoop jars (wildcard), each resolved
-  // from THIS JVM's loaded classes, not hardcoded paths
-  private def childCp: String = Seq(
-    codeLocation(Versioned.getClass),
-    codeLocation(CrossProcessLockHolder.getClass),
-    codeLocation(classOf[scala.Option[_]]),
-    Paths.get(codeLocation(classOf[org.apache.hadoop.conf.Configuration]))
-      .getParent.toString + "/*"
-  ).mkString(java.io.File.pathSeparator)
-
-  // Spark-in-child needs the same JDK17 module opens build.sbt forks with
-  private def jdk17AddOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
-  private def launchChild(main: String, root: String, value: String,
-                          log: java.io.File): Process = {
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val cmd = (Seq(javaBin) ++ jdk17AddOpens ++
-      Seq("-Xmx2g", "-cp", childCp, main, root, value))
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(ProcessBuilder.Redirect.to(log))
-    pb.start()
-  }
-
   private def launchCommitter(root: String, value: String, log: java.io.File): Process =
-    launchChild("graft.CrossProcessCommitter", root, value, log)
+    ChildJvm.launch("graft.CrossProcessCommitter", Seq(root, value), log)
 
   test("writer lock cross-process: live refusal, then kill -9 pid-liveness stale break") {
     val root = Files.createTempDirectory("xlock").toString
-    // child classpath: graft main + test classes, scala-library, and the
-    // directory holding the hadoop client jars (wildcard), each resolved
-    // from THIS JVM's loaded classes, not hardcoded paths
-    val cp = Seq(
-      codeLocation(Versioned.getClass),
-      codeLocation(CrossProcessLockHolder.getClass),
-      codeLocation(classOf[scala.Option[_]]),
-      Paths.get(codeLocation(classOf[org.apache.hadoop.conf.Configuration]))
-        .getParent.toString + "/*"
-    ).mkString(java.io.File.pathSeparator)
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
     val log = new java.io.File(root, "_child.log")
-    val pb = new ProcessBuilder(javaBin, "-cp", cp, "graft.CrossProcessLockHolder", root)
-    pb.redirectErrorStream(true)
-    pb.redirectOutput(ProcessBuilder.Redirect.to(log))
-    val child = pb.start()
+    val child = ChildJvm.launch("graft.CrossProcessLockHolder", Seq(root), log)
     def childLog(): String =
       try new String(Files.readAllBytes(log.toPath)) catch { case _: Exception => "<no log>" }
     try {
@@ -255,7 +205,7 @@ class CrossProcessLockSpec extends AnyFunSuite {
       try new String(Files.readAllBytes(f.toPath)) catch { case _: Exception => "<no log>" }
     assert(Versioned.overwrite(Seq("A").toDF("v"), root) == 1L)
     val log = new java.io.File(root, "_crash.log")
-    val p = launchChild("graft.CrossProcessCrashWriter", root, "B", log)
+    val p = ChildJvm.launch("graft.CrossProcessCrashWriter", Seq(root, "B"), log)
     try {
       val mid = Paths.get(root, "_MIDFLIP")
       val deadline = System.currentTimeMillis() + 180000L
