@@ -104,7 +104,7 @@ object Bpe {
       try {
         if (wc.count() > MaxLocalVocab) trainDistributedRounds(wc, nMerges)
         else trainLocal(wc.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
-      } finally wc.unpersist(blocking = false)
+      } finally graft.store.Checkpoints.free(wc)
     }
   }
 
@@ -223,11 +223,11 @@ object Bpe {
         state = state
           .select(col("freq"), BpeExprs.mergePair(col("syms"), a, b).as("syms"))
           .localCheckpoint() // vocab-sized: cut the per-round lineage
-        prev.unpersist(blocking = false)
+        graft.store.Checkpoints.free(prev)
         t += 1
       }
     }
-    state.unpersist(blocking = false)
+    graft.store.Checkpoints.free(state)
     merges.toSeq
   }
 

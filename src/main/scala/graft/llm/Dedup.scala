@@ -685,9 +685,9 @@ object Dedup {
     * it (same base construction, incl. the v-partitioned cached edge
     * frame), returned lazy so the per-round exchange shape is inspectable
     * — the registered cluster queries checkpoint every round, which hides
-    * the loop's plan from the query tail (same seam as PlanDiag's
-    * lazyPlans). Second element = the base frames to free after
-    * inspection.
+    * the loop's plan from the query tail (`graft.Profile`'s lazy form
+    * for graph_components). Second element = the base frames to release
+    * with `Checkpoints.free` after inspection.
     */
   private[graft] def ccRoundPlan(pairs: DataFrame): (DataFrame, Seq[DataFrame]) = {
     val (edges, labels, p0) = ccBase(pairs, df => df.localCheckpoint())
@@ -1073,9 +1073,10 @@ object Dedup {
     * queries serve from the localCheckpointed [[verifiedPairs]] memo, so
     * their executed plans are severed at the RDD scan and the flip-prone
     * joins (the banding self-join plus the signature/shingle re-attach
-    * joins, all shuffle_hash-pinned) would be invisible to PlanDiag's
-    * scale-flip sweep without this form. Semantically identical to the
-    * cached frame; do not execute it twice where the memo would do.
+    * joins, all shuffle_hash-pinned) would be invisible to
+    * `graft.Profile`'s scale points without this form. Semantically
+    * identical to the cached frame; do not execute it twice where the
+    * memo would do.
     */
   private[graft] def verifiedPairsPlan(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)

@@ -209,7 +209,7 @@ object FrequentItems {
       .filter(col("n") * lit(pctDenom.toLong) >= lit(total))
       .orderBy(col("n").desc, col("token"))
       .localCheckpoint()
-    toks.unpersist(blocking = false)
+    graft.store.Checkpoints.free(toks)
     out
   }
 

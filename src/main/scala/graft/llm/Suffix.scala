@@ -233,7 +233,7 @@ object Suffix {
 
   // ---- registered queries -------------------------------------------------
 
-  private def sampled(spark: SparkSession, dir: String): DataFrame =
+  private[graft] def sampled(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).filter(pmod(col("doc_id"), lit(SampleMod)) === 0)
 
   /** Both registered queries read ONE rank build per (session, corpus
@@ -468,16 +468,17 @@ object CorpusSuffix {
     // materialize the cross-doc pair frame, then release the sequence
     // scratch: the returned frame must not pin the big checkpoint
     val out = plan.localCheckpoint()
-    seq.unpersist(blocking = false)
+    graft.store.Checkpoints.free(seq)
     out
   }
 
   /** [[crossDocAdjacent]]'s LAZY plan plus the checkpointed sequence
     * frame it reads — the `winnowOverlapPlan` split, same contract
-    * (caller unpersists the first element after consuming the second):
-    * the eager checkpoint above severs the adjacent-pair join and the
-    * two doc-text fetch joins from plan inspection, and those are
-    * exactly the joins PlanDiag's scale-flip sweep must see.
+    * (caller releases the first element with `Checkpoints.free` after
+    * consuming the second): the eager checkpoint above severs the
+    * adjacent-pair join and the two doc-text fetch joins from plan
+    * inspection, and those are exactly the joins `graft.Profile`'s
+    * scale points must see.
     */
   private[graft] def crossDocAdjacentPlan(ranks: DataFrame, docs: DataFrame,
       textCol: String, idCol: String): (DataFrame, DataFrame) = {
@@ -566,8 +567,7 @@ object CorpusSuffix {
     sortedRows.unpersist(blocking = false)
     // sortedRows (already materialized) carried everything lpF fed it;
     // release the LCP scratch and the sequence frame now
-    lpF.unpersist(blocking = false)
-    seq.unpersist(blocking = false)
+    graft.store.Checkpoints.free(lpF, seq)
     val byRun = Window.partitionBy("run_id").orderBy(col("s"))
     val best = withRun
       .withColumn("dprev", min(col("lp")).over(
@@ -578,13 +578,14 @@ object CorpusSuffix {
     // per-doc result, then release the run-scan checkpoint
     val out = best.groupBy(col("doc_id")).agg(max(col("b")).as("max_shared_len"))
       .localCheckpoint()
-    withRun.unpersist(blocking = false)
+    graft.store.Checkpoints.free(withRun)
     out
   }
 
   /** [[crossDocMax]]'s LCP stage LAZILY plus the checkpointed sequence
     * frame it reads (the `crossDocAdjacentPlan` contract: caller
-    * unpersists the first element after consuming the second). The
+    * releases the first element with `Checkpoints.free` after consuming
+    * the second). The
     * flip-prone joins of the max pipeline all live here — the s-shifted
     * predecessor self-join and the two doc-text fetch joins; everything
     * downstream of the lpF checkpoint is windows over run partitions.
@@ -625,7 +626,7 @@ object CorpusSuffix {
       corpusSuffixRanks(sampled(spark, dir), "text", "doc_id")
     }
 
-  /** Registered-parameter plan forms for PlanDiag's scale-flip sweep
+  /** Registered-parameter plan forms for `graft.Profile`'s lazy plans
     * (the ranks build itself executes — memoized and inherently
     * roundwise — but the downstream join shapes come back LAZY).
     */

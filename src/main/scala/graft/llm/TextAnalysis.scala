@@ -553,18 +553,19 @@ object TextAnalysis {
     // materialize the (tiny, above-threshold) report eagerly so the
     // winnow checkpoint can be released NOW — repeated invocations
     // (bench sweeps, timing loops) must not pin one block set per call
-    // until GC happens to run (the streaming path's unpersist
+    // until GC happens to run (the streaming path's release
     // discipline, applied to the batch report)
     val out = plan.localCheckpoint()
-    sel.unpersist(blocking = false)
+    graft.store.Checkpoints.free(sel)
     out
   }
 
   /** The overlap report's LAZY plan plus the checkpointed postings frame
     * it reads — split out (the `winnowProbePlan` pattern) so plan
-    * inspection (PlanDiag's scale-flip sweep, PlanInvariantsSpec) can see
-    * the join shape the eager checkpoint in [[winnowOverlap]] severs.
-    * Callers must unpersist the first element after consuming the second.
+    * inspection (`graft.Profile`'s lazy plan forms, PlanInvariantsSpec)
+    * can see the join shape the eager checkpoint in [[winnowOverlap]]
+    * severs. Callers must release the first element with
+    * `Checkpoints.free` after consuming the second.
     */
   private[graft] def winnowOverlapPlan(docs: DataFrame, textCol: String,
                                        idCol: String): (DataFrame, DataFrame) = {
@@ -645,15 +646,15 @@ object TextAnalysis {
     // released per call instead of pinning blocks until GC (same
     // discipline as winnowOverlap / winnowIngestStream)
     val out = plan.localCheckpoint()
-    q.unpersist(blocking = false)
+    graft.store.Checkpoints.free(q)
     out
   }
 
   /** The probe's LAZY plan plus the checkpointed query frame it reads —
     * split out so tests can assert the band partition pruning on the
     * REGISTERED path's plan (the eager checkpoint in `winnowProbe`
-    * severs the scan from the returned frame). Callers must unpersist
-    * the first element after consuming the second.
+    * severs the scan from the returned frame). Callers must release the
+    * first element with `Checkpoints.free` after consuming the second.
     */
   private[graft] def winnowProbePlan(
       spark: SparkSession, postingsDir: String, queries: DataFrame,

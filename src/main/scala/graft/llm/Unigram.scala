@@ -189,8 +189,8 @@ object Unigram {
           .take(VocabMulti)
           .map { case (p, u) => Piece(p, u) }
         (chars ++ multi).sortWith((a, b) => utf8Lt(a.piece, b.piece))
-      } finally seeds.unpersist(blocking = false)
-    } finally wc.unpersist(blocking = false)
+      } finally graft.store.Checkpoints.free(seeds)
+    } finally graft.store.Checkpoints.free(wc)
   }
 
   /** Subword segmentation of a word column under the trained vocabulary

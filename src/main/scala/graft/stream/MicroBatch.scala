@@ -252,7 +252,7 @@ object MicroBatch {
                 .parquet(pendingDir).select(col("id")).distinct(),
               Seq("id"), "left_anti")
           if (!pending.isEmpty) pending.write.mode("append").parquet(pendingDir)
-          matched.unpersist(blocking = false)
+          graft.store.Checkpoints.free(matched)
         }
         ()
       }
@@ -517,9 +517,7 @@ object MicroBatch {
                     FileLedger.landedBasenames(landingDir))
                   else FileLedger.State(ledger.hwm, ledger.files ++ freshFiles))
             Versioned.overwrite(stateRows.toDF("kind", "key", "n"), stateDir)
-            batchEdges.unpersist(blocking = false)
-            oldEdges.unpersist(blocking = false)
-            newEdges.unpersist(blocking = false)
+            graft.store.Checkpoints.free(batchEdges, oldEdges, newEdges)
           }
         }
         ()
@@ -1474,7 +1472,7 @@ object MicroBatch {
               .unionByName(open.join(loc.select(col("user_id")).distinct(),
                 Seq("user_id"), "left_anti"))
             Versioned.overwrite(newOpen, openDir)
-            j.unpersist(blocking = false)
+            graft.store.Checkpoints.free(j)
           }
         }
         ()
@@ -1620,7 +1618,7 @@ object MicroBatch {
           val fresh = assigned.join(existing, Seq("vec_id"), "left_anti")
           if (!fresh.isEmpty)
             fresh.write.mode("append").partitionBy("centroid_id").parquet(lists)
-          assigned.unpersist(blocking = false)
+          graft.store.Checkpoints.free(assigned)
         }
         ()
       }
@@ -1695,7 +1693,7 @@ object MicroBatch {
               Seq("doc_id"), "left_anti")
           if (!fresh.isEmpty)
             fresh.write.mode("append").partitionBy("band").parquet(postingsDir)
-          postings.unpersist(blocking = false)
+          graft.store.Checkpoints.free(postings)
         }
         ()
       }

@@ -294,7 +294,7 @@ object StreamReplay {
         li.filter((col("sale_ym") / 100).cast("int") === y),
         landing.resolve(f"kpi_$y%04d.json"), base + i * 2000L)
     }
-    li.unpersist(blocking = false)
+    graft.store.Checkpoints.free(li)
     MicroBatch.runToCompletion(MicroBatch.kpiIngestStream(
       spark, landing.toString, kpiSchema,
       keys = Seq("product_id"), valueCol = "total_qty", partitionCol = "sale_ym",
@@ -327,7 +327,7 @@ object StreamReplay {
         ev.filter(expr("effective_day div 4").cast("int") === y),
         landing.resolve(f"scd2_$y%04d.json"), base + i * 2000L)
     }
-    ev.unpersist(blocking = false)
+    graft.store.Checkpoints.free(ev)
     MicroBatch.runToCompletion(MicroBatch.scd2IngestStream(
       spark, landing.toString, scd2Schema,
       keyCol = "cust_id", compareCols = Seq("status", "priority"),
@@ -383,7 +383,7 @@ object StreamReplay {
         arrivals.filter(pmod(expr("id div 40"), lit(4L)) === s),
         landing.resolve(f"arrivals_$s%02d.json"), base + s * 2000L)
     }
-    arrivals.unpersist(blocking = false)
+    graft.store.Checkpoints.free(arrivals)
     MicroBatch.runToCompletion(MicroBatch.erIngestStream(
       spark, landing.toString, erSchema,
       masterDir = s"$root/er_master",
@@ -464,7 +464,7 @@ object StreamReplay {
         docs.filter(pmod(col("doc_id"), lit(4L)) === s),
         landing.resolve(f"mg_$s%02d.json"), base + s * 2000L)
     }
-    docs.unpersist(blocking = false)
+    graft.store.Checkpoints.free(docs)
     MicroBatch.runToCompletion(MicroBatch.mgIngestStream(
       spark, landing.toString,
       StructType(Seq(
@@ -494,7 +494,7 @@ object StreamReplay {
       .filter(col("n") * lit(100L) >= lit(total))
       .orderBy(col("n").desc, col("token"))
       .localCheckpoint() // bounded result; the token scratch is released
-    toks.unpersist(blocking = false)
+    graft.store.Checkpoints.free(toks)
     out
   }
 
@@ -519,7 +519,7 @@ object StreamReplay {
         li.filter(pmod(col("o"), lit(4L)) === s),
         landing.resolve(f"tri_$s%02d.json"), base + s * 2000L)
     }
-    li.unpersist(blocking = false)
+    graft.store.Checkpoints.free(li)
     MicroBatch.runToCompletion(MicroBatch.triangleIngestStream(
       spark, landing.toString,
       StructType(Seq(StructField("o", LongType), StructField("p", LongType))),

@@ -5,10 +5,12 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{CleanerBridge, ListenerBridge}
 
-import graft.llm.Dedup
+import graft.llm.{CorpusSuffix, Dedup, TextAnalysis}
 import graft.store.Checkpoints
 
 class CheckpointsSpec extends SparkSpec {
@@ -67,5 +69,24 @@ class CheckpointsSpec extends SparkSpec {
     assert(byEngine.nonEmpty, "connectedComponents freed no checkpoint")
     assert(byEngine.values.forall(_ == 1),
       s"RDDs unpersisted more than once: ${byEngine.filter(_._2 > 1)}")
+  }
+
+  test("winnowOverlap and crossDocMax leave only their result's own checkpoint persisted") {
+    // their scratch checkpoints are released with free once the result
+    // is materialized; Dataset.unpersist would leave them pinned until GC
+    val sc = spark.sparkContext
+    val dir = "/root/testdata/sf0.001"
+    def createdBy(call: => DataFrame): (Set[Int], Set[Int]) = {
+      val pre = sc.getPersistentRDDs.keySet
+      val out = call
+      val own = out.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+      (sc.getPersistentRDDs.keySet.toSet -- pre, own)
+    }
+    val (winnow, winnowOwn) =
+      createdBy(TextAnalysis.winnowOverlap(Tables.documents(spark, dir), "text", "doc_id"))
+    assert(winnowOwn.size == 1 && winnow == winnowOwn, s"winnowOverlap left $winnow")
+    CorpusSuffix.crossDocMaxQuery(spark, dir).count() // the ranks memo is built here
+    val (crossDoc, crossDocOwn) = createdBy(CorpusSuffix.crossDocMaxQuery(spark, dir))
+    assert(crossDocOwn.size == 1 && crossDoc == crossDocOwn, s"crossDocMax left $crossDoc")
   }
 }

@@ -238,7 +238,7 @@ class PlanInvariantsSpec extends SparkSpec {
       // the flip class under broadcast-off.
       val (seq, lpPlan) = graft.llm.CorpusSuffix.crossDocMaxPlanQuery(spark, dir)
       try check("crossDocLpPlan", 0)(lpPlan)
-      finally seq.unpersist(blocking = false)
+      finally graft.store.Checkpoints.free(seq)
       // round-20 CC pin: the per-round labels side is a shuffle_hash
       // build against the cached edge stream — an SMJ here would re-sort
       // the static edge frame every round. The ONE allowed SMJ is the
@@ -249,7 +249,7 @@ class PlanInvariantsSpec extends SparkSpec {
       val (ccRound, ccFrames) = graft.llm.Dedup.ccRoundPlan(
         Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b"))
       try check("ccRoundPlan", 1)(ccRound)
-      finally ccFrames.foreach(_.unpersist(blocking = false))
+      finally graft.store.Checkpoints.free(ccFrames: _*)
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
@@ -287,7 +287,7 @@ class PlanInvariantsSpec extends SparkSpec {
       val sorted = plan.collect { case s: SortExec if hasCacheScan(s.child) => s }
       assert(sorted.isEmpty,
         s"the cached edge frame is re-sorted in the round plan:\n$plan")
-    } finally frames.foreach(_.unpersist(blocking = false))
+    } finally graft.store.Checkpoints.free(frames: _*)
   }
 
 }

@@ -1,0 +1,70 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.ListenerBridge
+
+class ProfileSpec extends SparkSpec {
+  private val dir = "/root/testdata/sf0.001"
+  private val recordKeys = Set("sec", "jobs", "stages", "tasks", "shuffle_write",
+    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "joins_sorts",
+    "job_detail", "stage_detail")
+
+  private def parse(json: String): JsonNode = new ObjectMapper().readTree(json)
+
+  test("a registered query's record: listener totals, per-job and per-stage detail, join/sort lines, plan file") {
+    val out = Files.createTempDirectory("graft-profile")
+    val planFile = out.resolve("sales_by_nation.txt")
+    val r = parse(Profile.record(spark, "sales_by_nation", dir, Some(planFile)))
+    assert(r.fieldNames.asScala.toSet == recordKeys)
+    assert(r.get("jobs").asInt >= 1)
+    assert(r.get("job_detail").size == r.get("jobs").asInt)
+    assert(r.get("stage_detail").size == r.get("stages").asInt)
+    val joins = r.get("joins_sorts").elements.asScala.map(_.asText).toSeq
+    assert(joins.exists(_.contains("Join")), s"no join line in $joins")
+    assert(Files.readString(planFile).contains("== Physical Plan =="))
+  }
+
+  test("a lazy-form query's record shows the joins its eager checkpoint hides") {
+    val r = parse(Profile.record(spark, "llm_winnow_overlap", dir))
+    assert(r.fieldNames.asScala.toSet == recordKeys)
+    assert(r.get("jobs").asInt >= 1)
+    val joins = r.get("joins_sorts").elements.asScala.map(_.asText).toSeq
+    assert(joins.exists(_.contains("ShuffledHashJoin")), s"lazy plan not shown: $joins")
+  }
+
+  test("every lazy form releases the blocks it pins once its plan is read") {
+    val sc = spark.sparkContext
+    Profile.lazyForms.keys.toSeq.sorted.foreach { q =>
+      Profile.lazyPlan(spark, q, dir) // builds the session memos the form reads
+      val pre = sc.getPersistentRDDs.keySet
+      Profile.lazyPlan(spark, q, dir)
+      val left = sc.getPersistentRDDs.keySet.toSet -- pre
+      assert(left.isEmpty, s"$q left persistent RDDs $left")
+    }
+  }
+
+  test("an unknown query name is rejected before any job runs") {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[IllegalArgumentException](
+        Profile.selected(Seq("sales_by_nation", "no_such_query")))
+      assert(e.getMessage.contains("no_such_query"))
+      intercept[NoSuchElementException](Profile.record(spark, "no_such_query", dir))
+      ListenerBridge.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get == 0)
+    assert(Profile.selected(Nil) == SparkEntry.queries.keys.toSeq.sorted)
+  }
+}

@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * own SparkSession silently gets Spark's 100-entry codegen cache (the
   * cache is JVM-wide and sized by the first session), so every warm pass
   * over a larger working set recompiles. `Verify` and `BenchSweep` are the
-  * driver harness's own builders and stay as they are.
+  * benchmark harness's own builders and stay as they are. The set of mains
+  * is closed too: the four diagnostic mains that once built sessions of
+  * their own were folded into `graft.Profile`.
   */
 class SessionBuilderGuardSpec extends AnyFunSuite {
   private val builderCall = raw"SparkSession\s*\.\s*builder\b".r
@@ -28,6 +30,18 @@ class SessionBuilderGuardSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"build sessions through graft.Engine.session:\n${offenders.mkString("\n")}")
+  }
+
+  test("src/main/scala defines no main outside the harness mains and graft.Profile") {
+    // a new diagnostic becomes a Profile record field, not another main
+    val mains = Set("Bench.scala", "BenchSweep.scala", "Verify.scala", "ScaleBench.scala",
+      "ContainmentDiag.scala", "HotBucketBench.scala", "Profile.scala")
+    val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && !mains(p.getFileName.toString))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("def main("))
+      .toSeq
+    assert(offenders.isEmpty,
+      s"add a field to graft.Profile's record instead of a new main:\n${offenders.mkString("\n")}")
   }
 
   test("the guard's pattern catches the shapes it is meant to") {

@@ -399,7 +399,7 @@ class TextAnalysisSpec extends SparkSpec with PropertyCheck {
       }
       // and the registered query itself returns candidates incl. self-hits
       assert(TextAnalysis.winnowProbeQuery(spark, dir).count() > 0)
-    } finally q.unpersist(blocking = false)
+    } finally graft.store.Checkpoints.free(q)
   }
 
   test("approx length quantiles: exact columns match a driver sort, flags hold on edge groups") {
