@@ -32,7 +32,10 @@ object Engine {
     * it is sized once, from the conf of the first session that generates
     * code. A session the engine did not build (the driver harness's, or
     * `getOrCreate` returning an existing one) keeps Spark's 100 entries;
-    * only [[tune]]'s runtime confs reach it.
+    * only [[tune]]'s runtime confs reach it. Such a session also keeps
+    * Hadoop's stock local filesystem, which forks a shell process per
+    * `chmod`, `readlink` and permission read; only the [[graft.store.Fs]]
+    * seam binds the fork-free one there.
     */
   def session(
       appName: String = "graft",
@@ -56,6 +59,9 @@ object Engine {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // the local filesystem without a forked shell command per chmod,
+      // readlink or permission read (graft.store.LocalFs)
+      .config(graft.store.LocalFs.sparkConfs)
       .getOrCreate()
     tune(spark)
     spark

@@ -27,9 +27,10 @@ import org.apache.spark.sql.SparkSession
   *    FILE atomically with it) — `FileSystem.rename`'s overload is
   *    deprecated/protected and its plain form silently returns false
   *    into-dir semantics;
-  *  - the local implementation is `RawLocalFs`: no checksum side files,
-  *    so directories written through this seam and through
-  *    `java.nio`/Spark look identical (no `.crc` pollution, no
+  *  - the local implementation is [[NioRawLocalFs]], Hadoop's raw
+  *    `RawLocalFs` without forked shell commands ([[LocalFs]]): no
+  *    checksum side files, so directories written through this seam and
+  *    through `java.nio`/Spark look identical (no `.crc` pollution, no
   *    stale-checksum read failures when tests touch files directly).
   *
   * == Atomicity matrix (what each primitive may assume where) ==
@@ -104,13 +105,14 @@ object Fs {
     val cur = cachedEnv
     if (cur != null && (sess.isEmpty || cur._1.contains(sess.get))) return cur
     val c = sess.map(_.sessionState.newHadoopConf()).getOrElse(new Configuration())
-    // The default local AbstractFileSystem binding is LocalFs — a
-    // ChecksumFs that shadows every file with a `.name.crc` sibling and
-    // fails reads over files other writers (java.nio, Spark tasks)
-    // touched since. Bind the raw local FS instead: table dirs written
-    // through this seam and through Spark/java.nio stay byte-identical.
-    // This mutates OUR conf copy only, never Spark's.
-    c.set("fs.AbstractFileSystem.file.impl", "org.apache.hadoop.fs.local.RawLocalFs")
+    // The local AbstractFileSystem binding is a ChecksumFs (Hadoop's
+    // LocalFs, or Engine.session's NioLocalFs) that shadows every file
+    // with a `.name.crc` sibling and fails reads over files other writers
+    // (java.nio, Spark tasks) touched since. Bind the raw local FS
+    // instead, the fork-free NioRawLocalFs: table dirs written through
+    // this seam and through Spark/java.nio stay byte-identical. This
+    // mutates OUR conf copy only, never Spark's.
+    c.set("fs.AbstractFileSystem.file.impl", classOf[NioRawLocalFs].getName)
     val e = (sess, c, FileContext.getFileContext(c))
     cachedEnv = e
     e
