@@ -43,7 +43,9 @@ object Profile {
       : Map[String, (SparkSession, String) => (DataFrame, Seq[DataFrame])] = {
     def pinned(split: (DataFrame, DataFrame)) = (split._2, Seq(split._1))
     Map(
-      // the CC round exactly as graph_components runs it
+      // the CC round exactly as graph_components' round loop runs it; at
+      // bench SF the co-purchase graph is under the union-find bound, so
+      // the query itself runs this loop only on graphs above the bound
       "graph_components" -> ((s, d) => Dedup.ccRoundPlan(
         graft.ops.Graph.coPurchaseEdges(s, d).select(col("a").as("id_a"), col("b").as("id_b")))),
       "llm_cross_doc_max" -> ((s, d) => pinned(CorpusSuffix.crossDocMaxPlanQuery(s, d))),

@@ -1,11 +1,12 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.BinaryType
+import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, IntegerType, LongType,
+  ShortType, StructField, StructType}
 import graft.Tables
 
 /** Deduplication operators for training-data pipelines (builder brief):
@@ -473,29 +474,64 @@ object Dedup {
   /** Connected components over an undirected pair list — the union-find
     * pass that turns verified near-dup PAIRS into CLUSTERS, so canonical
     * selection (keep min id per cluster) is transitive: A~B~C drops B and
-    * C even when A~C was never a candidate.
+    * C even when A~C was never a candidate. Output: `(id, cluster_id)`,
+    * one row per pair endpoint, cluster id = min member, both columns of
+    * the pair ids' type.
     *
-    * Iterative min-label propagation: each round is one shuffle (edge
-    * join + min-agg) and rounds = component diameter — near-dup clusters
-    * are shallow (duplicates of a common source), so this converges in
-    * 2-4 rounds where a Pregel framework would be overkill. The per-round
-    * driver-side convergence check aggregates only changed-label counts
-    * (tiny next to the corpus); `maxIter` bounds pathological chains.
-    * Labels are checkpointed per round to cut lineage growth:
-    * `localCheckpoint` (executor block storage) by default — pass
-    * `checkpointDir` for RELIABLE checkpointing at cluster scale, where
-    * an executor loss mid-iteration would otherwise kill the job
-    * (localCheckpoint truncates lineage, so lost blocks cannot be
-    * recomputed). Identical results either way (DedupSpec runs both).
+    * Two physical paths, chosen from the pair count observed at run time
+    * (the pair frame is materialized and counted first either way):
+    *
+    *  - SMALL graphs (`strict`, 2·pairs ≤ [[CcEdgeRowsPerPartition]]):
+    *    the pairs are collected to the driver, packed per partition into
+    *    primitive `Long` arrays, and folded through one exact
+    *    [[graft.ops.UnionFind]]; the labels go back as a frame of
+    *    primitive-array slices. No edge cache and no rounds: the pair
+    *    checkpoint, its count and one collect, where the loop adds an
+    *    edge cache and three to four jobs per round. The bound is the loop's own per-task
+    *    bound: the mirrored rows fit ONE cached edge partition (~32 MB of
+    *    payload), so the driver holds what one round task already holds.
+    *    Measured at exactly the bound (1 000 000 disjoint pairs, so
+    *    2 000 000 ids; local[4], 3 GB heap, 4-vCPU box): the call
+    *    allocates ~190 MB on the driver thread, all short-lived (~100 MB
+    *    decoding the collected arrays, 56 MB of union-find arrays, 32 MB
+    *    of output slices), and retains 32 MB — the output slices — for
+    *    the result frame's life. The fold itself takes ~0.2 s and the
+    *    call ~0.9 s warm; the loop took ~13 s on the same graph.
+    *  - Otherwise, iterative min-label propagation: each round is one
+    *    shuffle (edge join + min-agg) and rounds = component diameter —
+    *    near-dup clusters are shallow (duplicates of a common source), so
+    *    this converges in 2-4 rounds where a Pregel framework would be
+    *    overkill. The per-round driver-side convergence check aggregates
+    *    only changed-label counts (tiny next to the corpus); `maxIter`
+    *    bounds pathological chains. Labels are checkpointed per round to
+    *    cut lineage growth: `localCheckpoint` (executor block storage) by
+    *    default — pass `checkpointDir` for RELIABLE checkpointing at
+    *    cluster scale, where an executor loss mid-iteration would
+    *    otherwise kill the job (localCheckpoint truncates lineage, so
+    *    lost blocks cannot be recomputed). Identical results either way
+    *    (DedupSpec runs both).
     *
     * By default (`strict`), hitting `maxIter` without converging THROWS:
     * truncated labels are silently-wrong clusters (and would diverge from
     * the transitive-closure oracle). Pass strict = false to accept
-    * bounded-radius labels deliberately.
+    * bounded-radius labels deliberately; only the loop gives those, so a
+    * non-strict call always runs it.
+    *
+    * Each call logs one INFO line (logger `graft.llm.Dedup`): the path
+    * taken, the pair count and the rounds run.
     */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           strict: Boolean = true,
-                          checkpointDir: Option[String] = None): DataFrame = {
+                          checkpointDir: Option[String] = None): DataFrame =
+    connectedComponentsWith(pairs, maxIter, strict, checkpointDir)
+
+  /** [[connectedComponents]] with the union-find bound as a parameter:
+    * `localMaxEdgeRows = 0` forces the round loop (tests keep it covered
+    * on graphs the default bound would finish on the driver).
+    */
+  private[graft] def connectedComponentsWith(pairs: DataFrame, maxIter: Int = 20,
+      strict: Boolean = true, checkpointDir: Option[String] = None,
+      localMaxEdgeRows: Long = CcEdgeRowsPerPartition): DataFrame = {
     // (eager, lazy) checkpoint pair: rounds use the LAZY form so the
     // convergence count is also the materializing action (r20 — one job
     // per round where eager-then-probe ran two). The one-job claim holds
@@ -529,7 +565,20 @@ object Dedup {
         case None =>
           (df => df.localCheckpoint(), df => df.localCheckpoint(false))
       }
-    val (edges, labels0, p0) = ccBase(pairs, ckpt)
+    // materialize the caller's pair plan ONCE: the union-find collect
+    // and the mirror-union below would each recompute the upstream (an
+    // LSH candidate join, a blocked all-pairs scan) from the lazy plan
+    val p0 = ckpt(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+    val nPairs = p0.count()
+    if (strict && 2L * nPairs <= localMaxEdgeRows && CcLocalTypes(p0.schema("u").dataType))
+      ccLocal(p0, nPairs)
+    else ccLoop(p0, nPairs, maxIter, strict, ckpt, lckpt)
+  }
+
+  /** The min-label round loop over the materialized pair frame `p0`. */
+  private def ccLoop(p0: DataFrame, nPairs: Long, maxIter: Int, strict: Boolean,
+                     ckpt: DataFrame => DataFrame, lckpt: DataFrame => DataFrame): DataFrame = {
+    val (edges, labels0) = ccBase(p0, nPairs, ckpt)
     var labels = labels0
     var iter = 0
     var converged = false
@@ -548,8 +597,7 @@ object Dedup {
       // for reliable checkpoints (files, not blocks).
       graft.store.Checkpoints.free(prev)
     }
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged=$converged rounds=$iter")
+    CcLog.info(s"connectedComponents path=loop pairs=$nPairs rounds=$iter converged=$converged")
     if (strict && !converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
@@ -562,8 +610,51 @@ object Dedup {
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
+  private val CcLog = org.slf4j.LoggerFactory.getLogger("graft.llm.Dedup")
+
+  /** Id types the union-find path carries exactly through `Long`. */
+  private val CcLocalTypes: Set[DataType] = Set(LongType, IntegerType, ShortType, ByteType)
+
+  /** Ids per slice of the union-find path's output: 16 bytes of
+    * (id, cluster_id) per row, so a slice ships as ~512 KiB, under
+    * Spark's 1 000 KiB large-task warning.
+    */
+  private val CcLocalSliceIds = 1 << 15
+
+  /** The small-graph finish: `p0` collected as one (u, v) pair of
+    * primitive arrays per partition, one [[graft.ops.UnionFind]] pass,
+    * and the labels returned as a frame over primitive-array slices —
+    * never a `Row` per pair on the driver. Same schema as the loop's
+    * output: both columns take the pair ids' type, nullable when either
+    * side is.
+    */
+  private def ccLocal(p0: DataFrame, nPairs: Long): DataFrame = {
+    val spark = p0.sparkSession
+    import spark.implicits._
+    val chunks = p0.select(col("u").cast("long"), col("v").cast("long")).as[(Long, Long)]
+      .mapPartitions { it =>
+        val u, v = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { case (a, b) => u += a; v += b }
+        Iterator((u.result(), v.result()))
+      }
+      .collect()
+    val (ids, roots) = graft.ops.UnionFind.components(chunks.toSeq)
+    val slices = (0 until ids.length by CcLocalSliceIds).map(i =>
+      (ids.slice(i, i + CcLocalSliceIds), roots.slice(i, i + CcLocalSliceIds)))
+    val rows = spark.sparkContext.parallelize(slices, math.max(1, slices.length))
+      .flatMap { case (is, rs) => is.indices.iterator.map(i => Row(is(i), rs(i))) }
+    val t = p0.schema("u").dataType
+    val nullable = p0.schema.exists(_.nullable)
+    graft.store.Checkpoints.free(p0)
+    CcLog.info(s"connectedComponents path=union-find pairs=$nPairs rounds=0")
+    spark.createDataFrame(rows, StructType(Seq(
+        StructField("id", LongType, nullable), StructField("cluster_id", LongType, nullable))))
+      .select(col("id").cast(t).as("id"), col("cluster_id").cast(t).as("cluster_id"))
+  }
+
   /** The edge/label base frames shared by the CC loop and the round-plan
-    * diagnostic. The mirror-union is repartitioned by `v` — THE ITERATION
+    * diagnostic, over the materialized pair frame `p0` of `nPairs` rows.
+    * The mirror-union is repartitioned by `v` — THE ITERATION
     * JOIN KEY — before the dedup aggregate (HashPartitioning(v) satisfies
     * the (u, v)-clustering the distinct needs, so the dedup rides the
     * same exchange), and the frame is PERSISTED rather than checkpointed:
@@ -584,7 +675,9 @@ object Dedup {
     * instead of inheriting a session constant — AQE cannot coalesce a
     * cached frame's partitions, so a session-default 32 here made every
     * round a 32-task stage over kilobytes (measured: ~3 s of executor
-    * time per round stage at sf0.1, pure per-task overhead).
+    * time per round stage at sf0.1, pure per-task overhead). Also the
+    * union-find bound of [[connectedComponents]]: a graph whose mirrored
+    * rows fit one such partition finishes on the driver.
     */
   private val CcEdgeRowsPerPartition = 2000000L
 
@@ -600,21 +693,16 @@ object Dedup {
     math.max(2L, math.min(Int.MaxValue.toLong,
       mirroredRows / CcEdgeRowsPerPartition + 1)).toInt
 
-  private def ccBase(pairs: DataFrame, ckpt: DataFrame => DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    // materialize the caller's pair plan ONCE before mirroring: the
-    // union references it twice, and without this the upstream (an LSH
-    // candidate join, a blocked all-pairs scan) would compute twice
-    // just to build the edge list
-    val p0 = ckpt(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
-    // one tiny job over the materialized checkpoint; sizes the cache.
+  private def ccBase(p0: DataFrame, nPairs: Long, ckpt: DataFrame => DataFrame)
+      : (DataFrame, DataFrame) = {
+    // sizes the cache from the pair count.
     // Floor of 2: a 1-partition cache reports SinglePartition, whose
     // shuffle spec cannot seed a join's co-partitioning (Spark refuses
     // 1-partition joins), so EnsureRequirements would re-exchange the
     // cache every round — with ≥ 2 the HashPartitioning(v) spec is
     // reusable and the labels side aligns to IT instead (measured: the
     // round-plan dump grew `Exchange` over the InMemoryTableScan at 1)
-    val edgeParts = ccEdgeParts(2L * p0.count())
+    val edgeParts = ccEdgeParts(2L * nPairs)
     // SELF-LOOPS ride the edge frame (r20): with (u, u) present for every
     // node, a round's neighbor-min over N(u) ∪ {u} IS the label update —
     // min(nbr) = least(own, neighbor min) and the own-label row arrives
@@ -631,7 +719,7 @@ object Dedup {
     // the labels0 build is also the edge-cache materializing action
     val labels = ckpt(edges.select(col("u").as("id")).distinct()
       .withColumn("label", col("id")))
-    (edges, labels, p0)
+    (edges, labels)
   }
 
   /** One min-label-propagation round, UN-checkpointed: ONE join + ONE
@@ -681,8 +769,9 @@ object Dedup {
         (col("jlabel") < col("own")).as("changed"))
   }
 
-  /** Diagnostic: round-1's frame EXACTLY as [[connectedComponents]] runs
-    * it (same base construction, incl. the v-partitioned cached edge
+  /** Diagnostic: round-1's frame EXACTLY as [[connectedComponents]]'
+    * round loop runs it, whatever the pair count (same base
+    * construction, incl. the v-partitioned cached edge
     * frame), returned lazy so the per-round exchange shape is inspectable
     * — the registered cluster queries checkpoint every round, which hides
     * the loop's plan from the query tail (`graft.Profile`'s lazy form
@@ -690,7 +779,8 @@ object Dedup {
     * with `Checkpoints.free` after inspection.
     */
   private[graft] def ccRoundPlan(pairs: DataFrame): (DataFrame, Seq[DataFrame]) = {
-    val (edges, labels, p0) = ccBase(pairs, df => df.localCheckpoint())
+    val p0 = pairs.select(col("id_a").as("u"), col("id_b").as("v")).localCheckpoint()
+    val (edges, labels) = ccBase(p0, p0.count(), df => df.localCheckpoint())
     (ccRound(edges, labels), Seq(edges, labels, p0))
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{CheckpointBridge, ColumnBridge}
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -365,7 +365,7 @@ object CorpusSuffix {
         (d, p, rank)
       }
     }.toDF("doc_id", "pos", "r").localCheckpoint()
-    sorted.unpersist(blocking = false)
+    CheckpointBridge.unpersist(sorted)
     ranked
   }
 
@@ -458,7 +458,7 @@ object CorpusSuffix {
         out
       }
     }.toDF("s", "doc_id", "pos", "adoc", "apos").localCheckpoint()
-    sorted.unpersist(blocking = false)
+    CheckpointBridge.unpersist(sorted)
     seq
   }
 
@@ -564,7 +564,7 @@ object CorpusSuffix {
         }
       }
     }.toDF("s", "doc_id", "lp", "ln", "run_id").localCheckpoint()
-    sortedRows.unpersist(blocking = false)
+    CheckpointBridge.unpersist(sortedRows)
     // sortedRows (already materialized) carried everything lpF fed it;
     // release the LCP scratch and the sequence frame now
     graft.store.Checkpoints.free(lpF, seq)

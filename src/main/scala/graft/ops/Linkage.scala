@@ -32,10 +32,12 @@ import graft.Tables
   *    expression; no UDF).
   *  - Clusters exploit the blocking invariant: edges never cross blocks,
   *    so connected components are block-local and fold through ONE
-  *    shuffle of local union-find (`clusterWithinBlocks`) instead of
-  *    iterative min-label propagation — see its doc for why that is the
+  *    shuffle of local union-find (`clusterWithinBlocks`, through the
+  *    shared primitive-array [[UnionFind]]) instead of iterative
+  *    min-label propagation — see its doc for why that is the
   *    scale-correct shape here (the generic `Dedup.connectedComponents`
-  *    remains the tool for unbounded graphs).
+  *    remains the tool for unbounded graphs, and finishes small ones
+  *    through the same [[UnionFind]]).
   */
 object Linkage {
 
@@ -166,11 +168,13 @@ object Linkage {
     * round, rounds = graph diameter — the right tool for unbounded
     * graphs like the text/embedding near-dup families) to ONE shuffle:
     * each block's edge set (bounded by maxBlock², and in practice by the
-    * match rate) folds locally through union-find inside flatMapGroups.
-    * State per group is O(block distinct ids) — the same bound the
-    * candidate generator already enforces. This is the standard
-    * shape for clustering under blocking at 100 TB: never iterate
-    * globally over a graph the blocking key already partitioned.
+    * match rate) folds locally through [[UnionFind]] inside
+    * flatMapGroups — the same helper, and so the same min-member cluster
+    * ids, as `Dedup.connectedComponents`' small-graph finish. State per
+    * group is the block's edges and distinct ids in primitive arrays —
+    * the same bound the candidate generator already enforces. This is
+    * the standard shape for clustering under blocking at 100 TB: never
+    * iterate globally over a graph the blocking key already partitioned.
     */
   def clusterWithinBlocks(pairs: DataFrame, blockCol: String,
                           aCol: String, bCol: String): DataFrame = {
@@ -181,23 +185,10 @@ object Linkage {
       .as[(String, Long, Long)]
       .groupByKey(_._1)
       .flatMapGroups { (_, it) =>
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
-          r
-        }
-        it.foreach { case (_, a, b) =>
-          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-          val (ra, rb) = (find(a), find(b))
-          // union by MIN root so the representative is the min member,
-          // matching Dedup.connectedComponents' cluster-id convention
-          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-        }
-        // snapshot keys before emitting: find() path-compresses (value
-        // writes) and map iteration must not interleave with them
-        val ids = parent.keysIterator.toArray.sorted
-        ids.map(id => (id, find(id))).toSeq
+        val a, b = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { case (_, x, y) => a += x; b += y }
+        val (ids, roots) = UnionFind.components(Seq((a.result(), b.result())))
+        ids.lazyZip(roots).toSeq
       }
       .toDF("id", "cluster_id")
   }

@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.CheckpointBridge
 
 /** Prompt release for localCheckpoint-backed frames.
   *
@@ -22,12 +23,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * leaves reach it: a frame that unions a checkpoint with itself, or
   * frames freed together that share one, would otherwise remove the
   * same blocks again (a WARN and "block does not exist" lines each).
+  * Locally checkpointed RDDs are released through [[CheckpointBridge]],
+  * without the WARN `RDD.unpersist` logs for every one of them.
   */
 private[graft] object Checkpoints {
   def free(dfs: DataFrame*): Unit = {
     dfs.foreach(_.unpersist(blocking = false))
     dfs.flatMap(_.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd })
       .distinctBy(_.id)
-      .foreach(_.unpersist(blocking = false))
+      .foreach(CheckpointBridge.unpersist)
   }
 }

@@ -4,6 +4,11 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerUnpersistRDD}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
@@ -41,8 +46,8 @@ class CheckpointsSpec extends SparkSpec {
   }
 
   test("free unpersists each checkpointed RDD once over a connectedComponents call") {
-    // the CC exit frees the edge cache, whose plan reaches the pair
-    // checkpoint p0 through four union branches, together with p0
+    // the CC loop's exit frees the edge cache, whose plan reaches the
+    // pair checkpoint p0 through four union branches, together with p0
     // itself: five leaves, one RDD, so exactly one unpersist
     val sc = spark.sparkContext
     val unpersisted, cleaned = new ConcurrentLinkedQueue[Int]()
@@ -56,7 +61,7 @@ class CheckpointsSpec extends SparkSpec {
     sc.addSparkListener(listener)
     val labels = try {
       val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
-      val out = Dedup.connectedComponents(pairs)
+      val out = Dedup.connectedComponentsWith(pairs, localMaxEdgeRows = 0)
       ListenerBridge.drain(sc)
       out
     } finally sc.removeSparkListener(listener)
@@ -69,6 +74,55 @@ class CheckpointsSpec extends SparkSpec {
     assert(byEngine.nonEmpty, "connectedComponents freed no checkpoint")
     assert(byEngine.values.forall(_ == 1),
       s"RDDs unpersisted more than once: ${byEngine.filter(_._2 > 1)}")
+  }
+
+  test("connectedComponents' union-find path leaves no persisted RDD behind") {
+    // the pair checkpoint is collected, then freed; the labels frame is
+    // driver-built slices, persisted nowhere
+    val sc = spark.sparkContext
+    val pre = sc.getPersistentRDDs.keySet.toSet
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("id_a", "id_b")
+    val out = Dedup.connectedComponents(pairs)
+    assert((sc.getPersistentRDDs.keySet.toSet -- pre).isEmpty,
+      s"left persisted: ${sc.getPersistentRDDs.keySet.toSet -- pre}")
+    assert(out.as[(Long, Long)].collect().toMap ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("free releases a local checkpoint without a WARN line") {
+    // capture the root logger's events; the control shows the capture
+    // sees the WARN RDD.unpersist logs for a locally checkpointed RDD
+    def warnsDuring(f: => Unit): Seq[String] = {
+      val events = new ConcurrentLinkedQueue[LogEvent]()
+      val appender = new AbstractAppender("free-capture", null, null, true, Property.EMPTY_ARRAY) {
+        override def append(e: LogEvent): Unit = events.add(e.toImmutable)
+      }
+      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+      val root = ctx.getConfiguration.getRootLogger
+      appender.start()
+      root.addAppender(appender, null, null)
+      ctx.updateLoggers()
+      try f finally {
+        root.removeAppender(appender.getName)
+        ctx.updateLoggers()
+        appender.stop()
+      }
+      events.asScala.filter(_.getLevel.isMoreSpecificThan(Level.WARN))
+        .map(_.getMessage.getFormattedMessage).toSeq
+    }
+    def checkpointRdd(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case lr: LogicalRDD => lr.rdd }.head
+    val control = spark.range(0, 100).toDF("x").localCheckpoint()
+    val controlWarns = warnsDuring(checkpointRdd(control).unpersist(blocking = false))
+    assert(controlWarns.exists(_.contains("locally checkpointed")),
+      s"the capture must see RDD.unpersist's WARN: $controlWarns")
+    val sc = spark.sparkContext
+    val ck = spark.range(0, 100).toDF("x").localCheckpoint()
+    val id = checkpointRdd(ck).id
+    assert(sc.getPersistentRDDs.contains(id))
+    val warns = warnsDuring(Checkpoints.free(ck.filter(col("x") >= 0)))
+    assert(warns.isEmpty, s"free logged: $warns")
+    assert(!sc.getPersistentRDDs.contains(id), "free must still release the blocks")
   }
 
   test("winnowOverlap and crossDocMax leave only their result's own checkpoint persisted") {

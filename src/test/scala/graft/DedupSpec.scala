@@ -372,19 +372,100 @@ class DedupSpec extends SparkSpec with PropertyCheck {
       10L -> 10L, 11L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L, 24L -> 20L))
     // maxIter caps propagation; strict mode refuses truncated labels,
-    // non-strict yields direct-neighbor labels only
+    // non-strict yields direct-neighbor labels only (the round loop,
+    // forced: these graphs are far under the union-find bound)
     val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
     intercept[IllegalStateException] {
-      Dedup.connectedComponents(chain, maxIter = 1).collect()
+      Dedup.connectedComponentsWith(chain, maxIter = 1, localMaxEdgeRows = 0).collect()
     }
-    val capped = Dedup.connectedComponents(chain, maxIter = 1, strict = false)
+    val capped = Dedup.connectedComponentsWith(chain, maxIter = 1, strict = false,
+        localMaxEdgeRows = 0)
       .as[(Long, Long)].collect().toMap
     assert(capped(2L) == 1L && capped(4L) == 3L)
     // reliable-checkpoint mode (cluster-scale lineage cut) is label-identical
     val ckptDir = java.nio.file.Files.createTempDirectory("cc_ckpt").toString
-    val reliable = Dedup.connectedComponents(pairs, checkpointDir = Some(ckptDir))
+    val reliable = Dedup.connectedComponentsWith(pairs, checkpointDir = Some(ckptDir),
+        localMaxEdgeRows = 0)
       .as[(Long, Long)].collect().toMap
     assert(reliable == got)
+  }
+
+  test("connected components property: union-find path ≡ round loop on random graphs") {
+    import org.scalacheck.Gen
+    def assertSame(e: Seq[(Long, Long)]): Unit = {
+      val df = e.toDF("id_a", "id_b")
+      val local = Dedup.connectedComponentsWith(df, localMaxEdgeRows = Long.MaxValue)
+      val loop = Dedup.connectedComponentsWith(df, localMaxEdgeRows = 0)
+      assert(local.schema == loop.schema, e.toString)
+      val got = local.as[(Long, Long)].collect()
+      assert(got.length == got.map(_._1).distinct.length, s"one row per id: $e")
+      assert(got.toMap == loop.as[(Long, Long)].collect().toMap, e.toString)
+    }
+    // one component per shape, ids descending along chains so labels
+    // must travel; offsets overlap, so shapes also merge
+    val shape = for {
+      b <- Gen.choose(0, 5).map(_ * 10L)
+      n <- Gen.choose(1, 8)
+      kind <- Gen.choose(0, 3)
+      rnd <- Gen.listOfN(n, Gen.zip(Gen.choose(0L, 9L), Gen.choose(0L, 9L)))
+    } yield kind match {
+      case 0 => (0 until n).map(i => (b + i + 1, b + i.toLong))      // chain
+      case 1 => (0 until n).map(i => (b + 9, b + i.toLong))          // star, max-id hub
+      case 2 => (0 until n).map(i => (100 + b + 2 * i, 101 + b + 2 * i)) // isolated pairs
+      case _ => rnd.map { case (x, y) => (b + x, b + y) }             // random, self-pairs too
+    }
+    val gen = for {
+      k <- Gen.choose(0, 4)
+      shapes <- Gen.listOfN(k, shape)
+    } yield {
+      val e = shapes.flatten
+      // duplicate and reversed pairs, and a self-pair on a connected id
+      e ++ e.take(2) ++ e.take(2).map(_.swap) ++ e.take(1).map { case (a, _) => (a, a) }
+    }
+    forAll(gen)(assertSame)
+    assertSame(Seq.empty)
+    assertSame(Seq((5L, 5L)))
+    assertSame(Seq((3L, 2L), (2L, 1L), (1L, 2L), (1L, 2L), (7L, 7L), (9L, 8L), (9L, 6L), (9L, 7L)))
+  }
+
+  test("connected components: the union-find bound is 2·pairs ≤ localMaxEdgeRows, at the boundary") {
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graft.ListenerBridge
+    val sc = spark.sparkContext
+    val group = new AtomicReference[String]("")
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group.get))
+          jobs.incrementAndGet()
+    }
+    // jobs the call itself runs, and its labels
+    def run(nPairs: Int, bound: Long): (Int, Map[Long, Long]) = {
+      val chain = (0 until nPairs).map(i => (i + 1L, i.toLong)).toDF("id_a", "id_b")
+      group.set(s"cc-boundary-$nPairs-$bound")
+      ListenerBridge.drain(sc)
+      jobs.set(0)
+      sc.setJobGroup(group.get, "cc boundary")
+      val out = try Dedup.connectedComponentsWith(chain, localMaxEdgeRows = bound)
+        finally sc.clearJobGroup()
+      ListenerBridge.drain(sc)
+      (jobs.get, out.as[(Long, Long)].collect().toMap)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val k = 6
+      val (atUf, atLabels) = run(k, 2L * k)
+      val (ufJobs, _) = run(k, Long.MaxValue)
+      val (loopJobsK, _) = run(k, 0L)
+      val (aboveJobs, aboveLabels) = run(k + 1, 2L * k)
+      val (loopJobs, _) = run(k + 1, 0L)
+      assert(atUf == ufJobs, s"2·pairs = bound must take the union-find ($atUf vs $ufJobs jobs)")
+      assert(aboveJobs == loopJobs, s"one pair above must run the loop ($aboveJobs vs $loopJobs jobs)")
+      assert(ufJobs < loopJobsK, s"union-find $ufJobs jobs, loop $loopJobsK")
+      assert(atLabels == (0 to k).map(_.toLong -> 0L).toMap)
+      assert(aboveLabels == (0 to k + 1).map(_.toLong -> 0L).toMap)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("incremental dedup: drops corpus dups (incl. normalized), dedups within batch; bloom path identical") {

@@ -66,8 +66,10 @@ class LinkageSpec extends SparkSpec with PropertyCheck {
       .filter($"d" <= 1 && $"a_seg" === $"b_seg")
     val local = Linkage.clusterWithinBlocks(pairs, "bk", "id_a", "id_b")
       .as[(Long, Long)].collect().toMap
-    val global = graft.llm.Dedup.connectedComponents(
-        pairs.select($"id_a", $"id_b"))
+    // the round loop, forced: the default bound would finish this graph
+    // through the same UnionFind as clusterWithinBlocks
+    val global = graft.llm.Dedup.connectedComponentsWith(
+        pairs.select($"id_a", $"id_b"), localMaxEdgeRows = 0)
       .as[(Long, Long)].collect().toMap
     assert(local == global)
     // path-compressed union by min: chain order can't change the rep
@@ -143,7 +145,8 @@ class LinkageSpec extends SparkSpec with PropertyCheck {
       val df = edges.toDF("bk", "id_a", "id_b")
       val local = Linkage.clusterWithinBlocks(df, "bk", "id_a", "id_b")
         .as[(Long, Long)].collect().toMap
-      val global = graft.llm.Dedup.connectedComponents(df.select($"id_a", $"id_b"))
+      val global = graft.llm.Dedup.connectedComponentsWith(df.select($"id_a", $"id_b"),
+          localMaxEdgeRows = 0)
         .as[(Long, Long)].collect().toMap
       assert(local == global, edges.toString)
     }
