@@ -178,9 +178,11 @@ object Orchestrate {
       // run would silently abandon previously merged state.
       val statePath = s"$lakeRoot/inventory_state"
       graft.store.Versioned.adoptLegacy(statePath)
+      // the state was written from `deduped`'s projection, so its schema
+      // pins the snapshot read (no footer-inference job)
       val merged =
         if (graft.store.Versioned.exists(statePath))
-          Upsert.replaceOnMatch(graft.store.Versioned.read(spark, statePath),
+          Upsert.replaceOnMatch(graft.store.Versioned.read(spark, statePath, deduped.schema),
             deduped, Seq("inventory_id"))
         else deduped
       // no staging checkpoint needed: the plan reads snapshot v_n and

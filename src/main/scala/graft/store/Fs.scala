@@ -56,8 +56,10 @@ import org.apache.spark.sql.SparkSession
   *    tmp object's non-existence — which no reader here does (readers
   *    only resolve the canonical pointer name).
   *  - '''Staged-directory swaps''' ([[Lake.atomicOverwrite]],
-  *    [[Lake.compact]], [[Lake.optimize]], `compactLedgeredTable`'s
-  *    staged partition move, [[Versioned.adoptLegacy]]'s sweep):
+  *    [[Lake.compact]], [[Lake.optimize]], the partition commits of
+  *    [[Upsert.additivePartitioned]] and [[Lake.compactPartitions]],
+  *    `compactLedgeredTable`'s staged partition move,
+  *    [[Versioned.adoptLegacy]]'s sweep):
   *    valid on POSIX and HDFS where a dir rename is one metadata op.
   *    On S3 a "dir rename" is an O(objects) copy — NOT a commit
   *    primitive. The deployable form there is exactly what

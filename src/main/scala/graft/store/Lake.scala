@@ -196,72 +196,122 @@ object Lake {
   }
 
   /** INCREMENTAL compaction: rewrite only the partition dirs whose
-    * small-file count crossed `maxFilesPerPartition`, through dynamic
-    * partition overwrite — the per-partition form of `compact` and the
-    * one that survives scale. A streaming table accretes files only in
-    * the partitions it currently writes (today's dates); whole-table
-    * compaction re-reads and re-writes years of already-compact history
-    * to fix them, every maintenance run. Here the hot dirs are found by
-    * a FILE LISTING (driver-side metadata, zero data read), only those
-    * dirs are scanned, re-packed to ~one file each, and committed via
-    * write-scoped dynamic overwrite — cold partitions are never read,
-    * never rewritten, their files stay byte-identical (LakeSpec
-    * asserts). Same single-writer contract as every table op here;
-    * concurrent readers of an in-place parquet table race Spark's own
-    * per-dir commit, as with `Upsert.additivePartitioned`.
+    * small-file count crossed `maxFilesPerPartition` — the per-partition
+    * form of `compact` and the one that survives scale. A streaming
+    * table accretes files only in the partitions it currently writes
+    * (today's dates); whole-table compaction re-reads and re-writes
+    * years of already-compact history to fix them, every maintenance
+    * run. Here the hot dirs are found by a FILE LISTING (driver-side
+    * metadata, zero data read); each is read DIRECTLY, its file columns
+    * re-packed to one file in `_staging/<id>/<dirName>`, and swapped in
+    * under the dir's own escaped name ([[swapPartition]]). Cold
+    * partitions are never read, never rewritten — their files stay
+    * byte-identical (LakeSpec asserts). Because the dir is the unit, no
+    * partition value is ever parsed, typed or filtered on: null dirs
+    * (`__HIVE_DEFAULT_PARTITION__`), timestamps and escaped names
+    * compact like any other. Same single-writer contract, crash
+    * recovery and reader window as `Upsert.additivePartitioned`.
     *
-    * Returns the partition values it compacted (bounded: partitions
-    * needing work, not rows).
+    * Returns the (unescaped) partition values it compacted (bounded:
+    * partitions needing work, not rows).
     */
   def compactPartitions(spark: SparkSession, tableDir: String, partitionCol: String,
                         maxFilesPerPartition: Int = 4): Seq[String] =
-      Versioned.withSiblingLock(tableDir) {
-    val prefix = s"$partitionCol="
-    // (escaped dir name, display value) of every over-threshold dir. The
-    // dirs themselves are the read targets — the value string is never
-    // round-tripped through a filter, because SQL string form and path
-    // value form disagree for whole type families (null partitions'
-    // __HIVE_DEFAULT_PARTITION__, timestamps' :ss suffix, doubles in
-    // scientific notation) and a non-matching filter would silently
-    // report dirs as compacted while rewriting nothing.
-    val hot = Fs.list(tableDir).iterator
-      .filter(e => e.isDir && e.name.startsWith(prefix))
-      .filter { e =>
-        Fs.list(e.path).count(_.name.endsWith(".parquet")) > maxFilesPerPartition
-      }
-      .map { e =>
-        (e.name, org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(e.name.stripPrefix(prefix)))
-      }
-      .toSeq.sortBy(_._2)
-    // partition type as the WHOLE table infers it: a single all-null dir
-    // (`__HIVE_DEFAULT_PARTITION__`) read alone infers VOID, which cannot
-    // be written back; string is the degenerate fallback when every dir
-    // is null
-    val partType = if (hot.isEmpty) org.apache.spark.sql.types.StringType
-      else spark.read.parquet(tableDir).schema(partitionCol).dataType match {
-        case org.apache.spark.sql.types.NullType => org.apache.spark.sql.types.StringType
-        case t => t
-      }
-    hot.foreach { case (dirName, _) =>
-      // read the hot dir DIRECTLY (basePath re-materializes the partition
-      // column, null dirs included) and re-pack it to ~one file; the
-      // dynamic overwrite then replaces exactly the partitions present in
-      // the frame — this one dir. One job per hot dir, and hot dirs are
-      // bounded by the maintenance backlog, not the table.
-      val slice = spark.read.option("basePath", tableDir)
-        .parquet(s"$tableDir/$dirName")
-        .withColumn(partitionCol, col(partitionCol).cast(partType))
-        .repartition(1)
-        // the checkpoint stages the (single-dir-sized) data because the
-        // write's destination is also its source
-        .localCheckpoint()
-      slice.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partitionCol)
-        .parquet(tableDir)
+      withPartitionSwaps(tableDir) {
+    val hot = partitionDirs(tableDir, partitionCol)
+      .filter(e => Fs.list(e.path).count(_.name.endsWith(".parquet")) > maxFilesPerPartition)
+      .map(e => (e, org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .unescapePathName(e.name.stripPrefix(s"$partitionCol="))))
+      .sortBy(_._2)
+    val staging = stagingDir(tableDir)
+    hot.foreach { case (e, _) =>
+      // the staged dir becomes the partition dir itself, so no _SUCCESS
+      spark.read.parquet(e.path).coalesce(1).write
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(s"$staging/${e.name}")
+      swapPartition(tableDir, staging, e.name)
     }
     hot.map(_._2)
+  }
+
+  // ---- partition-dir swaps -------------------------------------------------
+
+  private val Staging = "_staging"
+  // under a staging dir, where a partition dir (`<col>=<value>`) cannot
+  // take the same name whatever its value
+  private val Aside = "_aside"
+
+  /** Run one partition commit of `tableDir` under its sibling writer
+    * lock: first [[recoverPartitionSwaps]], then `f`, which stages under
+    * [[stagingDir]] and publishes with [[swapPartition]], then drop the
+    * staging root — and the table dir itself if this commit created it
+    * and published nothing into it. Refuses a store whose directory
+    * rename is not atomic (Fs's matrix): there a crash part-way through
+    * moving a live dir aside would leave no complete copy to restore.
+    */
+  private[store] def withPartitionSwaps[T](tableDir: String)(f: => T): T = {
+    Fs.requireAtomicDirRename(tableDir, "Lake.withPartitionSwaps")
+    Versioned.withSiblingLock(tableDir) {
+      val created = !Fs.exists(tableDir)
+      recoverPartitionSwaps(tableDir)
+      val out = f
+      Fs.delete(s"$tableDir/$Staging")
+      if (created && Fs.list(tableDir).isEmpty) Fs.delete(tableDir)
+      out
+    }
+  }
+
+  /** The `<partitionCol>=<value>` dirs directly under `dir`. */
+  private[store] def partitionDirs(dir: String, partitionCol: String): Seq[Fs.Entry] =
+    Fs.list(dir).filter(e => e.isDir && e.name.startsWith(s"$partitionCol="))
+
+  /** A fresh staging dir for one partition commit, `<table>/_staging/<id>`:
+    * underscore-prefixed, so Spark's file discovery never lists it as
+    * table data, and on the table's own filesystem, so publishing a
+    * staged partition dir is a rename, never a copy.
+    */
+  private[store] def stagingDir(tableDir: String): String =
+    s"$tableDir/$Staging/${java.util.UUID.randomUUID()}"
+
+  /** Publish `<staging>/<dirName>` (`staging` from [[stagingDir]]) as the
+    * partition dir `<table>/<dirName>`. A new partition is one rename. An
+    * existing one is swapped: live → `<staging>/_aside/<dirName>`,
+    * staged → live, delete the aside. Single writer. Between the two
+    * renames a reader listing the table finds the partition dir missing
+    * (two metadata ops wide); a crash there leaves the old data at the
+    * aside path, which [[recoverPartitionSwaps]] moves back. Each rename
+    * is a commit only where a directory rename is atomic
+    * ([[withPartitionSwaps]] checks) — the same assumption Spark's
+    * dynamic partition overwrite makes.
+    */
+  private[store] def swapPartition(tableDir: String, staging: String, dirName: String): Unit = {
+    val live = s"$tableDir/$dirName"
+    val staged = s"$staging/$dirName"
+    if (!Fs.exists(live)) Fs.rename(staged, live)
+    else {
+      val aside = s"$staging/$Aside/$dirName"
+      Fs.mkdirs(s"$staging/$Aside")
+      Fs.rename(live, aside)
+      Fs.rename(staged, live)
+      Fs.delete(aside)
+    }
+  }
+
+  /** Crash recovery for [[swapPartition]], run at the start of every
+    * partition commit ([[withPartitionSwaps]]): an aside dir whose live
+    * partition dir is missing is the only copy of that partition and is
+    * renamed back; everything else under `<table>/_staging` is an
+    * unpublished leftover and is deleted.
+    */
+  private def recoverPartitionSwaps(tableDir: String): Unit = {
+    val root = s"$tableDir/$Staging"
+    for {
+      st <- Fs.list(root) if st.isDir
+      a <- Fs.list(s"${st.path}/$Aside") if a.isDir
+      live = s"$tableDir/${a.name}"
+      if !Fs.exists(live)
+    } Fs.rename(a.path, live)
+    Fs.delete(root)
   }
 
   /** The full table-maintenance pass, Delta's `OPTIMIZE ... ZORDER BY`

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * algebra. Both are shuffle-on-key plans that scale linearly: the anti
   * join and the re-aggregation hash-partition on the merge key, and when the
   * target is partitioned by a date column only touched partitions need
-  * rewriting (Engine.tune sets dynamic partition overwrite).
+  * rewriting (`additivePartitioned`'s stage-and-swap).
   *
   * Single-writer assumption documented in the reference's orchestration
   * (Step Functions MaxConcurrentRuns 1) carries over.
@@ -83,56 +83,63 @@ object Upsert {
     * The whole-table form (additive + full swap) rereads and rewrites
     * the entire KPI history every batch — at real history sizes that is
     * a per-batch full rewrite for a delta touching a handful of recent
-    * dates. Here the delta's distinct partition values (a bounded driver
-    * list — dates-per-batch, not rows) prune the existing side's scan to
-    * just those partition dirs, the re-agg runs over that slice plus the
-    * delta, and the write commits through dynamic partition overwrite
-    * set as a WRITE-SCOPED option (not session conf: under the static
-    * default a caller on an un-tuned session would silently delete every
-    * untouched partition of the history), which replaces
-    * exactly the partition dirs present in the result. Untouched
-    * partitions are never read, never shuffled, never rewritten — their
-    * files stay byte-identical (LakeSpec asserts mtimes). The merged
-    * slice is localCheckpointed before the write because Spark refuses a
-    * write whose plan reads the destination path; the checkpoint also
-    * bounds the staged data to the touched slice. Same single-writer
-    * contract as the swap path; the crash window is Spark's own
-    * per-partition commit over the touched dirs only.
+    * dates. Stage and swap, in one pass over the delta:
+    *  1. the delta's per-key aggregate is written once, partitioned, to
+    *     `<table>/_staging/<id>/`;
+    *  2. that dir's listing names the touched partitions — no emptiness
+    *     probe, no collect of partition values (an empty delta writes no
+    *     partition dir and publishes nothing);
+    *  3. the partitions the table has are merged: their live dirs and
+    *     staged dirs, read schema-pinned as explicit paths, are
+    *     re-aggregated into a second staging dir;
+    *  4. only then is anything published, back to back: a partition the
+    *     table lacks by renaming its staged dir into place, a merged one
+    *     by swapping it in (`Lake.swapPartition`).
+    * Untouched partitions are never read, never shuffled, never
+    * rewritten — their files stay byte-identical (LakeSpec asserts
+    * mtimes). No session conf is involved, so an un-tuned session is as
+    * safe as a tuned one. The table root's `_SUCCESS` is refreshed on
+    * every commit that published something.
+    *
+    * Single writer (the table's sibling lock refuses a live second one).
+    * Windows: while a touched partition is swapped, a reader listing the
+    * table finds that one dir missing for two renames. A crash in that
+    * gap leaves the old dir aside under `_staging`, and the next call
+    * (or `Lake.compactPartitions`) renames it back before anything else
+    * (`Lake.withPartitionSwaps`); any other crash leaves only
+    * unpublished staging, deleted by that same step. A failed job
+    * publishes nothing, so a retry or replay of the batch is exact. Only
+    * a crash part-way through the renames of step 4 leaves the batch
+    * partly applied, and a replay adds the published part again: the
+    * at-least-once caveat of every additive merge here (T5), no wider
+    * than the renames of a Spark job commit.
     */
   def additivePartitioned(spark: org.apache.spark.sql.SparkSession, tableDir: String,
                           delta: DataFrame, keys: Seq[String], valueCol: String,
-                          partitionCol: String): Unit = {
-    if (delta.isEmpty) return
+                          partitionCol: String): Unit =
+      Lake.withPartitionSwaps(tableDir) {
     val fullKeys = keys :+ partitionCol
-    val cols = fullKeys.map(col) :+ col(valueCol)
     val deltaAgg = delta.groupBy(fullKeys.map(col): _*).agg(sum(col(valueCol)).as(valueCol))
-    val merged =
-      if (!Fs.exists(tableDir)) deltaAgg.select(cols: _*)
-      else {
-        val touched = deltaAgg.select(col(partitionCol)).distinct()
-          .collect().map(_.get(0)).toSeq
-        // schema-pinned to the delta's own projection (this operator
-        // wrote the table from exactly these columns/types): a crashed
-        // first write can leave tableDir existing but DATALESS, where
-        // a schema-less read throws on EVERY retry/replay — with the
-        // kpi stream re-applying each restart, a permanent wedge. The
-        // declared schema reads the empty table as an empty frame and
-        // the merge degrades to the fresh-table write.
-        val existing = spark.read.schema(deltaAgg.select(cols: _*).schema)
-          .parquet(tableDir)
-          .filter(col(partitionCol).isInCollection(touched))
-          .select(cols: _*)
-        additive(existing, deltaAgg.select(cols: _*), fullKeys, valueCol)
-          .select(cols: _*)
-      }
-    merged.localCheckpoint()
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      // Safety travels with the operator: dynamic overwrite per-write, so
-      // the merge is partition-scoped regardless of the caller's session
-      // conf (static mode would drop every untouched partition).
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol)
-      .parquet(tableDir)
+      .select(fullKeys.map(col) :+ col(valueCol): _*)
+    val schema = deltaAgg.schema
+    val staged = Lake.stagingDir(tableDir)
+    deltaAgg.write.partitionBy(partitionCol).parquet(staged)
+    val touched = Lake.partitionDirs(staged, partitionCol)
+    val (live, fresh) = touched.partition(e => Fs.exists(s"$tableDir/${e.name}"))
+    // every job runs before the first rename: a failed merge leaves the
+    // table as it was, so a retry or replay of the same delta is exact
+    val merged = Lake.stagingDir(tableDir)
+    if (live.nonEmpty) {
+      def read(base: String): DataFrame = spark.read.schema(schema).option("basePath", base)
+        .parquet(live.map(e => s"$base/${e.name}"): _*)
+      // cast back to the pinned types: a re-sum widens decimals
+      additive(read(tableDir), read(staged), fullKeys, valueCol)
+        .select(schema.fields.toIndexedSeq.map(f => col(f.name).cast(f.dataType)): _*)
+        .write.partitionBy(partitionCol).parquet(merged)
+    }
+    fresh.foreach(e => Lake.swapPartition(tableDir, staged, e.name))
+    live.foreach(e => Lake.swapPartition(tableDir, merged, e.name))
+    if (touched.nonEmpty) Fs.writeString(s"$tableDir/_SUCCESS", "")
   }
 
   /** At-rest ledger for the partition-scoped streaming merge, keyed on

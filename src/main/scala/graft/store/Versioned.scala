@@ -1,6 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Lock-free table overwrite: versioned directories + an atomically
   * swapped current-pointer file — the snapshot mechanism every table
@@ -186,8 +187,17 @@ object Versioned {
     * plan can be consumed at leisure (subject to the retention horizon).
     */
   def read(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(currentPath(root).getOrElse(
-      throw new IllegalStateException(s"no versioned table at $root")))
+    spark.read.parquet(livePath(root))
+
+  /** [[read]] with the snapshot's schema given by the caller, which
+    * saves the Spark job a schema-less parquet read runs to infer it
+    * from the file footers.
+    */
+  def read(spark: SparkSession, root: String, schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(livePath(root))
+
+  private def livePath(root: String): String =
+    currentPath(root).getOrElse(throw new IllegalStateException(s"no versioned table at $root"))
 
   /** Every version still on disk, ascending — the set `readVersion` can
     * time-travel to (current plus the retained superseded snapshots).

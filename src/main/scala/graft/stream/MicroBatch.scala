@@ -44,7 +44,10 @@ object MicroBatch {
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val (clean, rejected) = transform(batch)
-        if (!clean.isEmpty) Lake.appendPartitioned(clean, tsCol, processedDir)
+        // no emptiness probe on the partitioned side: the dynamic-partition
+        // writer opens no file for empty input. The unpartitioned
+        // quarantine write would leave an empty part file, so it keeps one.
+        Lake.appendPartitioned(clean, tsCol, processedDir)
         if (!rejected.isEmpty) Lake.quarantine(rejected, quarantineDir)
         ()
       }
