@@ -2,40 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Noise-attribution harness (PERF.md's min-of-N interleaved sweep as a
-  * runnable): times every registered query over `SPARK_GRAFT_BENCH_PASSES`
-  * interleaved sweeps (all queries pass 1, then pass 2, … — so one
-  * external stall cannot cover both measurements of the same query) and
-  * emits ONE JSON line with per-query min / max / spread plus every raw
-  * sample. Spread is the verdict: a query whose min sits at the old
-  * level while its max wanders is a shared-box noise blip; a query whose
-  * MIN moved is a real regression. Focus with
-  * `SPARK_GRAFT_BENCH_ONLY=q1,q2`; `SPARK_GRAFT_BENCH_OUT` persists the
-  * line (default bench_sweep.json).
+/** Helpers shared by the harness mains (`Bench`, `Verify`, `Profile`,
+  * `ScaleBench`, `HotBucketBench`): the session they all run on and the
+  * pieces of their one-line JSON output.
   */
 object BenchSweep {
 
+  /** The harness session: `Engine.session` on `local[$SPARK_GRAFT_CPUS]`
+    * with as many shuffle partitions, plus the `SPARK_GRAFT_CONF` overlay
+    * ([[confOverlay]]), then a warm-up. Returns it with
+    * `$SPARK_GRAFT_SF_DIR`.
+    */
   private[graft] def buildSession(): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    sys.env.get("SPARK_GRAFT_CONF").foreach {
-      _.split(";").filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); builder.config(k, v)
-      }
-    }
-    val spark = builder.getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val conf = confOverlay(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+    val spark = Engine.session(master = s"local[$cpus]", shufflePartitions = cpus, conf = conf)
     spark.sparkContext.setLogLevel("WARN")
-    Engine.tune(spark)
     spark.range(1000000).selectExpr("sum(id)").collect()
     try { SparkEntry.entry(spark).count() } catch { case _: Throwable => () }
     (spark, sfDir)
   }
+
+  /** `k=v;k2=v2` as conf pairs (a value may hold `=`; empty entries are
+    * skipped). An entry without a key and `=` is rejected: dropping it
+    * would measure a configuration other than the one asked for.
+    */
+  private[graft] def confOverlay(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.filter(_.nonEmpty).map { kv =>
+      val i = kv.indexOf('=')
+      require(i > 0, s"SPARK_GRAFT_CONF entries must be key=value; got '$kv'")
+      kv.take(i) -> kv.drop(i + 1)
+    }
 
   def jstr(s: String): String = "\"" + s.flatMap {
     case '\\' => "\\\\"
@@ -53,13 +51,13 @@ object BenchSweep {
     String.format(java.util.Locale.ROOT, s"%.${digits}f", v.asInstanceOf[AnyRef])
 
   /** Host-instance marker shared by EVERY bench-artifact writer (Bench,
-    * ScaleBench, ContainmentDiag, HotBucketBench, PlanDiag): artifacts
-    * from different BOOTS of this box are not comparable at face value
-    * (r19: a mid-round reboot shifted every query 1.25-1.6×, proven on
-    * untouched control queries). Stamping the boot epoch lets any
-    * cross-artifact comparison detect an instance change mechanically
-    * instead of inferring it from uniform drift. -1 = platform can't
-    * say (no /proc/stat btime).
+    * ScaleBench, HotBucketBench, Profile): artifacts from different
+    * BOOTS of this box are not comparable at face value (r19: a
+    * mid-round reboot shifted every query 1.25-1.6×, proven on untouched
+    * control queries). Stamping the boot epoch lets any cross-artifact
+    * comparison detect an instance change mechanically instead of
+    * inferring it from uniform drift. -1 = platform can't say (no
+    * /proc/stat btime).
     */
   def bootEpoch: Long =
     try {
@@ -69,40 +67,4 @@ object BenchSweep {
         .getOrElse(-1L)
       finally src.close()
     } catch { case _: Throwable => -1L }
-
-  def main(args: Array[String]): Unit = {
-    val (spark, sfDir) = buildSession()
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-    val sweeps = (1 to passes).map { _ =>
-      ordered.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        val r =
-          try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
-          catch { case e: Throwable => Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        name -> r
-      }.toMap
-    }
-    val qjson = ordered.map { case (name, _) =>
-      val rs = sweeps.map(_(name))
-      val errs = rs.collect { case Left(e) => e }
-      val ts = rs.collect { case Right(t) => t }
-      val body =
-        if (ts.isEmpty) s"""{"error":${jstr(errs.head)}}"""
-        else {
-          val (mn, mx) = (ts.min, ts.max)
-          val spreadPct = if (mn > 0) (mx - mn) / mn * 100 else 0.0
-          s"""{"min":${num(mn, 4)},"max":${num(mx, 4)},"spread_pct":${num(spreadPct, 1)},"times":[${ts.map(num(_, 4)).mkString(",")}]}"""
-        }
-      jstr(name) + ":" + body
-    }.mkString("{", ",", "}")
-    val line = s"""{"metric":"sweep","passes":$passes,"queries":$qjson,"sf":"$sfDir"}"""
-    println(line)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_sweep.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-    catch { case _: Throwable => () }
-    spark.stop()
-  }
 }

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * Mirrors the reference's Spark conf (AQE + coalescePartitions + skewJoin,
   * Kryo, snappy — ref inventory_transform.py:46-56) and pins UTC so outputs
   * are oracle-comparable. Designed for cluster scale: nothing here assumes
-  * local mode except the default master.
+  * local mode; callers pass the master.
   */
 object Engine {
 
@@ -26,27 +26,30 @@ object Engine {
   val CodegenCacheEntries = 4096
 
   /** Builds (or returns) the process's session with the engine's confs,
-    * then applies [[tune]].
+    * then `conf` (set after them, so an entry there wins over the engine's
+    * builder conf of the same key), then applies [[tune]]'s runtime confs.
+    * Every session in this repository comes from here, the benchmark
+    * harness's included (`BenchSweep.buildSession`).
     *
     * The codegen cache size is a static conf and the cache is JVM-wide:
     * it is sized once, from the conf of the first session that generates
-    * code. A session the engine did not build (the driver harness's, or
-    * `getOrCreate` returning an existing one) keeps Spark's 100 entries;
-    * only [[tune]]'s runtime confs reach it. Such a session also keeps
-    * Hadoop's stock local filesystem, which forks a shell process per
-    * `chmod`, `readlink` and permission read; only the [[graft.store.Fs]]
-    * seam binds the fork-free one there.
+    * code. A session built elsewhere (or an existing one `getOrCreate`
+    * returns) keeps Spark's 100 entries and Hadoop's stock local
+    * filesystem, which forks a shell process per `chmod`, `readlink` and
+    * permission read; only [[tune]]'s runtime confs reach it, and only
+    * the [[graft.store.Fs]] seam binds the fork-free filesystem there.
     */
   def session(
       appName: String = "graft",
-      master: String = "local[32]",
-      shufflePartitions: Int = 32,
-      warehouseDir: Option[String] = None): SparkSession = {
+      master: String,
+      shufflePartitions: Int,
+      warehouseDir: Option[String] = None,
+      conf: Seq[(String, String)] = Nil): SparkSession = {
     val builder0 = SparkSession
       .builder()
       .master(master)
       .appName(appName)
-    val spark = warehouseDir.fold(builder0)(d => builder0.config("spark.sql.warehouse.dir", d))
+    val builder = warehouseDir.fold(builder0)(d => builder0.config("spark.sql.warehouse.dir", d))
       // SQL functions for the custom kernels + the dot-product fusion rule
       // (plans.GraftExtensions); external sessions opt in with the same conf
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
@@ -62,7 +65,7 @@ object Engine {
       // the local filesystem without a forked shell command per chmod,
       // readlink or permission read (graft.store.LocalFs)
       .config(graft.store.LocalFs.sparkConfs)
-      .getOrCreate()
+    val spark = conf.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }.getOrCreate()
     tune(spark)
     spark
   }
@@ -77,10 +80,11 @@ object Engine {
     */
   def clearCaches(spark: SparkSession): Unit = graft.store.SessionMemo.clearAll(spark)
 
-  /** Runtime SQL confs that are safe to set on a session we did not build
-    * (e.g. the driver harness's). Idempotent. These reach every session
-    * the engine reads through, but a session built elsewhere still has
-    * its own codegen cache size (see [[session]]).
+  /** Runtime SQL confs that are safe to set on a session the engine did
+    * not build (an external caller's, or one `getOrCreate` returned).
+    * Idempotent. These reach every session the engine reads through, but
+    * such a session keeps its own codegen cache size and filesystem (see
+    * [[session]]).
     */
   def tune(spark: SparkSession): Unit = {
     // The synthetic events table stores ts as parquet TIMESTAMP(NANOS),

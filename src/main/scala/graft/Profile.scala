@@ -15,21 +15,24 @@ import graft.llm.{CorpusSuffix, Dedup, Suffix, TextAnalysis}
 import graft.store.Checkpoints
 
 /** What a registered query planned and ran, one record per query: the
-  * executed plan's join and sort operators, the formatted plan, and the
-  * SparkListener totals of one steady-state run (jobs, stages, tasks,
-  * shuffle read/write, spill, executor run time) plus its per-job and
-  * per-stage lines. The listener sees EVERY job the query runs,
-  * including RDD-level checkpoint materializations that SQL plan dumps
-  * never show (the CC loop's per-round jobs, eager localCheckpoints), so
-  * exchange-removal claims are checkable as shuffle-byte deltas.
+  * executed plan's join and sort operators, the formatted plan, the row
+  * count and the SparkListener totals of one steady-state run (jobs,
+  * stages, tasks, shuffle read/write, spill, executor run and GC time)
+  * plus its per-job and per-stage lines, and for a query in
+  * [[corpusStats]] the corpus statistics its cost follows. The listener
+  * sees EVERY job the query runs, including RDD-level checkpoint
+  * materializations that SQL plan dumps never show (the CC loop's
+  * per-round jobs, eager localCheckpoints), so exchange-removal claims
+  * are checkable as shuffle-byte deltas.
   *
   * Usage: [SPARK_GRAFT_PROFILE_QUERY=q1,q2] [SPARK_GRAFT_SCALES=40,80]
   *        [SPARK_GRAFT_PROFILE_OUT=dir] sbt "runMain graft.Profile"
   * Without a query list every registered query is profiled. Each scale k
   * adds a `ScaleBench.ensureScaled` point, keyed `<q>_x<k>`. One JSON
-  * line goes to stdout; with an out dir it is also written to
-  * `profile.json` there, next to one formatted plan per record
-  * (`<q>[_x<k>].txt`). Compare two runs by giving them two dirs.
+  * line goes to stdout, with the JVM's max heap and the session's cores;
+  * with an out dir it is also written to `profile.json` there, next to
+  * one formatted plan per record (`<q>[_x<k>].txt`). Compare two runs by
+  * giving them two dirs.
   */
 object Profile {
 
@@ -64,13 +67,19 @@ object Profile {
         "doc_id", materializeRounds = false).orderBy(col("doc_id"), col("pos")), Nil)))
   }
 
+  /** Corpus statistics per query, added to its record as `corpus` and
+    * computed after the profiled pass, outside its totals.
+    */
+  private val corpusStats: Map[String, (SparkSession, String) => Seq[(String, Long)]] = Map(
+    "llm_dedup_containment" -> ((s, d) => Dedup.containmentCorpus(Tables.documents(s, d), "text")))
+
   /** Listener totals over one profiled run. It counts every job posted on
     * the context while attached, so the profiling loop must be the only
     * job source (ContextCleaner jobs are possible but byte-trivial).
     */
   private class Acc extends SparkListener {
     var stages, tasks = 0
-    var shufWrite, shufRead, spillMem, spillDisk, runTimeMs = 0L
+    var shufWrite, shufRead, spillMem, spillDisk, runTimeMs, gcMs = 0L
     val jobLines, stageLines = ArrayBuffer.empty[String]
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobLines += s"""{"id":${j.jobId},"stages":[${j.stageIds.mkString(",")}],""" +
@@ -85,6 +94,7 @@ object Profile {
       spillMem += m.memoryBytesSpilled
       spillDisk += m.diskBytesSpilled
       runTimeMs += m.executorRunTime
+      gcMs += m.jvmGCTime
       stageLines += s"""{"id":${s.stageInfo.stageId},"tasks":${s.stageInfo.numTasks},""" +
         s""""run_ms":${m.executorRunTime},"cpu_ms":${m.executorCpuTime / 1000000},""" +
         s""""shuffle_write":${m.shuffleWriteMetrics.bytesWritten},""" +
@@ -119,11 +129,11 @@ object Profile {
     val acc = new Acc
     sc.addSparkListener(acc)
     sc.setJobDescription(s"profile:$q")
-    val (df, sec) = try {
+    val (df, rows, sec) = try {
       val t0 = System.nanoTime()
       val df = query(spark, dir)
-      df.count()
-      (df, (System.nanoTime() - t0) / 1e9)
+      val rows = df.count()
+      (df, rows, (System.nanoTime() - t0) / 1e9)
     } finally {
       sc.setJobDescription(null)
       // listener events are posted async; drain before reading
@@ -134,11 +144,14 @@ object Profile {
       if (lazyForms.contains(q)) lazyPlan(spark, q, dir)
       else (df.queryExecution.explainString(FormattedMode), joinsAndSorts(df))
     planFile.foreach(Files.writeString(_, formatted))
+    val corpus = corpusStats.get(q).fold("")(_(spark, dir)
+      .map { case (k, v) => s"${jstr(k)}:$v" }.mkString(""","corpus":{""", ",", "}"))
     acc.synchronized {
-      s"""{"sec":${num(sec, 3)},"jobs":${acc.jobLines.size},"stages":${acc.stages},""" +
+      s"""{"sec":${num(sec, 3)},"rows":$rows,"jobs":${acc.jobLines.size},"stages":${acc.stages},""" +
         s""""tasks":${acc.tasks},"shuffle_write":${acc.shufWrite},""" +
         s""""shuffle_read":${acc.shufRead},"spill_mem":${acc.spillMem},""" +
         s""""spill_disk":${acc.spillDisk},"exec_run_ms":${acc.runTimeMs},""" +
+        s""""exec_gc_ms":${acc.gcMs}$corpus,""" +
         s""""joins_sorts":${joins.map(jstr).mkString("[", ",", "]")},""" +
         s""""job_detail":${acc.jobLines.mkString("[", ",", "]")},""" +
         s""""stage_detail":${acc.stageLines.mkString("[", ",", "]")}}"""
@@ -171,6 +184,8 @@ object Profile {
       }
     }
     val line = rows.mkString("{\"profile\":{", ",", "},") +
+      s""""heap_max_mb":${Runtime.getRuntime.maxMemory / 1048576},""" +
+      s""""cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""boot_epoch":${BenchSweep.bootEpoch},"sf":${jstr(sfDir)}}"""
     println(line)
     outDir.foreach(d => Files.writeString(d.resolve("profile.json"), line + "\n"))

@@ -1,20 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for a DuckDB compare (`scripts/check.py`).
+  * Runs on the same session as the timing mains
+  * (`BenchSweep.buildSession`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, _) = BenchSweep.buildSession()
     new java.io.File(outDir).mkdirs()
     // dev loop: SPARK_GRAFT_ONLY=q1,q2 dumps just those queries (the
     // driver never sets it; scripts/check.py compares dirs present)

@@ -784,6 +784,34 @@ object Dedup {
     (ccRound(edges, labels), Seq(edges, labels, p0))
   }
 
+  /** Shingle n and document-frequency cap of [[containmentPairs]]. */
+  val ContainmentN = 3
+  val ContainmentMaxDf = 64
+
+  /** The corpus statistics [[containmentPairs]]' cost follows at its
+    * default n and cap, from one aggregate over its df table (shingle →
+    * document frequency): posting rows (Σ df), shingle types, retained
+    * types (1 < df ≤ cap) and their Σ df² (the self-join's candidate
+    * mass), and the types and posting rows the cap drops (df > cap),
+    * keyed by those names. Tells a superlinear wall apart from a
+    * superlinear corpus.
+    */
+  def containmentCorpus(docs: DataFrame, textCol: String): Seq[(String, Long)] = {
+    val df = col("df")
+    val retained = df > 1 && df <= ContainmentMaxDf
+    val capped = df > ContainmentMaxDf
+    def total(c: Column, name: String) = coalesce(sum(c), lit(0L)).as(name)
+    val r = docs.select(explode(shingles(col(textCol), ContainmentN)).as("g"))
+      .groupBy(col("g")).agg(count(lit(1)).as("df"))
+      .agg(total(df, "posting_rows"), count(lit(1)).as("shingle_types"),
+        total(when(retained, 1L).otherwise(0L), "retained_types"),
+        total(when(retained, df * df).otherwise(0L), "sum_df2"),
+        total(when(capped, 1L).otherwise(0L), "capped_types"),
+        total(when(capped, df).otherwise(0L), "capped_rows"))
+      .head()
+    r.schema.fieldNames.toSeq.map(f => f -> r.getAs[Long](f))
+  }
+
   /** Asymmetric shingle containment: ordered pairs (a, b) where
     * |shingles(a) ∩ shingles(b)| / |shingles(a)| ≥ `minContainment` —
     * quote/subset detection, the near-dup regime Jaccard methods are
@@ -852,8 +880,8 @@ object Dedup {
   private[graft] val candEstCache = new graft.store.SessionMemo[String, Long](256)
 
   def containmentPairs(docs: DataFrame, textCol: String, idCol: String,
-                       n: Int = 3, minContainment: Double = 0.9,
-                       maxDf: Int = 64, overflowReps: Int = 0): DataFrame = {
+                       n: Int = ContainmentN, minContainment: Double = 0.9,
+                       maxDf: Int = ContainmentMaxDf, overflowReps: Int = 0): DataFrame = {
     // the shingle subtree (regex tokenization + n-gram assembly) feeds SIX
     // plan branches (self-join sides, per-doc stats, two verify sides);
     // without a materialization point each branch re-tokenizes the corpus.

@@ -10,8 +10,8 @@ import graft.llm.{CosineSim, DotProduct, DupTokenFrac, IntDotProduct, MinHashSig
 
 /** Catalyst integration, registered the standard way
   * (`spark.sql.extensions=graft.plans.GraftExtensions`, set by
-  * `Engine.session` and the Verify/Bench mains; any external session can
-  * opt in with the same conf):
+  * `Engine.session`, which builds every session here, the harness
+  * mains' included; any external session can opt in with the same conf):
   *
   *  - every custom codegen'd kernel becomes a plain SQL function
   *    (`graft_dot`, `graft_simhash`, …), so the pure-SQL surface reaches

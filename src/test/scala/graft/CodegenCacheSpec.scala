@@ -6,8 +6,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Child JVM entry for [[CodegenCacheSpec]]: the codegen class cache is
-  * JVM-wide and sized once, so only a fresh JVM whose first session is
-  * `Engine.session` shows the size the engine sets. Runs [[Plans]]
+  * JVM-wide and sized once, so only a fresh JVM shows the size its first
+  * session sets. The session is the harness mains' own
+  * (`BenchSweep.buildSession`, through `Engine.session`). Runs [[Plans]]
   * whole-stage plans that differ only in a literal (so each compiles its
   * own class), then the first plan again, and prints the compile counts
   * of both phases.
@@ -17,8 +18,7 @@ object CodegenCacheProbe {
   val Plans = 150
 
   def main(args: Array[String]): Unit = {
-    val spark = Engine.session(appName = "codegen-cache", master = "local[2]",
-      shufflePartitions = 2, warehouseDir = Some(Files.createTempDirectory("cgwh").toString))
+    val (spark, _) = BenchSweep.buildSession()
     def plan(i: Int): Long =
       spark.range(0, 1000, 1, 2).filter(col("id") % 1000 =!= lit(i)).count()
     def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -31,9 +31,10 @@ object CodegenCacheProbe {
   }
 }
 
-/** The engine's sessions keep their generated classes across passes:
-  * Spark's default 100-entry LRU evicted every class of a working set
-  * larger than that, so each JVM-warm pass recompiled all of it.
+/** The engine's sessions, the harness mains' included, keep their
+  * generated classes across passes: Spark's default 100-entry LRU
+  * evicted every class of a working set larger than that, so each
+  * JVM-warm pass recompiled all of it.
   */
 class CodegenCacheSpec extends SparkSpec {
   test("a plan re-run after more distinct plans than Spark's default cache holds does not recompile") {

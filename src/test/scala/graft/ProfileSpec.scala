@@ -7,12 +7,15 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, explode}
 import org.apache.spark.sql.graft.ListenerBridge
+
+import graft.llm.Dedup
 
 class ProfileSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-  private val recordKeys = Set("sec", "jobs", "stages", "tasks", "shuffle_write",
-    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "joins_sorts",
+  private val recordKeys = Set("sec", "rows", "jobs", "stages", "tasks", "shuffle_write",
+    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "exec_gc_ms", "joins_sorts",
     "job_detail", "stage_detail")
 
   private def parse(json: String): JsonNode = new ObjectMapper().readTree(json)
@@ -36,6 +39,24 @@ class ProfileSpec extends SparkSpec {
     assert(r.get("jobs").asInt >= 1)
     val joins = r.get("joins_sorts").elements.asScala.map(_.asText).toSeq
     assert(joins.exists(_.contains("ShuffledHashJoin")), s"lazy plan not shown: $joins")
+  }
+
+  test("the containment record's corpus statistics equal a direct document-frequency count") {
+    val q = "llm_dedup_containment"
+    val r = parse(Profile.record(spark, q, dir))
+    assert(r.fieldNames.asScala.toSet == recordKeys + "corpus")
+    assert(r.get("rows").asLong == SparkEntry.queries(q)(spark, dir).count())
+    val dfs = Tables.documents(spark, dir)
+      .select(explode(Dedup.shingles(col("text"), Dedup.ContainmentN)).as("g"))
+      .groupBy("g").count().collect().map(_.getLong(1)).toSeq
+    val (kept, capped) = (dfs.filter(d => d > 1 && d <= Dedup.ContainmentMaxDf),
+      dfs.filter(_ > Dedup.ContainmentMaxDf))
+    val want = Map("posting_rows" -> dfs.sum, "shingle_types" -> dfs.size.toLong,
+      "retained_types" -> kept.size.toLong, "sum_df2" -> kept.map(d => d * d).sum,
+      "capped_types" -> capped.size.toLong, "capped_rows" -> capped.sum)
+    val corpus = r.get("corpus")
+    assert(corpus.fieldNames.asScala.map(k => k -> corpus.get(k).asLong).toMap == want)
+    assert(want("sum_df2") > 0)
   }
 
   test("every lazy form releases the blocks it pins once its plan is read") {
