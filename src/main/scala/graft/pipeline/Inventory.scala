@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.store.Upsert
@@ -16,9 +15,9 @@ import graft.validate.{Rule, Validators}
   * whole-file quarantine) are in `inventoryRules` and unit-tested on
   * FIXTURES.md-shaped JSONL.
   *
-  * Scale: latest-per-key dedup is a single window shuffle on the key; the
-  * replace-upsert is an anti join + union on the same key partitioning, so
-  * AQE can co-locate both sides and skew-handle hot keys.
+  * Scale: latest-per-key dedup is one aggregate on the key with map-side
+  * partial aggregation; `mergeLatest` folds the replace-upsert into the
+  * same aggregate, so a batch write pays one exchange.
   */
 object Inventory {
 
@@ -43,10 +42,38 @@ object Inventory {
     (1 until row.length).forall(i => row.getLong(i) == 0L)
   }
 
-  /** J2 — latest record per key (ref inventory_transform.py:483-484). */
+  /** J2 — latest record per key (ref inventory_transform.py:483-484): one
+    * keyed aggregate, argmax of the whole row by `order` (descending
+    * priority) and then by every remaining column, so ties on `order`
+    * resolve to the same row whatever the input order or partitioning.
+    * `max_by` keeps map-side partial aggregation, so one candidate per
+    * key per input split crosses the one exchange (its struct buffer
+    * plans as a sort-based aggregate, sorting by key on each side); a
+    * row_number window would shuffle every row and pick among ties by
+    * arrival order. A null `order` value ranks below any other, as in a
+    * descending window's nulls-last. Every column must be orderable.
+    */
   def latestPerKey(df: DataFrame, key: String, order: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(col(key)).orderBy(order.map(c => col(c).desc): _*)
-    df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1).drop("rn")
+    val rest = df.columns.filterNot(c => c == key || order.contains(c))
+    df.groupBy(col(key))
+      .agg(max_by(struct(df.columns.map(col).toIndexedSeq: _*),
+        struct((order ++ rest).map(col): _*)).as("r"))
+      .select("r.*")
+  }
+
+  /** J2 + J4 in one keyed aggregate: the latest `batch` row per key
+    * replaces that key's `state` row, and keys absent from the batch keep
+    * theirs. State rows (`_src` 0) and batch rows (`_src` 1) go through
+    * one `latestPerKey` ordered by source first, so any batch row beats
+    * the state row of its key whatever its `order` values, as
+    * `Upsert.replaceOnMatch` over a deduplicated batch does, and the
+    * write pays one exchange instead of a dedup's plus an anti join's.
+    * `state` holds one row per key and `batch`'s columns.
+    */
+  def mergeLatest(state: Option[DataFrame], batch: DataFrame, key: String,
+                  order: Seq[String]): DataFrame = {
+    val sources = state.map(_.withColumn("_src", lit(0))).toSeq :+ batch.withColumn("_src", lit(1))
+    latestPerKey(sources.reduce(_ unionByName _), key, "_src" +: order).drop("_src")
   }
 
   // ---- registered queries over the synthetic tables -----------------------

@@ -46,12 +46,6 @@ object Orchestrate {
   private def baseName(p: String): String =
     graft.store.FileLedger.basename(p)
 
-  /** One-job file gate: per-file rule verdicts from a single aggregate over
-    * the combined scan, grouped by input filename. Returns the basenames of
-    * violating files. Zero-row files produce no group — and no violations —
-    * so a header-only CSV / empty JSONL is valid-but-empty instead of the
-    * former NPE (null global sum) that aborted the whole batch.
-    */
   /** input_file_name() returns a URI-encoded path ("my data" →
     * "my%20data"); decode percent escapes only (NOT URLDecoder, which
     * also corrupts legitimate '+' into spaces) so names compare equal to
@@ -72,13 +66,14 @@ object Orchestrate {
       new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
     }
 
-  private def violatingFiles(df: DataFrame, rules: Seq[Rule]): Set[String] = {
-    val fileCol = substring_index(input_file_name(), "/", -1)
-    Validators.fileSummaries(df, fileCol, rules)
-      .collect()
-      .filter(row => (2 until row.length).exists(i => row.getLong(i) > 0L))
-      .map(row => percentDecode(row.getString(0))).toSet
-  }
+  /** One-job file gate: the basenames of the files holding a row that
+    * violates any rule (`Validators.violatingKeys` over the combined scan,
+    * keyed by input file name; no exchange). A zero-row file has no
+    * violating row, so a header-only CSV / empty JSONL is valid-but-empty.
+    */
+  private def violatingFiles(df: DataFrame, rules: Seq[Rule]): Set[String] =
+    Validators.violatingKeys(df, substring_index(input_file_name(), "/", -1), rules)
+      .map(percentDecode)
 
   /** POS batch run (§3.1): file-level validate (whole file quarantined on
     * any violation), Choice on surviving files, transform + KPI additive
@@ -105,7 +100,7 @@ object Orchestrate {
         notify("all files quarantined")
         return RunReport(0, badName.size, transformed = false, None)
       }
-      // file gate (ONE job over all files): required fields non-null per row
+      // file gate, one job over all files: required fields non-null per row
       val required = Seq("transaction_id", "store_id", "product_id", "quantity", "revenue", "timestamp")
       val rules = required.map(c => Rule(c, col(c).isNotNull))
       val bad = violatingFiles(Pos.readCsv(spark, named), rules)
@@ -142,9 +137,10 @@ object Orchestrate {
   }
 
   /** Inventory batch run (SURVEY.md §2 P8/J2/J4; ref inventory ASL):
-    * whole-file business-rule gate → latest-per-key dedup → replace-on-match
-    * upsert into the state table → archive. `nowEpoch` is injected so the
-    * not-too-future rule is replayable.
+    * whole-file business-rule gate → latest-per-key dedup and
+    * replace-on-match upsert into the state table (one keyed aggregate) →
+    * archive. `nowEpoch` is injected so the not-too-future rule is
+    * replayable.
     */
   def runInventoryBatch(
       spark: SparkSession,
@@ -156,9 +152,10 @@ object Orchestrate {
       val files = graft.store.Fs.list(landingDir)
         .filter(e => e.isFile && e.name.endsWith(".jsonl")).map(_.path)
       if (files.isEmpty) { notify("no input files"); return RunReport(0, 0, transformed = false, None) }
-      // One job for all file gates. Required-field rules subsume the old
-      // per-file missingColumns check: a schema'd JSON read always exposes
-      // the declared columns, and a record missing a field surfaces as null.
+      // file gate, one job over all files. Required-field rules subsume the
+      // old per-file missingColumns check: a schema'd JSON read always
+      // exposes the declared columns, and a record missing a field
+      // surfaces as null.
       val requiredRules = Seq("inventory_id", "product_id", "warehouse_id", "stock_level", "last_updated")
         .map(c => Rule(s"missing_$c", col(c).isNotNull))
       val bad = violatingFiles(
@@ -168,7 +165,6 @@ object Orchestrate {
       Lake.moveFiles(quarantined, Lake.zone(lakeRoot, Lake.Zones.Rejected))
       if (valid.isEmpty) { notify("all files quarantined"); return RunReport(0, quarantined.size, transformed = false, None) }
       val raw = spark.read.schema(graft.schema.Schemas.inventory).json(valid: _*)
-      val deduped = Inventory.latestPerKey(raw, "inventory_id", Seq("last_updated"))
       // managed merge target in the versioned layout: downstream readers
       // (and the next run's own read-back) resolve the CURRENT pointer,
       // so a reader concurrent with the overwrite sees the old or new
@@ -178,13 +174,14 @@ object Orchestrate {
       // run would silently abandon previously merged state.
       val statePath = s"$lakeRoot/inventory_state"
       graft.store.Versioned.adoptLegacy(statePath)
-      // the state was written from `deduped`'s projection, so its schema
-      // pins the snapshot read (no footer-inference job)
-      val merged =
+      // dedup and replace-on-match in one keyed aggregate. The state was
+      // written from `raw`'s projection, so its schema pins the snapshot
+      // read (no footer-inference job).
+      val state =
         if (graft.store.Versioned.exists(statePath))
-          Upsert.replaceOnMatch(graft.store.Versioned.read(spark, statePath, deduped.schema),
-            deduped, Seq("inventory_id"))
-        else deduped
+          Some(graft.store.Versioned.read(spark, statePath, raw.schema))
+        else None
+      val merged = Inventory.mergeLatest(state, raw, "inventory_id", Seq("last_updated"))
       // no staging checkpoint needed: the plan reads snapshot v_n and
       // writes v_n+1 — distinct paths, so Spark's self-read guard is moot
       withRetry() { graft.store.Versioned.overwrite(merged, statePath) }

@@ -24,11 +24,20 @@ object Pos {
   /** Ref transfom_pos.py:30-38 — declared CSV schema (never inferred). */
   val posSchema: StructType = graft.schema.Schemas.pos
 
-  /** Ref transform (transfom_pos.py:112-129): epoch→ts+date, dedup, KPI. */
+  /** Ref transform (transfom_pos.py:112-129): epoch→ts+date, dedup, KPI.
+    *
+    * ONE exchange serves the dedup and the KPI: duplicate rows share their
+    * (product_id, date), so hash partitioning on that KPI key clusters
+    * every duplicate together and the full-row dropDuplicates runs
+    * partition-locally; the KPI groupBy on the same key needs no exchange
+    * of its own. A dedup left to plan its own exchange would hash on the
+    * full row, and the KPI would pay a second one.
+    */
   def transform(raw: DataFrame): (DataFrame, DataFrame) = {
     val curated = raw
       .withColumn("ts", Cleansing.epochToTs(col("timestamp")))
       .withColumn("date", to_date(col("ts")))
+      .repartition(col("product_id"), col("date"))
       .dropDuplicates()
     val kpi = curated
       .groupBy(col("product_id"), col("date"))

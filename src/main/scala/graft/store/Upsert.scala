@@ -21,6 +21,10 @@ object Upsert {
     * whenMatchedUpdateAll / whenNotMatchedInsertAll):
     * rows of `existing` whose key appears in `updates` are replaced.
     * `updates` must already be deduplicated per key (latest-wins — J2).
+    * Its callers are the registered J4 query (`Inventory.upsertReplace`)
+    * and tests; the inventory batch run folds the same rule into its
+    * latest-per-key aggregate instead (`Inventory.mergeLatest`), which
+    * saves the anti join's exchanges.
     */
   def replaceOnMatch(existing: DataFrame, updates: DataFrame, keys: Seq[String]): DataFrame =
     existing.join(updates.select(keys.map(col): _*).distinct(), keys, "left_anti")

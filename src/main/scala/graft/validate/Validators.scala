@@ -1,6 +1,6 @@
 package graft.validate
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 /** A named validation rule: `pass` is true for rows that satisfy it. */
@@ -13,7 +13,8 @@ final case class Rule(name: String, pass: Column)
   * batch ones — any violation quarantines the whole file
   * (inventory_validate.py:238-276, validate.py:62-81). Both modes are
   * single-pass column expressions: the split is two filters over one scan
-  * (Catalyst reuses the cached plan), the file summary is one aggregate.
+  * (Catalyst reuses the cached plan), the file summary is one aggregate,
+  * and the per-file gate is one filtered scan.
   */
 object Validators {
 
@@ -51,16 +52,21 @@ object Validators {
     df.agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Per-file violation summaries in ONE job: grouping the combined scan by
-    * `fileCol` (derived from input_file_name) yields every file's verdict
-    * from a single aggregate. The reference validates file-by-file (pandas
-    * per object); a driver loop issuing one Spark job per file serializes
-    * at thousands of files, so the batch orchestrators use this instead.
+  /** The distinct values of `key` over the rows that violate any rule, in
+    * one job with no exchange: the violating rows are filtered in the
+    * scan, each partition dedupes its own keys, and the driver unions the
+    * partitions' sets. The result is bounded by keys × partitions, not by
+    * rows. The batch orchestrators pass the input file name as `key`, so
+    * one scan of the whole batch yields every file's verdict; a zero-row
+    * file has no violating row and so passes (valid but empty). A
+    * `groupBy(key)` summary would pay a shuffle map stage, which under
+    * AQE is its own job.
     */
-  def fileSummaries(df: DataFrame, fileCol: Column, rules: Seq[Rule]): DataFrame = {
-    val aggs = count(lit(1)).as("total_rows") +:
-      rules.map(r => sum(when(!coalesce(r.pass, lit(false)), 1).otherwise(0)).as(s"viol_${r.name}"))
-    df.groupBy(fileCol.as("file")).agg(aggs.head, aggs.tail: _*)
+  def violatingKeys(df: DataFrame, key: Column, rules: Seq[Rule]): Set[String] = {
+    val allPass = rules.map(r => coalesce(r.pass, lit(false))).reduce(_ && _)
+    df.filter(!allPass).select(key).as(Encoders.STRING)
+      .mapPartitions(_.toSet.iterator)(Encoders.STRING)
+      .collect().toSet
   }
 
   /** P6: file-level required-column presence. Returns missing column names. */

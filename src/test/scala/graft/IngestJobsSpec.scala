@@ -21,10 +21,11 @@ class IngestJobsSpec extends SparkSpec {
   import spark.implicits._
 
   /** One job: its call site (the action that started its SQL execution,
-    * else its final stage's call site) and whether it ran inside a SQL
-    * execution at all.
+    * else its final stage's call site), whether it ran inside a SQL
+    * execution at all, and its stage count (more than one: the job ran or
+    * skipped a shuffle map stage).
     */
-  private case class Job(site: String, sql: Boolean)
+  private case class Job(site: String, sql: Boolean, stages: Int)
 
   private val tagKey = "graft.test.jobs"
   private val tagSeq = new AtomicLong()
@@ -46,7 +47,7 @@ class IngestJobsSpec extends SparkSpec {
           val exec = props.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong)
           val site = exec.flatMap(id => Option(sites.get(id))).getOrElse(
             if (e.stageInfos.isEmpty) "" else e.stageInfos.maxBy(_.stageId).name)
-          jobs.synchronized(jobs += Job(site, exec.isDefined))
+          jobs.synchronized(jobs += Job(site, exec.isDefined, e.stageInfos.size))
         }
       }
     }
@@ -65,7 +66,7 @@ class IngestJobsSpec extends SparkSpec {
 
   private val posHeader = "transaction_id,store_id,product_id,quantity,revenue,discount_applied,timestamp\n"
 
-  test("POS batch: a fresh date commits in ≤ 7 jobs with no write-preparation job; the same date merges") {
+  test("POS batch: a fresh date commits in ≤ 5 jobs with no write-preparation job; the same date merges") {
     val root = Files.createTempDirectory("ingest_jobs_pos").toString
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     val lake = s"$root/lake"
@@ -73,7 +74,10 @@ class IngestJobsSpec extends SparkSpec {
       "T1,101,2001,2,50.5,0.1,1721033100.0\nT2,102,2001,3,75.0,,1721033200.0\nT3,101,2002,1,9.5,,1721033300.0\n")
     val (r1, fresh) = jobsOf(Orchestrate.runPosBatch(spark, landing, lake))
     assert(r1.transformed && r1.error.isEmpty, r1.toString)
-    assert(fresh.size <= 7, fresh.mkString("\n"))
+    assert(fresh.size <= 5, fresh.mkString("\n"))
+    // the file gate: one job, no shuffle stage
+    val gate = fresh.filter(_.site.startsWith("collect at Validators"))
+    assert(gate.size == 1 && gate.head.stages == 1, fresh.mkString("\n"))
     val prep = fresh.map(_.site).filter(s =>
       s.startsWith("isEmpty at") || s.startsWith("localCheckpoint at") || s.startsWith("collect at Upsert"))
     assert(prep.isEmpty, prep.mkString("\n"))
@@ -89,7 +93,7 @@ class IngestJobsSpec extends SparkSpec {
     val (r2, merged) = jobsOf(Orchestrate.runPosBatch(spark, landing, lake))
     assert(r2.transformed && r2.error.isEmpty, r2.toString)
     assert(merged.size > fresh.size, "the same-date batch did not take the merge path")
-    assert(merged.size <= 9, merged.mkString("\n"))
+    assert(merged.size <= 7, merged.mkString("\n"))
     val mergePrep = merged.map(_.site).filter(s =>
       s.startsWith("isEmpty at") || s.startsWith("localCheckpoint at") || s.startsWith("collect at Upsert"))
     assert(mergePrep.isEmpty, mergePrep.mkString("\n"))
@@ -98,7 +102,7 @@ class IngestJobsSpec extends SparkSpec {
     assert(!Files.exists(Paths.get(s"$lake/kpi/_staging")))
   }
 
-  test("inventory batch: the second run reads the state snapshot without a footer-inference job") {
+  test("inventory batch: the second run merges in ≤ 3 jobs, without a footer-inference job") {
     val root = Files.createTempDirectory("ingest_jobs_inv").toString
     val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
     val now = 1697059200.0
@@ -115,6 +119,8 @@ class IngestJobsSpec extends SparkSpec {
     // other Versioned job is part of the overwrite's write
     val inference = jobs.filter(j => !j.sql && j.site.contains("at Versioned.scala"))
     assert(inference.isEmpty, jobs.mkString("\n"))
+    // the gate, the merge aggregate's one exchange, the write
+    assert(jobs.size <= 3, jobs.mkString("\n"))
     val state = Versioned.read(spark, s"$root/lake/inventory_state")
       .select("inventory_id", "stock_level").as[(Int, Int)].collect().toMap
     assert(state == Map(1 -> 70, 2 -> 5, 4 -> 7))

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import graft.pipeline.{Crm, Orchestrate}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import graft.pipeline.{Crm, Inventory, Orchestrate}
+import graft.store.Upsert
 
-class InventoryOrchestrateSpec extends SparkSpec {
+class InventoryOrchestrateSpec extends SparkSpec with PropertyCheck {
   import spark.implicits._
 
   test("inventory run: file gate, latest-wins dedup, replace upsert across two batches") {
@@ -35,6 +40,60 @@ class InventoryOrchestrateSpec extends SparkSpec {
     val state2 = graft.store.Versioned.read(spark, s"$root/lake/inventory_state")
       .select("inventory_id", "stock_level").as[(Int, Int)].collect().toMap
     assert(state2 == Map(1 -> 70, 2 -> 5, 4 -> 7)) // replaced on match, inserted new
+  }
+
+  test("inventory run: a batch row replaces its state row even when older; absent keys keep theirs") {
+    val root = Files.createTempDirectory("inv_older").toString
+    val landing = s"$root/landing"; Files.createDirectories(Paths.get(landing))
+    val now = 1697059200.0
+    def land(name: String, rows: (Int, Int, Double)*): Unit =
+      Files.writeString(Paths.get(s"$landing/$name"), rows.map { case (id, stock, ts) =>
+        s"""{"inventory_id": $id, "product_id": ${100 + id}, "warehouse_id": 201, "stock_level": $stock, "restock_threshold": 2, "last_updated": $ts}"""
+      }.mkString("", "\n", "\n"))
+    land("inv_1.jsonl", (1, 100, now), (2, 5, now), (3, 9, now))
+    assert(Orchestrate.runInventoryBatch(spark, landing, s"$root/lake", now).transformed)
+    // key 1 arrives with a last_updated an hour before its state row's
+    land("inv_2.jsonl", (1, 70, now - 3600), (1, 60, now - 7200), (4, 7, now))
+    assert(Orchestrate.runInventoryBatch(spark, landing, s"$root/lake", now).transformed)
+    val state = graft.store.Versioned.read(spark, s"$root/lake/inventory_state")
+      .select("inventory_id", "stock_level", "last_updated").as[(Int, Int, Double)].collect()
+    assert(state.map(r => r._1 -> r._2).toMap == Map(1 -> 70, 2 -> 5, 3 -> 9, 4 -> 7))
+    assert(state.find(_._1 == 1).get._3 == now - 3600)
+  }
+
+  private def invRows(rows: Seq[(Int, Int, Double)]): DataFrame =
+    rows.toDF("inventory_id", "stock_level", "last_updated")
+
+  test("latestPerKey: tied order values pick one winner under any input order and partition count") {
+    val rows = Seq((1, 10, 5.0), (1, 30, 5.0), (1, 20, 5.0), (1, 99, 4.0),
+      (2, 7, 1.0), (2, 3, 1.0), (3, 1, 2.0))
+    def winners(in: Seq[(Int, Int, Double)], parts: Int) =
+      Inventory.latestPerKey(invRows(in).repartition(parts), "inventory_id", Seq("last_updated"))
+        .as[(Int, Int, Double)].collect().toSet
+    val expected = Set((1, 30, 5.0), (2, 7, 1.0), (3, 1, 2.0))
+    for (seed <- 1 to 4; parts <- Seq(1, 3, 7))
+      assert(winners(new scala.util.Random(seed).shuffle(rows), parts) == expected, s"seed $seed, $parts partitions")
+  }
+
+  test("property: mergeLatest ≡ window latest-per-key + replaceOnMatch on tie-free batches") {
+    // the row_number window and anti-join merge this aggregate replaced
+    def windowLatest(df: DataFrame): DataFrame =
+      df.withColumn("rn", row_number().over(
+          Window.partitionBy($"inventory_id").orderBy($"last_updated".desc)))
+        .filter($"rn" === 1).drop("rn")
+    val row = Gen.zip(Gen.chooseNum(0, 6), Gen.chooseNum(0, 100), Gen.chooseNum(0, 50).map(_.toDouble))
+    forAll(Gen.listOfN(8, row), Gen.listOfN(10, row)) { (st, up) =>
+      val state = invRows(st.distinctBy(_._1))
+      // tie-free: no two batch rows of one key share a last_updated
+      val batch = invRows(up.distinctBy(r => (r._1, r._3)))
+      val got = Inventory.mergeLatest(Some(state), batch, "inventory_id", Seq("last_updated"))
+        .as[(Int, Int, Double)].collect().sorted
+      val want = Upsert.replaceOnMatch(state, windowLatest(batch), Seq("inventory_id"))
+        .as[(Int, Int, Double)].collect().sorted
+      assert(got.toSeq == want.toSeq)
+      assert(Inventory.mergeLatest(None, batch, "inventory_id", Seq("last_updated"))
+        .as[(Int, Int, Double)].collect().sorted.toSeq == windowLatest(batch).as[(Int, Int, Double)].collect().sorted.toSeq)
+    }
   }
 
   test("CRM alert evaluator fires at and above threshold only") {

@@ -39,6 +39,15 @@ class ValidatorsSpec extends SparkSpec with PropertyCheck {
     assert(row.getLong(2) == 2) // blank_name: " ", null
   }
 
+  test("property: violatingKeys ≡ the keys of the rows split rejects, under any partitioning") {
+    val rowGen = Gen.zip(Gen.oneOf("f1", "f2", "f3", "f4"), Gen.chooseNum(-2, 5), Gen.oneOf("a", "", null))
+    forAll(Gen.listOfN(20, rowGen), Gen.chooseNum(1, 5)) { (rows, parts) =>
+      val df = rows.toDF("file", "id", "name").repartition(parts)
+      val want = Validators.split(df, rules)._2.select("file").as[String].collect().toSet
+      assert(Validators.violatingKeys(df, $"file", rules) == want)
+    }
+  }
+
   test("missing/extra column detection (P2/P6)") {
     val df = Seq((1, "a")).toDF("id", "extra1")
     assert(Validators.missingColumns(df, Seq("id", "name")) == Seq("name"))
