@@ -6,7 +6,10 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.graft.ListenerBridge
 
@@ -17,13 +20,13 @@ import graft.store.Checkpoints
 /** What a registered query planned and ran, one record per query: the
   * executed plan's join and sort operators, the formatted plan, the row
   * count and the SparkListener totals of one steady-state run (jobs,
-  * stages, tasks, shuffle read/write, spill, executor run and GC time)
-  * plus its per-job and per-stage lines, and for a query in
-  * [[corpusStats]] the corpus statistics its cost follows. The listener
-  * sees EVERY job the query runs, including RDD-level checkpoint
-  * materializations that SQL plan dumps never show (the CC loop's
-  * per-round jobs, eager localCheckpoints), so exchange-removal claims
-  * are checkable as shuffle-byte deltas.
+  * stages, tasks, shuffle read/write, spill, executor run and GC time,
+  * exchanges run and reused) plus its per-job and per-stage lines, and
+  * for a query in [[corpusStats]] the corpus statistics its cost
+  * follows. The listener sees EVERY job the query runs, including
+  * RDD-level checkpoint materializations that SQL plan dumps never show
+  * (the CC loop's per-round jobs, eager localCheckpoints), so
+  * exchange-removal claims are checkable as shuffle-byte deltas.
   *
   * Usage: [SPARK_GRAFT_PROFILE_QUERY=q1,q2] [SPARK_GRAFT_SCALES=40,80]
   *        [SPARK_GRAFT_PROFILE_OUT=dir] sbt "runMain graft.Profile"
@@ -75,12 +78,21 @@ object Profile {
 
   /** Listener totals over one profiled run. It counts every job posted on
     * the context while attached, so the profiling loop must be the only
-    * job source (ContextCleaner jobs are possible but byte-trivial).
+    * job source (ContextCleaner jobs are possible but byte-trivial). As a
+    * query-execution listener it also sums the exchanges of every SQL
+    * action the run completes ([[exchangeCounts]]).
     */
-  private class Acc extends SparkListener {
-    var stages, tasks = 0
+  private class Acc extends SparkListener with QueryExecutionListener {
+    var stages, tasks, exchanges, reusedExchanges = 0
     var shufWrite, shufRead, spillMem, spillDisk, runTimeMs, gcMs = 0L
     val jobLines, stageLines = ArrayBuffer.empty[String]
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+      synchronized {
+        val (e, r) = exchangeCounts(qe.executedPlan)
+        exchanges += e
+        reusedExchanges += r
+      }
+    override def onFailure(funcName: String, qe: QueryExecution, error: Exception): Unit = ()
     override def onJobStart(j: SparkListenerJobStart): Unit = synchronized {
       jobLines += s"""{"id":${j.jobId},"stages":[${j.stageIds.mkString(",")}],""" +
         s""""callsite":${jstr(Option(j.properties.getProperty("callSite.short")).getOrElse("?"))}}"""
@@ -101,6 +113,17 @@ object Profile {
         s""""rdds":${jstr(s.stageInfo.rddInfos.map(_.name).mkString("|").take(150))}}"""
     }
   }
+
+  /** (exchanges, reused exchanges) of an executed plan: under AQE the
+    * final plan, descending into each query stage's own plan and into
+    * subqueries, so every exchange that ran is counted once and every
+    * stage served from another stage's output counts as reused.
+    */
+  private[graft] def exchangeCounts(plan: SparkPlan): (Int, Int) =
+    (PlanWalk.collectWithSubqueries(plan) { case e: Exchange => e }.size,
+      PlanWalk.collectWithSubqueries(plan) { case r: ReusedExchangeExec => r }.size)
+
+  private object PlanWalk extends AdaptiveSparkPlanHelper
 
   /** The executed plan's join and sort operator lines. */
   private def joinsAndSorts(df: DataFrame): Seq[String] =
@@ -128,6 +151,7 @@ object Profile {
     val sc = spark.sparkContext
     val acc = new Acc
     sc.addSparkListener(acc)
+    spark.listenerManager.register(acc)
     sc.setJobDescription(s"profile:$q")
     val (df, rows, sec) = try {
       val t0 = System.nanoTime()
@@ -138,6 +162,7 @@ object Profile {
       sc.setJobDescription(null)
       // listener events are posted async; drain before reading
       ListenerBridge.drain(sc)
+      spark.listenerManager.unregister(acc)
       sc.removeSparkListener(acc)
     }
     val (formatted, joins) =
@@ -151,7 +176,8 @@ object Profile {
         s""""tasks":${acc.tasks},"shuffle_write":${acc.shufWrite},""" +
         s""""shuffle_read":${acc.shufRead},"spill_mem":${acc.spillMem},""" +
         s""""spill_disk":${acc.spillDisk},"exec_run_ms":${acc.runTimeMs},""" +
-        s""""exec_gc_ms":${acc.gcMs}$corpus,""" +
+        s""""exec_gc_ms":${acc.gcMs},"exchanges":${acc.exchanges},""" +
+        s""""reused_exchanges":${acc.reusedExchanges}$corpus,""" +
         s""""joins_sorts":${joins.map(jstr).mkString("[", ",", "]")},""" +
         s""""job_detail":${acc.jobLines.mkString("[", ",", "]")},""" +
         s""""stage_detail":${acc.stageLines.mkString("[", ",", "]")}}"""

@@ -1,13 +1,23 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver's synthetic tables (TESTDATA.md).
   *
-  * Parquet is self-describing so no schema inference happens in the hot
-  * path; the one normalization applied is the events.ts column, which the
-  * driver has shipped under different physical types across rounds
+  * Each read takes its schema from one parquet footer on the driver
+  * ([[footerSchema]]), so a read starts no Spark job; a plain
+  * `spark.read.parquet` runs one distributed schema job per read even
+  * when it touches a single footer. The one normalization applied is
+  * the events.ts column, which the driver has shipped under different
+  * physical types across rounds
   * (TIMESTAMP(NANOS) read as Long nanos; timestamp[us] read as
   * TIMESTAMP_NTZ). Both normalize to session-zone TimestampType micros,
   * which with the UTC session zone is exactly DuckDB's
@@ -19,7 +29,41 @@ object Tables {
 
   def read(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     Engine.tune(spark)
-    spark.read.parquet(path(sfDir, name))
+    val p = path(sfDir, name)
+    footerSchema(spark, p).fold(spark.read.parquet(p))(spark.read.schema(_).parquet(p))
+  }
+
+  /** The schema `spark.read.parquet(path)` would infer, read on the driver
+    * from the footer of `path` itself (a file) or of the first data file
+    * directly under it (by name), through Spark's own footer conversion:
+    * the Spark row-metadata key and the session's parquet confs
+    * (`nanosAsLong` included) apply as in inference. None — so the caller
+    * lets Spark infer — when schema merging is on, when the path is
+    * missing, or when the directory holds no data file, a subdirectory
+    * (partition columns) or a summary file (which inference would read
+    * first). No cache: every read sees the files as they are.
+    */
+  private[graft] def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val sqlConf = spark.sessionState.conf
+    if (sqlConf.isParquetSchemaMergingEnabled) return None
+    def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    val dataFile: Option[String] =
+      if (graft.store.Fs.isFile(path)) Some(path)
+      else {
+        val visible = graft.store.Fs.list(path).filter { e =>
+          !(e.name.startsWith(".") || e.name.startsWith("_")) || summary(e.name)
+        }
+        if (visible.exists(e => e.isDir || summary(e.name))) None
+        else visible.sortBy(_.name).headOption.map(_.path)
+      }
+    dataFile.map { f =>
+      val file = new Path(f)
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromPath(file, spark.sessionState.newHadoopConf()),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(file, meta),
+        new ParquetToSparkSchemaConverter(sqlConf))
+    }
   }
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = read(spark, sfDir, "lineitem")

@@ -77,15 +77,70 @@ object Dedup {
     df.groupBy(sha2(col(textCol), 256).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
+  /** (id, sig) rows: each doc's MinHash signature. */
+  private def minhashSigs(df: DataFrame, textCol: String, idCol: String,
+                          shingleN: Int, numHashes: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+      minhashSignature(tokens(col(textCol)), shingleN, numHashes).as("sig"))
+
+  /** (id, band, bucket) rows from an (id, sig) frame: one row per band of
+    * each signature (MinHashBands).
+    */
+  private def bandsOf(sigs: DataFrame, bands: Int): DataFrame =
+    sigs.select(col("id"), posexplode(VectorExprs.minhashBands(col("sig"), bands)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bucket")
+
   /** (id, band, bucket) rows of the banded MinHash-LSH index — the frame
     * both the pair join and [[minhashCandidateStats]] run over.
     */
   private[graft] def minhashBanded(df: DataFrame, textCol: String, idCol: String,
                                    shingleN: Int, numHashes: Int, bands: Int): DataFrame =
-    df.select(col(idCol).as("id"),
-        posexplode(VectorExprs.minhashBands(tokens(col(textCol)), shingleN, numHashes, bands)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    bandsOf(minhashSigs(df, textCol, idCol, shingleN, numHashes), bands)
+
+  /** (id_a < id_b) pairs sharing a kept (band, bucket) of `banded`, one
+    * row per shared band. Degenerate-bucket cap: corpora with
+    * globally-common min-shingles put thousands of docs into one (band,
+    * bucket), making the self-join quadratic in that bucket for pure
+    * false-positive mass. Oversized buckets carry no near-dup signal (a
+    * true pair still collides in its other bands), so they are dropped;
+    * singleton buckets produce no pairs.
+    *
+    * The size gate is a groupBy count + a shuffle_hash left-semi join:
+    * the count partial-aggregates map-side, so a hot bucket crosses its
+    * exchange as one row per task. A window count measured one job
+    * cheaper, but it sorts and buffers a whole hot bucket in one task
+    * before the cap drops it. The semi join's output stays hash-
+    * partitioned by (band, bucket), so the self-join over it adds no
+    * exchange: in the executed AQE plan its right side is the same two
+    * query stages as its left (`ReusedExchange`), while the static plan
+    * plans them twice.
+    */
+  private def inBucketPairs(banded: DataFrame, maxBucket: Int): DataFrame = {
+    val usefulBuckets = banded
+      .groupBy(col("band"), col("bucket"))
+      .agg(count(lit(1)).as("sz"))
+      .filter(col("sz") > 1 && col("sz") <= maxBucket)
+      .select(col("band"), col("bucket"))
+    // shuffle_hash on the bucket-list semi too (round 19): PlanDiag
+    // caught THIS join flipping broadcast → SortMergeJoin at 80× while
+    // every hinted join around it held — the flip sorts the full banded
+    // postings on (band, bucket) for a scalar bucket-list probe side
+    val gated = banded.join(usefulBuckets.hint("shuffle_hash"),
+      Seq("band", "bucket"), "left_semi")
+    // self-join form deliberately kept: the join + distinct stay in
+    // whole-stage codegen — measured at parity with the collect_set +
+    // in-list expansion, which runs interpreted higher-order functions
+    // (see the containment note). shuffle_hash on every bounded build
+    // side (same discipline as containmentPairs, round 18): static
+    // estimates flip these joins wholesale between broadcast and
+    // SortMergeJoin across corpus sizes (PlanDiag measured the flip on
+    // the incremental twin at 80×) — the hint pins the sort-free shape
+    gated.as("a").join(gated.as("b").hint("shuffle_hash"),
+        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
+          col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+  }
 
   /** Candidate-volume accounting for a banded LSH index, computed from
     * bucket SIZES alone. `rawPairs` = Σ sz·(sz−1)/2 over every bucket: the
@@ -182,47 +237,13 @@ object Dedup {
       minJaccard: Double = 0.5, maxBucket: Int = 64,
       overflowReps: Int = 0): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val sigs = df
-      .select(col(idCol).as("id"),
-        minhashSignature(tokens(col(textCol)), shingleN, numHashes).as("sig"))
     // candidate generation shuffles only (id, band, bucket) — signatures are
     // re-attached per unique pair afterwards, so the self-join never moves
     // the 32-long signature arrays and est-jaccard runs once per pair, not
-    // once per shared band. Band buckets come from one custom-expression
-    // pass (MinHashBands) — composing slice/hash over a signature column
-    // would re-evaluate the signature per band (no CSE for fallback exprs).
-    val bandedAll = minhashBanded(df, textCol, idCol, shingleN, numHashes, bands)
-    // Degenerate-bucket cap: corpora with globally-common min-shingles put
-    // thousands of docs into one (band, bucket), making the self-join
-    // quadratic in that bucket for pure false-positive mass. Oversized
-    // buckets carry no near-dup signal (a true pair still collides in its
-    // other bands), so they are dropped; singleton buckets produce no pairs.
-    val usefulBuckets = bandedAll
-      .groupBy(col("band"), col("bucket"))
-      .agg(count(lit(1)).as("sz"))
-      .filter(col("sz") > 1 && col("sz") <= maxBucket)
-      .select(col("band"), col("bucket"))
-    // shuffle_hash on the bucket-list semi too (round 19): PlanDiag
-    // caught THIS join flipping broadcast → SortMergeJoin at 80× while
-    // every hinted join around it held — the flip sorts the full banded
-    // postings on (band, bucket) for a scalar bucket-list probe side
-    val banded = bandedAll.join(usefulBuckets.hint("shuffle_hash"),
-      Seq("band", "bucket"), "left_semi")
-    // self-join form deliberately kept: both sides are the same frame on
-    // the same key, so the exchange is planned once and REUSED, and the
-    // join + distinct stay in whole-stage codegen — measured at parity
-    // with the collect_set + in-list expansion, which runs interpreted
-    // higher-order functions (see the containment note)
-    // shuffle_hash on every bounded build side (same discipline as
-    // containmentPairs, round 18): static estimates flip these joins
-    // wholesale between broadcast and SortMergeJoin across corpus sizes
-    // (PlanDiag measured the flip on the incremental twin at 80×) —
-    // the hint pins the sort-free shape; AQE still broadcasts at
-    // runtime when a side is actually small
-    val inBucket = banded.as("a").join(banded.as("b").hint("shuffle_hash"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+    // once per shared band
+    val sigs = minhashSigs(df, textCol, idCol, shingleN, numHashes)
+    val bandedAll = bandsOf(sigs, bands)
+    val inBucket = inBucketPairs(bandedAll, maxBucket)
     // hot-family overflow (see the Scaladoc): members of OVERSIZED
     // buckets pair with ≤ overflowReps exact-class representatives —
     // sz·reps per bucket, shuffling only (id, band, bucket, ck) rows
@@ -260,6 +281,55 @@ object Dedup {
       .select(col("id_a"), col("id_b"),
         estJaccard(col("sig_a"), col("sig_b"), numHashes).as("est_jaccard"))
       .filter(col("est_jaccard") >= minJaccard)
+  }
+
+  /** Verified near-dup pairs `(id_a < id_b, jaccard)`: MinHash-LSH
+    * candidates at est-Jaccard ≥ `minEst`, kept where the exact word
+    * `shingleN`-gram Jaccard is ≥ `minJaccard`. The same rows as
+    * `jaccardVerify(minhashPairs(…, minJaccard = minEst), …)` filtered at
+    * `minJaccard` (DedupSpec checks the equality), built with one
+    * exchange per key:
+    *
+    *  - one per-doc frame `(id, sig, toks)`: each doc tokenized once,
+    *    its signature computed from that token array, and the band
+    *    buckets derived from the signature;
+    *  - the capped bucket self-join ([[inBucketPairs]]);
+    *  - the pairs deduped on one exchange by `id_a` (hash-partitioning
+    *    on `id_a` satisfies the clustering the distinct needs, so the
+    *    first attach join reads it in place);
+    *  - signature AND tokens attached in one shuffle_hash join per pair
+    *    side, both reading the per-doc frame, whose exchange AQE reuses
+    *    for the second side;
+    *  - the est-Jaccard filter ahead of the exact verify, so shingles
+    *    are built, and intersected, only for est-passing pairs.
+    *
+    * The frame carries tokens, not shingles: a token array is about half
+    * the bytes of its shingle strings, and both the per-doc exchange and
+    * the `id_b` exchange (side a's payload, for every candidate pair)
+    * move it. Carrying shingles measured 4.66 MB of shuffle writes per
+    * curation pass, tokens 3.88 MB (the two-operator form: 4.60 MB).
+    */
+  def verifiedNearDups(docs: DataFrame, textCol: String, idCol: String,
+                       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 16,
+                       minEst: Double = 0.5, minJaccard: Double = 0.8,
+                       maxBucket: Int = 64): DataFrame = {
+    require(numHashes % bands == 0, "bands must divide numHashes")
+    val perDoc = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
+      .select(col("id"), minhashSignature(col("toks"), shingleN, numHashes).as("sig"), col("toks"))
+    val pairs = inBucketPairs(bandsOf(perDoc, bands), maxBucket)
+      .repartition(col("id_a")).distinct()
+    val (a, b) = (perDoc.as("a"), perDoc.as("b"))
+    pairs
+      .join(a.hint("shuffle_hash"), col("id_a") === col("a.id"))
+      .join(b.hint("shuffle_hash"), col("id_b") === col("b.id"))
+      .filter(estJaccard(col("a.sig"), col("b.sig"), numHashes) >= minEst)
+      .select(col("id_a"), col("id_b"),
+        VectorExprs.shingleArray(col("a.toks"), shingleN).as("sh_a"),
+        VectorExprs.shingleArray(col("b.toks"), shingleN).as("sh_b"))
+      .select(col("id_a"), col("id_b"),
+        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
+      .filter(col("jaccard") >= minJaccard)
   }
 
   /** SimHash near-dup pairs with hamming distance ≤ maxHamming. Pigeonhole:
@@ -437,11 +507,8 @@ object Dedup {
                           minJaccard: Double = 0.8,
                           maxBucket: Int = 64): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    def banded(df: DataFrame, side: String) = df
-      .select(col(idCol).as(side),
-        posexplode(VectorExprs.minhashBands(tokens(col(textCol)), shingleN, numHashes, bands)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bucket")
+    def banded(df: DataFrame, side: String) =
+      minhashBanded(df, textCol, idCol, shingleN, numHashes, bands).withColumnRenamed("id", side)
     val corpusBanded = banded(corpus, "id_c")
     val smallCorpusBuckets = corpusBanded
       .groupBy(col("band"), col("bucket"))
@@ -485,9 +552,9 @@ object Dedup {
     *    the pairs are collected to the driver, packed per partition into
     *    primitive `Long` arrays, and folded through one exact
     *    [[graft.ops.UnionFind]]; the labels go back as a frame of
-    *    primitive-array slices. No edge cache and no rounds: the pair
-    *    checkpoint, its count and one collect, where the loop adds an
-    *    edge cache and three to four jobs per round. The bound is the loop's own per-task
+    *    primitive-array slices. No edge cache and no rounds: one job
+    *    that materializes and counts the pairs, and one collect, where
+    *    the loop adds an edge cache and about five jobs per round. The bound is the loop's own per-task
     *    bound: the mirrored rows fit ONE cached edge partition (~32 MB of
     *    payload), so the driver holds what one round task already holds.
     *    Measured at exactly the bound (1 000 000 disjoint pairs, so
@@ -533,14 +600,17 @@ object Dedup {
       strict: Boolean = true, checkpointDir: Option[String] = None,
       localMaxEdgeRows: Long = CcEdgeRowsPerPartition): DataFrame = {
     // (eager, lazy) checkpoint pair: rounds use the LAZY form so the
-    // convergence count is also the materializing action (r20 — one job
-    // per round where eager-then-probe ran two). The one-job claim holds
-    // for localCheckpoint (the count materializes the blocks); in
-    // RELIABLE mode checkpoint(eager = false) still recomputes the round
-    // lineage a second time when ReliableRDDCheckpointData writes its
-    // files, since the round RDD is not separately persisted — accepted:
-    // reliable mode is the executor-loss story, not the perf path
-    // (r20 advice #4)
+    // convergence count is also the materializing action. Taking the
+    // lazy checkpoint runs the round's exchange stages (AQE materializes
+    // them to build the checkpoint's RDD); the count then runs ONE job
+    // over the plan's RDD, which computes and stores every partition —
+    // measured on a 7-pair chain: 4 stage jobs + 1 count job per round
+    // (a Dataset count is an aggregate over an exchange under AQE, 2
+    // jobs). In RELIABLE mode checkpoint(eager = false) still recomputes
+    // the round lineage a second time when ReliableRDDCheckpointData
+    // writes its files, since the round RDD is not separately persisted
+    // — accepted: reliable mode is the executor-loss story, not the perf
+    // path (r20 advice #4)
     // ATTEMPTED AND REVERTED (r21, verdict #3 — measured): a
     // partitioning-preserving label checkpoint (repartition(edgeParts,
     // id) + a LogicalRDD that declares HashPartitioning, so the edge
@@ -567,9 +637,15 @@ object Dedup {
       }
     // materialize the caller's pair plan ONCE: the union-find collect
     // and the mirror-union below would each recompute the upstream (an
-    // LSH candidate join, a blocked all-pairs scan) from the lazy plan
-    val p0 = ckpt(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
-    val nPairs = p0.count()
+    // LSH candidate join, a blocked all-pairs scan) from the lazy plan.
+    // Local mode takes the LAZY checkpoint and counts its rows through
+    // the plan's RDD, so one job both materializes and counts (the eager
+    // form ran one job, and a Dataset count two more: under AQE it is an
+    // aggregate over an exchange). Reliable mode stays eager, since a
+    // lazy reliable checkpoint recomputes the upstream to write its files.
+    val p0 = (if (checkpointDir.isEmpty) lckpt else ckpt)(
+      pairs.select(col("id_a").as("u"), col("id_b").as("v")))
+    val nPairs = p0.queryExecution.toRdd.count()
     if (strict && 2L * nPairs <= localMaxEdgeRows && CcLocalTypes(p0.schema("u").dataType))
       ccLocal(p0, nPairs)
     else ccLoop(p0, nPairs, maxIter, strict, ckpt, lckpt)
@@ -587,7 +663,7 @@ object Dedup {
       // FULL-scan convergence count as the materializing action: every
       // partition of the lazy checkpoint computes under this one job (a
       // limit-probe would truncate lineage with partitions unmaterialized)
-      converged = next.filter(col("changed")).count() == 0L
+      converged = next.filter(col("changed")).queryExecution.toRdd.count() == 0L
       val prev = labels
       labels = next.drop("changed")
       iter += 1
@@ -1196,15 +1272,9 @@ object Dedup {
     * identical to the cached frame; do not execute it twice where the
     * memo would do.
     */
-  private[graft] def verifiedPairsPlan(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val candidates = minhashPairs(docs, "text", "doc_id",
-      shingleN = 3, numHashes = 32, bands = 16, minJaccard = 0.5)
-      .select(col("id_a"), col("id_b"))
-    jaccardVerify(candidates, docs, "text", "doc_id", n = 3)
-      .filter(col("jaccard") >= NearDupJaccard)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+  private[graft] def verifiedPairsPlan(spark: SparkSession, dir: String): DataFrame =
+    verifiedNearDups(Tables.documents(spark, dir), "text", "doc_id",
+      shingleN = 3, numHashes = 32, bands = 16, minEst = 0.5, minJaccard = NearDupJaccard)
 
   /** MinHash-LSH dedup decisions: the docs a near-dup pass drops (greedy,
     * deterministic: the higher id of each verified pair). LSH candidates at

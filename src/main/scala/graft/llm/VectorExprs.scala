@@ -92,28 +92,29 @@ case class MinHashSig(child: Expression, shingleN: Int, numHashes: Int)
     copy(child = newChild)
 }
 
-/** LSH band buckets: the MinHash lanes are computed as in MinHashSig, then
-  * each band of `numHashes/bands` consecutive lanes is hash-combined into
-  * one bucket value — all in the same single pass.
+/** LSH band buckets of a MinHash signature (MinHashSig's output): each
+  * band of `numHashes/bands` consecutive lanes is hash-combined into one
+  * bucket value in a single primitive loop. Reading the signature column
+  * (not the tokens) lets one per-doc signature feed both the banding and
+  * the est-Jaccard re-attach without recomputing the lanes.
   */
-case class MinHashBands(child: Expression, shingleN: Int, numHashes: Int, bands: Int)
+case class MinHashBands(child: Expression, bands: Int)
     extends UnaryExpression {
-
-  require(numHashes % bands == 0, "bands must divide numHashes")
-  private val rows = numHashes / bands
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "minhash_bands"
 
-  def compute(tokens: ArrayData): ArrayData = {
-    val mins = MinHashCore.signature(tokens, shingleN, numHashes)
+  def compute(sig: ArrayData): ArrayData = {
+    val n = sig.numElements()
+    require(n % bands == 0, s"bands ($bands) must divide the signature length ($n)")
+    val rows = n / bands
     val out = new Array[Long](bands)
     var b = 0
     while (b < bands) {
       var h = b * MinHashCore.Golden
       var r = 0
       while (r < rows) {
-        h = java.lang.Long.rotateLeft(h ^ (mins(b * rows + r) * MinHashCore.Golden), 27) * 5 + 0x52dce729L
+        h = java.lang.Long.rotateLeft(h ^ (sig.getLong(b * rows + r) * MinHashCore.Golden), 27) * 5 + 0x52dce729L
         r += 1
       }
       out(b) = h
@@ -819,9 +820,9 @@ object VectorExprs {
   def minhashSig(tokens: Column, shingleN: Int, numHashes: Int): Column =
     ColumnBridge.column(MinHashSig(ColumnBridge.expression(tokens), shingleN, numHashes))
 
-  /** LSH band buckets over word n-gram shingles of `tokens`. */
-  def minhashBands(tokens: Column, shingleN: Int, numHashes: Int, bands: Int): Column =
-    ColumnBridge.column(MinHashBands(ColumnBridge.expression(tokens), shingleN, numHashes, bands))
+  /** LSH band buckets of a [[minhashSig]] signature column. */
+  def minhashBands(sig: Column, bands: Int): Column =
+    ColumnBridge.column(MinHashBands(ColumnBridge.expression(sig), bands))
 
   /** Exact integer dot product of two int-array columns (the ADC scan). */
   def intDot(a: Column, b: Column): Column =

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
 import graft.llm.{Dedup, Fingerprints}
 
 class DedupSpec extends SparkSpec with PropertyCheck {
@@ -44,19 +45,65 @@ class DedupSpec extends SparkSpec with PropertyCheck {
     assert(!pairs.contains((2L, 3L)))
   }
 
-  test("hot doc family: minhash band-cap keeps candidates under the linear bound, loss measured") {
-    // 13000 docs of unique tokens; HotBucketBench rewrites the 130 ids
-    // ≡ 7 (mod 100) to one template family — decisively past maxBucket=64
-    // (a family NEAR the cap can leak members out of the hot bucket via
-    // its per-doc tail token and pull the bucket back under the cap)
+  /** 13000 docs of unique tokens; HotBucketBench rewrites the 130 ids
+    * ≡ 7 (mod 100) to one template family — decisively past maxBucket=64
+    * (a family NEAR the cap can leak members out of the hot bucket via
+    * its per-doc tail token and pull the bucket back under the cap) —
+    * plus one planted OFF-family near-dup pair (ids ≢ 7 mod 100).
+    */
+  private def hotCorpus = {
     val toks = (0 until 10).map(j => concat(lit("t"), col("id"), lit(s"x$j"), col("id")))
     val base = spark.range(13000).select(
       col("id").as("doc_id"), concat_ws(" ", toks: _*).as("text"))
-    // one planted OFF-family near-dup pair (ids ≢ 7 mod 100)
     val shared = (0 until 12).map(j => s"planted$j common$j tokens$j").mkString(" ")
     val twins = Seq((90011L, shared + " alpha"), (90012L, shared + " beta"))
       .toDF("doc_id", "text")
-    val corpus = HotBucketBench.hotDocs(base.unionByName(twins))
+    HotBucketBench.hotDocs(base.unionByName(twins))
+  }
+
+  /** The two-operator composition [[Dedup.verifiedNearDups]] replaces. */
+  private def composedNearDups(df: org.apache.spark.sql.DataFrame) =
+    Dedup.jaccardVerify(
+        Dedup.minhashPairs(df, "text", "doc_id", minJaccard = 0.5).select("id_a", "id_b"),
+        df, "text", "doc_id", 3)
+      .filter($"jaccard" >= 0.8)
+      .select("id_a", "id_b", "jaccard")
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().sorted.toSeq
+
+  test("verifiedNearDups equals jaccardVerify(minhashPairs(…)) row for row on the hot-bucket corpus") {
+    val corpus = hotCorpus
+    val got = sortedRows(Dedup.verifiedNearDups(corpus, "text", "doc_id"))
+    assert(got == sortedRows(composedNearDups(corpus)))
+    assert(got.exists { case (a, b, _) => a == 90011L && b == 90012L }, got.take(5).toString)
+  }
+
+  test("verifiedNearDups equals jaccardVerify(minhashPairs(…)) row for row on random corpora") {
+    val vocab = (0 until 40).map(i => s"w$i")
+    val word = Gen.oneOf(vocab)
+    // a few templates, each doc a template with up to three token edits,
+    // so pairs land on both sides of the est and exact thresholds
+    val corpus = for {
+      templates <- Gen.listOfN(3, Gen.choose(4, 24).flatMap(Gen.listOfN(_, word)))
+      n <- Gen.choose(2, 30)
+      docs <- Gen.listOfN(n, for {
+        t <- Gen.oneOf(templates)
+        edits <- Gen.listOfN(3, Gen.zip(Gen.choose(0, 30), word))
+        k <- Gen.choose(0, 3)
+      } yield edits.take(k).foldLeft(t) { case (acc, (i, w)) =>
+        if (i < acc.length) acc.updated(i, w) else acc
+      }.mkString(" "))
+    } yield docs.zipWithIndex.map { case (d, i) => (i.toLong, d) }
+    forAll(corpus) { rows =>
+      val df = rows.toDF("doc_id", "text")
+      val got = sortedRows(Dedup.verifiedNearDups(df, "text", "doc_id"))
+      assert(got == sortedRows(composedNearDups(df)), rows.toString)
+    }
+  }
+
+  test("hot doc family: minhash band-cap keeps candidates under the linear bound, loss measured") {
+    val corpus = hotCorpus
     val famExpected = 130L * 129 / 2
     val stats = Dedup.minhashCandidateStats(corpus, "text", "doc_id")
     assert(stats.cappedPairs <= stats.pairBound,
@@ -233,7 +280,6 @@ class DedupSpec extends SparkSpec with PropertyCheck {
     // the generator plants rewrites (J ≈ 0.9, miss ≤ 1.3e-7) and fresh
     // docs (J ≈ 0), and the exact-verify stage makes every reported drop
     // checkable against the naive Jaccard — soundness is unconditional.
-    import org.scalacheck.Gen
     val words = Vector("alpha", "bravo", "charlie", "delta", "echo", "foxtrot",
       "golf", "hotel", "india", "juliet", "kilo", "lima", "mike", "november")
     val docGen = Gen.pick(10, words).map(_.mkString(" "))
@@ -272,7 +318,6 @@ class DedupSpec extends SparkSpec with PropertyCheck {
     // small vocabulary forces heavy shingle sharing — the worst case for
     // the inverted index — and maxDf above corpus size keeps the cap out
     // of play, so the result must be EXACTLY the quadratic definition
-    import org.scalacheck.Gen
     val vocab = Vector("red", "blue", "fox", "jumps", "river", "stone", "moon", "dog")
     val doc = Gen.chooseNum(3, 9).flatMap(len => Gen.listOfN(len, Gen.oneOf(vocab)).map(_.mkString(" ")))
     val corpora = Gen.chooseNum(5, 10).flatMap(k => Gen.listOfN(k, doc))
@@ -391,7 +436,6 @@ class DedupSpec extends SparkSpec with PropertyCheck {
   }
 
   test("connected components property: union-find path ≡ round loop on random graphs") {
-    import org.scalacheck.Gen
     def assertSame(e: Seq[(Long, Long)]): Unit = {
       val df = e.toDF("id_a", "id_b")
       val local = Dedup.connectedComponentsWith(df, localMaxEdgeRows = Long.MaxValue)

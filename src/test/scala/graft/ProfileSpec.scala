@@ -15,8 +15,8 @@ import graft.llm.Dedup
 class ProfileSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
   private val recordKeys = Set("sec", "rows", "jobs", "stages", "tasks", "shuffle_write",
-    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "exec_gc_ms", "joins_sorts",
-    "job_detail", "stage_detail")
+    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "exec_gc_ms", "exchanges",
+    "reused_exchanges", "joins_sorts", "job_detail", "stage_detail")
 
   private def parse(json: String): JsonNode = new ObjectMapper().readTree(json)
 
@@ -28,6 +28,7 @@ class ProfileSpec extends SparkSpec {
     assert(r.get("jobs").asInt >= 1)
     assert(r.get("job_detail").size == r.get("jobs").asInt)
     assert(r.get("stage_detail").size == r.get("stages").asInt)
+    assert(r.get("exchanges").asInt >= 1 && r.get("reused_exchanges").asInt >= 0)
     val joins = r.get("joins_sorts").elements.asScala.map(_.asText).toSeq
     assert(joins.exists(_.contains("Join")), s"no join line in $joins")
     assert(Files.readString(planFile).contains("== Physical Plan =="))

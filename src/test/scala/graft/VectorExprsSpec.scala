@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, Fingerprints, VectorExprs}
 
 /** Direct kernel-level checks of the custom Catalyst expressions. */
-class VectorExprsSpec extends SparkSpec {
+class VectorExprsSpec extends SparkSpec with PropertyCheck {
   import spark.implicits._
 
   test("minhash signature: identical token arrays → identical signatures; est ∈ [0,1]") {
@@ -25,6 +25,49 @@ class VectorExprsSpec extends SparkSpec {
       .as[(Long, Array[Long])].collect().toMap
     assert(got.values.forall(_.length == 16))
     assert(got(1L).toSeq != got(2L).toSeq)
+  }
+
+  test("minhash bands of a signature equal the token-array bands (pinned values, random token arrays)") {
+    // the band combine as the token-array expression ran it: lanes of
+    // each band folded from the band's seed, consecutive lanes per band
+    def tokenArrayBands(sig: Array[Long], bands: Int): Seq[Long] = {
+      val golden = 0x9e3779b97f4a7c15L
+      val rows = sig.length / bands
+      (0 until bands).map { b =>
+        (0 until rows).foldLeft(b * golden) { (h, r) =>
+          java.lang.Long.rotateLeft(h ^ (sig(b * rows + r) * golden), 27) * 5 + 0x52dce729L
+        }
+      }
+    }
+    def bandsOf(toks: Seq[Seq[String]]) = toks.toDF("toks")
+      .select(VectorExprs.minhashSig($"toks", 3, 32).as("sig"))
+      .select($"sig", VectorExprs.minhashBands($"sig", 16).as("bands"))
+      .as[(Array[Long], Array[Long])].collect().toSeq
+    // values the token-array MinHashBands(toks, 3, 32, 16) produced
+    val pinned = Seq(
+      "the quick brown fox jumps over the lazy dog".split(" ").toSeq -> Seq(
+        -6926066819149153559L, -7542736753636257084L, 306894217494323166L, -6336775788860562113L,
+        -6693769966082857697L, -5092481893974649369L, 6986088726095637027L, -1302304282926473813L,
+        1145323324855704435L, -7634801696812319758L, 1944325052639148268L, -6125174174005617710L,
+        2962911746453156436L, 8539850823707401279L, -1989928516298068578L, -303527705556193480L),
+      Seq("a", "b") -> Seq(
+        -2763167337171130691L, 2133646326067429158L, -5071990407019055489L, 6228414760216271453L,
+        -2304161038542747507L, -1227639201193285022L, -3485417594268573148L, -8237341791629976038L,
+        8707829831153455544L, -7969791206443588334L, -5042834829924857674L, -4450255728373017013L,
+        8445083262697169366L, -6822315225136395622L, -9001524618573226927L, 4090877019997248095L),
+      Seq("") -> Seq(
+        6041831713669534165L, 5758993210692687025L, -1318964699827942672L, -8098147389490189461L,
+        7015493366057893184L, -1947992695636318402L, -9150458193003942652L, -6789778402909466679L,
+        -5929898315248366804L, -2951659872150102548L, 8302218462292068715L, -8738639964176442531L,
+        2333744236133847765L, 1165896082087356429L, -8116263990660490906L, -9048406797781877330L))
+    assert(bandsOf(pinned.map(_._1)).map(_._2.toSeq) == pinned.map(_._2))
+    val tokenArrays = org.scalacheck.Gen.listOfN(8, org.scalacheck.Gen.choose(0, 40)
+      .flatMap(org.scalacheck.Gen.listOfN(_, org.scalacheck.Gen.oneOf("a", "b", "c", "dd", "é", ""))))
+    forAll(tokenArrays) { toks =>
+      bandsOf(toks).foreach { case (sig, bands) =>
+        assert(bands.toSeq == tokenArrayBands(sig, 16))
+      }
+    }
   }
 
   test("cosine kernel: self-similarity is 1, works under explode contexts") {
