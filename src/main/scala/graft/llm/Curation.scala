@@ -20,7 +20,7 @@ import graft.Tables
   * The survivor frame (doc_id, norm_text, exact_keep — narrow: ids +
   * normalized text, no feature columns) feeds four downstream branches
   * (the LSH bucket-size count, the banded postings, the per-doc
-  * signature/shingle frame both verify sides read, the status join) and is
+  * `(id, sig, toks)` frame both verify sides read, the status join) and is
   * persisted MEMORY_AND_DISK: one feature scan serves all branches
   * (round-3 measurement: 2× faster than recompute-per-branch even after
   * the window-dedup restructure halved the recomputed passes; the r1/r2
@@ -98,7 +98,7 @@ object Curation {
       .select(col("doc_id"), col("norm_text"))
     // near-dup: LSH candidates over exact survivors → exact verify → drop high ids
     val nearDrop = Dedup.verifiedNearDups(exactSurvivors, "norm_text", "doc_id",
-        minEst = 0.5, minJaccard = config.nearDupJaccard)
+        config.nearDupJaccard)
       .select(col("id_b").as("doc_id")).distinct()
       .withColumn("near_drop", lit(true))
 

@@ -284,11 +284,12 @@ object Dedup {
   }
 
   /** Verified near-dup pairs `(id_a < id_b, jaccard)`: MinHash-LSH
-    * candidates at est-Jaccard ≥ `minEst`, kept where the exact word
-    * `shingleN`-gram Jaccard is ≥ `minJaccard`. The same rows as
-    * `jaccardVerify(minhashPairs(…, minJaccard = minEst), …)` filtered at
-    * `minJaccard` (DedupSpec checks the equality), built with one
-    * exchange per key:
+    * candidates at est-Jaccard ≥ 0.5, kept where the exact word 3-gram
+    * Jaccard is ≥ `minJaccard`. The LSH parameters are [[minhashPairs]]'
+    * defaults (3-gram shingles, 32 lanes in 16 bands, buckets capped at
+    * 64 docs), so the rows are `jaccardVerify(minhashPairs(…), …)`'s
+    * filtered at `minJaccard` (DedupSpec checks the equality), built with
+    * one exchange per key:
     *
     *  - one per-doc frame `(id, sig, toks)`: each doc tokenized once,
     *    its signature computed from that token array, and the band
@@ -301,19 +302,22 @@ object Dedup {
     *    side, both reading the per-doc frame, whose exchange AQE reuses
     *    for the second side;
     *  - the est-Jaccard filter ahead of the exact verify, so shingles
-    *    are built, and intersected, only for est-passing pairs.
+    *    are built only for est-passing pairs.
     *
     * The frame carries tokens, not shingles: a token array is about half
     * the bytes of its shingle strings, and both the per-doc exchange and
     * the `id_b` exchange (side a's payload, for every candidate pair)
     * move it. Carrying shingles measured 4.66 MB of shuffle writes per
     * curation pass, tokens 3.88 MB (the two-operator form: 4.60 MB).
+    * The exact Jaccard is one [[VectorExprs.shingleJaccard]] call per
+    * pair, which builds each side's shingle set once. The optimizer
+    * pushes the Jaccard predicate into the attach join's condition, so a
+    * pair that passes the est filter evaluates it there and a verified
+    * pair once more in the output projection.
     */
   def verifiedNearDups(docs: DataFrame, textCol: String, idCol: String,
-                       shingleN: Int = 3, numHashes: Int = 32, bands: Int = 16,
-                       minEst: Double = 0.5, minJaccard: Double = 0.8,
-                       maxBucket: Int = 64): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
+                       minJaccard: Double = 0.8): DataFrame = {
+    val (shingleN, numHashes, bands, minEst, maxBucket) = (3, 32, 16, 0.5, 64)
     val perDoc = docs.select(col(idCol).as("id"), tokens(col(textCol)).as("toks"))
       .select(col("id"), minhashSignature(col("toks"), shingleN, numHashes).as("sig"), col("toks"))
     val pairs = inBucketPairs(bandsOf(perDoc, bands), maxBucket)
@@ -324,11 +328,7 @@ object Dedup {
       .join(b.hint("shuffle_hash"), col("id_b") === col("b.id"))
       .filter(estJaccard(col("a.sig"), col("b.sig"), numHashes) >= minEst)
       .select(col("id_a"), col("id_b"),
-        VectorExprs.shingleArray(col("a.toks"), shingleN).as("sh_a"),
-        VectorExprs.shingleArray(col("b.toks"), shingleN).as("sh_b"))
-      .select(col("id_a"), col("id_b"),
-        (size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b")))).as("jaccard"))
+        VectorExprs.shingleJaccard(col("a.toks"), col("b.toks"), shingleN).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
   }
 
@@ -1143,8 +1143,10 @@ object Dedup {
       .filter(col("containment") >= minContainment)
   }
 
-  /** Exact n-gram Jaccard over candidate pairs (verification stage after
-    * LSH; also usable brute-force on a bounded subset as an oracle baseline).
+  /** Exact n-gram Jaccard over candidate pairs: the reference form of
+    * [[verifiedNearDups]]' verify stage (DedupSpec compares the two row
+    * for row over [[minhashPairs]]); also usable brute-force on a bounded
+    * subset as an oracle baseline.
     */
   def jaccardVerify(pairs: DataFrame, docs: DataFrame, textCol: String, idCol: String, n: Int): DataFrame = {
     val sh = docs.select(col(idCol).as("jid"), shingles(col(textCol), n).as("sh"))
@@ -1266,15 +1268,14 @@ object Dedup {
     * the `winnowOverlapPlan` split, for plan inspection: the registered
     * queries serve from the localCheckpointed [[verifiedPairs]] memo, so
     * their executed plans are severed at the RDD scan and the flip-prone
-    * joins (the banding self-join plus the signature/shingle re-attach
+    * joins (the banding self-join plus the signature/token re-attach
     * joins, all shuffle_hash-pinned) would be invisible to
     * `graft.Profile`'s scale points without this form. Semantically
     * identical to the cached frame; do not execute it twice where the
     * memo would do.
     */
   private[graft] def verifiedPairsPlan(spark: SparkSession, dir: String): DataFrame =
-    verifiedNearDups(Tables.documents(spark, dir), "text", "doc_id",
-      shingleN = 3, numHashes = 32, bands = 16, minEst = 0.5, minJaccard = NearDupJaccard)
+    verifiedNearDups(Tables.documents(spark, dir), "text", "doc_id", NearDupJaccard)
 
   /** MinHash-LSH dedup decisions: the docs a near-dup pass drops (greedy,
     * deterministic: the higher id of each verified pair). LSH candidates at

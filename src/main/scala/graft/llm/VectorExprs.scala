@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass vector/signature expressions with whole-stage codegen support.
   *
@@ -145,25 +146,8 @@ case class Shingles(child: Expression, n: Int)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "shingles"
 
-  def compute(toks: ArrayData): ArrayData = {
-    val nTok = toks.numElements()
-    val out = new java.util.LinkedHashSet[org.apache.spark.unsafe.types.UTF8String]()
-    val sep = org.apache.spark.unsafe.types.UTF8String.fromString(" ")
-    val nShingles = math.max(nTok - n + 1, 1)
-    var i = 0
-    while (i < nShingles) {
-      val parts = new java.util.ArrayList[org.apache.spark.unsafe.types.UTF8String](n)
-      var k = 0
-      while (k < n && i + k < nTok) {
-        if (!toks.isNullAt(i + k)) parts.add(toks.getUTF8String(i + k))
-        k += 1
-      }
-      out.add(org.apache.spark.unsafe.types.UTF8String.concatWs(
-        sep, parts.toArray(new Array[org.apache.spark.unsafe.types.UTF8String](parts.size)): _*))
-      i += 1
-    }
-    new GenericArrayData(out.toArray.asInstanceOf[Array[AnyRef]])
-  }
+  def compute(toks: ArrayData): ArrayData =
+    new GenericArrayData(Shingles.distinct(toks, n).toArray.asInstanceOf[Array[AnyRef]])
 
   override def nullSafeEval(input: Any): Any = compute(input.asInstanceOf[ArrayData])
 
@@ -175,6 +159,66 @@ case class Shingles(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Shingles =
     copy(child = newChild)
+}
+
+object Shingles {
+
+  /** The distinct shingles of `toks`, in first-occurrence order; at least
+    * one (fewer than `n` tokens make one shorter shingle).
+    */
+  def distinct(toks: ArrayData, n: Int): java.util.LinkedHashSet[UTF8String] = {
+    val nTok = toks.numElements()
+    val out = new java.util.LinkedHashSet[UTF8String]()
+    val sep = UTF8String.fromString(" ")
+    val nShingles = math.max(nTok - n + 1, 1)
+    var i = 0
+    while (i < nShingles) {
+      val parts = new java.util.ArrayList[UTF8String](n)
+      var k = 0
+      while (k < n && i + k < nTok) {
+        if (!toks.isNullAt(i + k)) parts.add(toks.getUTF8String(i + k))
+        k += 1
+      }
+      out.add(UTF8String.concatWs(sep, parts.toArray(new Array[UTF8String](parts.size)): _*))
+      i += 1
+    }
+    out
+  }
+}
+
+/** Exact Jaccard of the distinct word `n`-gram shingle sets of two token
+  * arrays: the value of `size(array_intersect(sa, sb)) /
+  * size(array_union(sa, sb))` over `sa`, `sb` = [[Shingles]] of each
+  * side, computed from one shingle set per side with no shingle,
+  * intersect or union array materialized. Every side has at least one
+  * shingle, so the union is never empty.
+  */
+case class ShingleJaccard(left: Expression, right: Expression, n: Int)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "shingle_jaccard"
+
+  def compute(a: ArrayData, b: ArrayData): Double = {
+    val sa = Shingles.distinct(a, n)
+    val sb = Shingles.distinct(b, n)
+    var inter = 0
+    val it = sb.iterator()
+    while (it.hasNext) if (sa.contains(it.next())) inter += 1
+    inter.toDouble / (sa.size + sb.size - inter)
+  }
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => {
+      val ref = ctx.addReferenceObj("shingleJaccard", this, classOf[ShingleJaccard].getName)
+      s"${ev.value} = $ref.compute($a, $b);"
+    })
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): ShingleJaccard =
+    copy(left = newLeft, right = newRight)
 }
 
 /** Cosine similarity of two numeric arrays in one pass, accumulating in
@@ -838,6 +882,10 @@ object VectorExprs {
   /** Distinct word n-gram shingle strings of a token array. */
   def shingleArray(tokens: Column, n: Int): Column =
     ColumnBridge.column(Shingles(ColumnBridge.expression(tokens), n))
+
+  /** Exact word `n`-gram shingle Jaccard of two token-array columns. */
+  def shingleJaccard(a: Column, b: Column, n: Int): Column =
+    ColumnBridge.column(ShingleJaccard(ColumnBridge.expression(a), ColumnBridge.expression(b), n))
 
   /** The k nearest centroid ids (cosine desc, ties by id) per vector. */
   def nearestCentroids(emb: Column, centroidIds: Array[Int],

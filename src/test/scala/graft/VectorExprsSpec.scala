@@ -112,6 +112,25 @@ class VectorExprsSpec extends SparkSpec with PropertyCheck {
     assert(got == Seq("the quick brown", "quick brown fox", "brown fox jumps"))
   }
 
+  test("shingle_jaccard ≡ size(array_intersect)/size(array_union) of the shingle arrays (random token arrays)") {
+    import org.scalacheck.Gen
+    val toks = Gen.choose(0, 12).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "dd", "é", "")))
+    val cases = Gen.zip(Gen.choose(1, 4), Gen.listOfN(6, Gen.zip(toks, toks)))
+    forAll(cases) { case (n, pairs) =>
+      val df = pairs.toDF("a", "b")
+        .select(VectorExprs.shingleArray($"a", n).as("sa"), VectorExprs.shingleArray($"b", n).as("sb"),
+          VectorExprs.shingleJaccard($"a", $"b", n).as("got"))
+      val rows = df.select(
+          (size(array_intersect($"sa", $"sb")).cast("double") / size(array_union($"sa", $"sb"))).as("want"),
+          $"got")
+        .as[(Double, Double)].collect()
+      rows.foreach { case (want, got) => assert(got == want, (n, pairs).toString) }
+    }
+    val nulls = Seq((Some(Seq("a", "b", "c")), Option.empty[Seq[String]])).toDF("a", "b")
+      .select(VectorExprs.shingleJaccard($"a", $"b", 3).isNull).as[Boolean].head()
+    assert(nulls)
+  }
+
   test("simhash of a permuted token multiset is identical (order-insensitive)") {
     val df = Seq((1L, "alpha beta gamma delta"), (2L, "delta gamma beta alpha")).toDF("id", "t")
     val got = df.select($"id", Dedup.simhash($"t").as("sh")).as[(Long, Long)].collect().toMap
