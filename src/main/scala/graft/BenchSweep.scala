@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Helpers shared by the harness mains (`Bench`, `Verify`, `Profile`,
-  * `ScaleBench`, `HotBucketBench`): the session they all run on and the
-  * pieces of their one-line JSON output.
+  * `HotBucketBench`): the session they all run on and the pieces of
+  * their one-line JSON output.
   */
 object BenchSweep {
 
@@ -51,9 +51,9 @@ object BenchSweep {
     String.format(java.util.Locale.ROOT, s"%.${digits}f", v.asInstanceOf[AnyRef])
 
   /** Host-instance marker shared by EVERY bench-artifact writer (Bench,
-    * ScaleBench, HotBucketBench, Profile): artifacts from different
-    * BOOTS of this box are not comparable at face value (r19: a
-    * mid-round reboot shifted every query 1.25-1.6×, proven on untouched
+    * HotBucketBench, Profile): artifacts from different BOOTS of the
+    * host are not comparable at face value (r19: a mid-round reboot
+    * shifted every query 1.25-1.6×, proven on untouched
     * control queries). Stamping the boot epoch lets any cross-artifact
     * comparison detect an instance change mechanically instead of
     * inferring it from uniform drift. -1 = platform can't say (no

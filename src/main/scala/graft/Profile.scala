@@ -19,23 +19,33 @@ import graft.store.Checkpoints
 
 /** What a registered query planned and ran, one record per query: the
   * executed plan's join and sort operators, the formatted plan, the row
-  * count and the SparkListener totals of one steady-state run (jobs,
-  * stages, tasks, shuffle read/write, spill, executor run and GC time,
-  * exchanges run and reused) plus its per-job and per-stage lines, and
-  * for a query in [[corpusStats]] the corpus statistics its cost
-  * follows. The listener sees EVERY job the query runs, including
-  * RDD-level checkpoint materializations that SQL plan dumps never show
-  * (the CC loop's per-round jobs, eager localCheckpoints), so
-  * exchange-removal claims are checkable as shuffle-byte deltas.
+  * count, the cold and warm wall times, and the SparkListener totals of
+  * one steady-state run (jobs, stages, tasks, shuffle read/write, spill,
+  * executor run and GC time, exchanges run and reused) plus its per-job
+  * and per-stage lines, and for a query in [[corpusStats]] the corpus
+  * statistics its cost follows. The listener sees EVERY job the query
+  * runs, including RDD-level checkpoint materializations that SQL plan
+  * dumps never show (the CC loop's per-round jobs, eager
+  * localCheckpoints), so exchange-removal claims are checkable as
+  * shuffle-byte deltas.
   *
   * Usage: [SPARK_GRAFT_PROFILE_QUERY=q1,q2] [SPARK_GRAFT_SCALES=40,80]
   *        [SPARK_GRAFT_PROFILE_OUT=dir] sbt "runMain graft.Profile"
-  * Without a query list every registered query is profiled. Each scale k
-  * adds a `ScaleBench.ensureScaled` point, keyed `<q>_x<k>`. One JSON
-  * line goes to stdout, with the JVM's max heap and the session's cores;
-  * with an out dir it is also written to `profile.json` there, next to
-  * one formatted plan per record (`<q>[_x<k>].txt`). Compare two runs by
-  * giving them two dirs.
+  * Without a query list every registered query is profiled, and each
+  * scale k adds a `ScaleBench.ensureScaled` point over [[scaleTargets]],
+  * keyed `<q>_x<k>`; a query list names the queries of every point. Each
+  * point starts with `Engine.clearCaches`, so a record's `cold_s` pays
+  * the session memos no earlier query of the point built. A scale
+  * record's `metamorphic` checks its `rows` against the query's 1×
+  * record of the same run ([[Relation]]). One JSON line goes to stdout,
+  * with the JVM's max heap and the session's cores; with an out dir it
+  * is also written to `profile.json` there, next to one formatted plan
+  * per record (`<q>[_x<k>].txt`). Compare two runs by giving them two
+  * dirs. A range-partitioned `CorpusSuffix` query (`llm_cross_doc_max`,
+  * `llm_cross_doc_spans`) samples its range boundaries from an RDD id,
+  * so its tasks and shuffle bytes depend on what ran before it in the
+  * session: compare its records only across runs with the same query
+  * list and order.
   */
 object Profile {
 
@@ -75,6 +85,86 @@ object Profile {
     */
   private val corpusStats: Map[String, (SparkSession, String) => Seq[(String, Long)]] = Map(
     "llm_dedup_containment" -> ((s, d) => Dedup.containmentCorpus(Tables.documents(s, d), "text")))
+
+  /** How a scale point's row count follows the replication factor k of
+    * `ScaleBench.ensureScaled`, given the 1× count r₁ of the same run:
+    * copies share no keys and, by the cipher, no letters, so a query
+    * whose output is per-copy-local is [[Linear]], one whose output is a
+    * fixed-size answer over one copy is [[Constant]], and a query the
+    * replication does not replicate is [[Excluded]] with the cause.
+    */
+  sealed trait Relation
+  /** rows = k·r₁ */
+  case object Linear extends Relation
+  /** rows = r₁ */
+  case object Constant extends Relation
+  final case class Excluded(reason: String) extends Relation
+
+  /** The queries scale points cover by default, with their row relations:
+    * the families whose growth class VERDICT r14 flagged for measurement
+    * (suffix arrays, dedup candidate volumes, ER blocking, winnowing
+    * probes, distributed BPE, the fixed-point graph operators), the
+    * families the r19 flip sweep re-pinned, and the r20 single-exchange
+    * basket build whose removed exchange only shows at scale.
+    */
+  private[graft] val ScaleTargets: Seq[(String, Relation)] = {
+    def winnowResampled(perCopy: String) = Excluded("winnowing keeps the minimum gram " +
+      "hash per window and the cipher changes every letter gram's hash, so each copy " +
+      "selects another fingerprint subset of the same text and pairs near the shared " +
+      s"and overlap floors flip per copy (sf0.001 rows per copy $perCopy, none across copies)")
+    Seq(
+      "llm_suffix_array" -> Linear, "llm_corpus_sa" -> Linear, "llm_suffix_lrs" -> Linear,
+      "llm_dedup_exact" -> Linear, "llm_dedup_minhash" -> Linear,
+      "llm_dedup_containment" -> Linear,
+      "er_customer_pairs" -> Linear, "er_customer_clusters" -> Linear,
+      "er_incremental" -> Linear,
+      "llm_winnow_overlap" -> winnowResampled("31/31/30"),
+      "llm_winnow_probe" -> winnowResampled("4276/4083/4291"),
+      "llm_bpe_merges_dist" -> Constant,
+      "graph_pagerank" -> Constant, "graph_components" -> Linear,
+      "graph_triangles" -> Constant,
+      "llm_cross_doc_max" -> Linear, "llm_cross_doc_spans" -> Constant,
+      "llm_substring_dup" -> Linear,
+      "llm_contamination_report" -> Excluded("one row per train doc, and the " +
+        "train/val/test split hashes doc_id, which each copy offsets, so each copy " +
+        "draws its own split (sf0.001 train docs per copy 439/456/444)"),
+      "er_golden_records" -> Linear,
+      "mm_image_neardup" -> Excluded("images are a pure function of doc_id (pixels " +
+        "hash it, sizes follow it mod 3 and 5, ids below 8 are corrupt), so each copy " +
+        "is a fresh image set, and the planted variants sit at id + 10⁹, the copy " +
+        "stride itself (sf0.001 pairs per copy 93/99/94)"),
+      "basket_pairs" -> Constant)
+  }
+
+  /** The embedding scale paths, covered only when `ScaleBench.embSignFlip`
+    * re-identifies each copy's vectors (copies with identical vectors
+    * grow every embedding answer k² by corpus construction). The near-dup
+    * pairs are the twins `plantTwins` adds once over the table, and the
+    * kNN/IVF queries probe a fixed query set, so those answers stay at r₁.
+    */
+  private[graft] val EmbedTargets: Seq[(String, Relation)] = Seq(
+    "llm_embed_neardup_lsh" -> Constant, "llm_embed_clusters_lsh" -> Constant,
+    "llm_embed_neardup_lsh_auto" -> Constant, "llm_embed_clusters_lsh_auto" -> Constant,
+    "llm_ann_ivf_kmeans" -> Constant, "llm_ann_ivf_indexed" -> Constant,
+    "llm_knn_quantized" -> Constant, "llm_knn_pq" -> Constant,
+    "llm_semdedup" -> Excluded("one row per vector plus the 24 twins plantTwins adds " +
+      "once over the whole table: rows = k·n + 24 (sf0.001: 524/1024/1524)"),
+    "llm_kcenter_select" -> Linear)
+
+  /** The scale list of this replication mode. */
+  private[graft] def scaleTargets: Seq[(String, Relation)] =
+    if (ScaleBench.embSignFlip) ScaleTargets ++ EmbedTargets else ScaleTargets
+
+  /** `ok`, `fail` or `excluded`: `rows` at scale k against the 1× count
+    * `r1` under `q`'s declared relation; a query off the scale list has
+    * none.
+    */
+  private[graft] def metamorphic(q: String, k: Int, r1: Long, rows: Long): String =
+    scaleTargets.toMap.getOrElse(q, Excluded("not on the scale list")) match {
+      case Linear => if (rows == k * r1) "ok" else "fail"
+      case Constant => if (rows == r1) "ok" else "fail"
+      case Excluded(_) => "excluded"
+    }
 
   /** Listener totals over one profiled run. It counts every job posted on
     * the context while attached, so the profiling loop must be the only
@@ -140,24 +230,31 @@ object Profile {
     finally Checkpoints.free(toFree: _*)
   }
 
-  /** One record (a JSON object) for registered query `q` over `dir`: an
-    * untimed warm pass, so session memos are paid outside the profile,
-    * then the profiled pass. The plan is the lazy form's when `q` has
-    * one, else the profiled frame's; `planFile` receives it formatted.
+  /** One record (a JSON object) for registered query `q` over `dir`, with
+    * its row count: a timed first call (`cold_s`), so session memos are
+    * paid outside the profile, then the profiled pass (`sec`) and one
+    * more timed pass; `warm_s` is the faster of the two. The plan is the
+    * lazy form's when `q` has one, else the profiled frame's; `planFile`
+    * receives it formatted. `scale` = (k, rows of `q`'s 1× record) makes
+    * it a scale record, which adds `metamorphic`.
     */
-  def record(spark: SparkSession, q: String, dir: String, planFile: Option[Path] = None): String = {
+  def record(spark: SparkSession, q: String, dir: String, planFile: Option[Path] = None,
+             scale: Option[(Int, Long)] = None): (Long, String) = {
     val query = SparkEntry.queries(q)
-    query(spark, dir).count()
+    def timed[T](run: => T): (T, Double) = {
+      val t0 = System.nanoTime()
+      val out = run
+      (out, (System.nanoTime() - t0) / 1e9)
+    }
+    val (_, cold) = timed(query(spark, dir).count())
     val sc = spark.sparkContext
     val acc = new Acc
     sc.addSparkListener(acc)
     spark.listenerManager.register(acc)
     sc.setJobDescription(s"profile:$q")
-    val (df, rows, sec) = try {
-      val t0 = System.nanoTime()
+    val ((df, rows), sec) = try timed {
       val df = query(spark, dir)
-      val rows = df.count()
-      (df, rows, (System.nanoTime() - t0) / 1e9)
+      (df, df.count())
     } finally {
       sc.setJobDescription(null)
       // listener events are posted async; drain before reading
@@ -165,14 +262,18 @@ object Profile {
       spark.listenerManager.unregister(acc)
       sc.removeSparkListener(acc)
     }
+    val (_, again) = timed(query(spark, dir).count())
     val (formatted, joins) =
       if (lazyForms.contains(q)) lazyPlan(spark, q, dir)
       else (df.queryExecution.explainString(FormattedMode), joinsAndSorts(df))
     planFile.foreach(Files.writeString(_, formatted))
     val corpus = corpusStats.get(q).fold("")(_(spark, dir)
       .map { case (k, v) => s"${jstr(k)}:$v" }.mkString(""","corpus":{""", ",", "}"))
-    acc.synchronized {
-      s"""{"sec":${num(sec, 3)},"rows":$rows,"jobs":${acc.jobLines.size},"stages":${acc.stages},""" +
+    val check = scale.fold("") { case (k, r1) =>
+      s""","metamorphic":${jstr(metamorphic(q, k, r1, rows))}""" }
+    rows -> acc.synchronized {
+      s"""{"sec":${num(sec, 3)},"cold_s":${num(cold, 3)},"warm_s":${num(sec min again, 3)},""" +
+        s""""rows":$rows$check,"jobs":${acc.jobLines.size},"stages":${acc.stages},""" +
         s""""tasks":${acc.tasks},"shuffle_write":${acc.shufWrite},""" +
         s""""shuffle_read":${acc.shufRead},"spill_mem":${acc.spillMem},""" +
         s""""spill_disk":${acc.spillDisk},"exec_run_ms":${acc.runTimeMs},""" +
@@ -197,16 +298,23 @@ object Profile {
   def main(args: Array[String]): Unit = {
     def list(knob: String) =
       sys.env.getOrElse(knob, "").split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val qnames = selected(list("SPARK_GRAFT_PROFILE_QUERY"))
+    val named = list("SPARK_GRAFT_PROFILE_QUERY")
+    val qnames = selected(named)
+    val scaled = if (named.nonEmpty) qnames else scaleTargets.map(_._1)
     val scales = list("SPARK_GRAFT_SCALES").map(_.toInt)
     val outDir = sys.env.get("SPARK_GRAFT_PROFILE_OUT")
       .map(d => Files.createDirectories(Paths.get(d)))
     val (spark, sfDir) = BenchSweep.buildSession()
-    val rows = (None +: scales.map(Some(_))).flatMap { k =>
+    val base = scala.collection.mutable.Map.empty[String, Long]
+    val rows = ((None, qnames) +: scales.map(k => (Some(k), scaled))).flatMap { case (k, qs) =>
       val dir = k.fold(sfDir)(ScaleBench.ensureScaled(spark, sfDir, _))
-      qnames.map { q =>
+      Engine.clearCaches(spark)
+      qs.map { q =>
         val key = q + k.fold("")(x => s"_x$x")
-        s"${jstr(key)}:${record(spark, q, dir, outDir.map(_.resolve(s"$key.txt")))}"
+        val (n, rec) = record(spark, q, dir, outDir.map(_.resolve(s"$key.txt")),
+          k.map(_ -> base(q)))
+        if (k.isEmpty) base(q) = n
+        s"${jstr(key)}:$rec"
       }
     }
     val line = rows.mkString("{\"profile\":{", ",", "},") +

@@ -3,91 +3,28 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scaling-curve harness: measure, instead of argue, how the
-  * superlinear-risk operators grow with data size.
-  *
-  * A derived dataset is generated at k× sf0.1 by DETERMINISTIC
-  * replication + key remap (no new testdata): copy i offsets every key
-  * by i·10⁹ and re-identifies content so copies do not interact —
-  * document text is Caesar-shifted per copy (length-exact, so token
-  * structure, dup graphs, shingle statistics replicate per copy with
-  * zero cross-copy collisions) and customer names carry a per-copy
-  * prefix (ER blocks replicate instead of inflating). The scaled corpus
-  * therefore has the SAME statistical shape per copy, and the measured
-  * exponent isolates the ENGINE's growth (shuffle sort costs, doubling
-  * rounds, candidate volumes) from workload-shape drift. That is the
-  * honest scaling question — "same data distribution, 10× the rows" —
-  * and also its limit: hotspots that grow with corpus size (one giant
-  * LSH block, a corpus-spanning duplicate family) are BOUNDED here by
-  * construction, which is exactly what the caps/gates in those
-  * operators enforce in production.
-  *
-  * Output: one JSON line per run — per query × scale, cold time (first
-  * call after Engine.clearCaches; includes the memoized builds where
-  * the superlinearity would live) and warm time (min of `passes`
-  * repeats) — written to `scale_curves.json` for the PERF.md table.
-  *
-  * Usage: `sbt "runMain graft.ScaleBench"` (env knobs:
-  * SPARK_GRAFT_SCALES=1,3,10; SPARK_GRAFT_SCALE_ONLY=q1,q2;
-  * SPARK_GRAFT_BENCH_OUT=scale_curves.json).
+/** The k× derived datasets scaled runs read (`graft.Profile`'s scale
+  * points, perfbench's curation corpus, `HotBucketBench`). A derived
+  * dataset is generated at k× the source by DETERMINISTIC replication +
+  * key remap (no new testdata): copy i offsets every key by i·10⁹ and
+  * re-identifies content so copies do not interact — document text is
+  * Caesar-shifted per copy (length-exact, so token structure, dup
+  * graphs, shingle statistics replicate per copy with zero cross-copy
+  * collisions) and customer names carry a per-copy prefix (ER blocks
+  * replicate instead of inflating). The scaled corpus therefore has the
+  * SAME statistical shape per copy, and a measured exponent isolates the
+  * ENGINE's growth (shuffle sort costs, doubling rounds, candidate
+  * volumes) from workload-shape drift. That is the honest scaling
+  * question — "same data distribution, 10× the rows" — and also its
+  * limit: hotspots that grow with corpus size (one giant LSH block, a
+  * corpus-spanning duplicate family) are BOUNDED here by construction,
+  * which is exactly what the caps/gates in those operators enforce in
+  * production. The replication also fixes how most queries' row counts
+  * follow k; `Profile.ScaleTargets` declares and checks that relation.
   */
 object ScaleBench {
 
   private val Off = 1000000000L
-
-  /** The queries whose growth class VERDICT r14 flagged for measurement:
-    * suffix arrays (prefix-doubling rounds), dedup candidate volumes,
-    * ER blocking, winnowing probes, distributed BPE, and the fixed-point
-    * graph operators.
-    */
-  private val Targets = Seq(
-    "llm_suffix_array", "llm_corpus_sa", "llm_suffix_lrs",
-    "llm_dedup_exact", "llm_dedup_minhash", "llm_dedup_containment",
-    "er_customer_pairs", "er_customer_clusters", "er_incremental",
-    "llm_winnow_overlap", "llm_winnow_probe",
-    "llm_bpe_merges_dist",
-    "graph_pagerank", "graph_components", "graph_triangles",
-    // round 19: the families the completed flip sweep re-pinned — curve
-    // points prove the pinned shapes' WALL stays linear where the
-    // unpinned plans flipped to sorts (or, for mm_image_neardup, where
-    // static estimates would broadcast a corpus-sized side)
-    "llm_cross_doc_max", "llm_cross_doc_spans", "llm_substring_dup",
-    "llm_contamination_report", "er_golden_records", "mm_image_neardup",
-    // round 21: the r20 single-exchange basket/edge builds — the removed
-    // exchange is invisible in the sf0.1 plan (broadcast regime), so the
-    // curve points are the at-scale evidence (r20 verdict #2)
-    "basket_pairs")
-
-  /** The embedding-family scale paths — measurable ONLY under the
-    * signflip mode (compat dirs carry identical per-copy embeddings, so
-    * their output grows k² by corpus construction and the fit would
-    * read data mass as engine growth).
-    */
-  private val EmbedTargets = Seq(
-    "llm_embed_neardup_lsh", "llm_embed_clusters_lsh",
-    "llm_embed_neardup_lsh_auto", "llm_embed_clusters_lsh_auto",
-    "llm_ann_ivf_kmeans", "llm_ann_ivf_indexed",
-    "llm_knn_quantized", "llm_knn_pq",
-    "llm_semdedup", "llm_kcenter_select")
-
-  /** Curve-only twins of the two pinned-parameter LSH queries (NOT
-    * registered/oracle-gated — the oracle must replay pinned bits/bands
-    * bit-for-bit): the auto-sized path `embeddingNearDupsLshAuto` derives
-    * (bits, bands) from the corpus, so the curve shows the deployable
-    * parameterization holding recall where the pinned one degenerates
-    * (its 8-bit buckets all cross the cap past ~16k vectors).
-    */
-  private val CurveOnly: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "llm_embed_neardup_lsh_auto" -> ((s, dir) =>
-      graft.llm.Similarity.embeddingNearDupsLshAuto(
-        Tables.embeddings(s, dir), minCosine = 0.95)),
-    "llm_embed_clusters_lsh_auto" -> ((s, dir) =>
-      graft.llm.Dedup.connectedComponents(
-          graft.llm.Similarity.embeddingNearDupsLshAuto(
-            graft.llm.Similarity.plantTwins(Tables.embeddings(s, dir)),
-            minCosine = 0.95)
-            .select(col("id_a"), col("id_b")))
-        .select(col("id").as("vec_id"), col("cluster_id"))))
 
   /** Per-copy content re-identification: an AFFINE letter cipher
     * x → (a·x + b) mod 26 with a coprime to 26 — a length-exact alphabet
@@ -101,23 +38,15 @@ object ScaleBench {
     * growth. The affine form closes that by construction.) Copies 0-25
     * use a = 1, i.e. exactly the r15 Caesar — curve points at k ≤ 26
     * stay content-identical and comparable. Digits additionally rotate
-    * by copy/26 as a second independent marker.
+    * by copy/26 as a second independent marker, so copies 0-25 keep
+    * their digits: the KNOWN cross-copy digit-shingle leak (~5% of
+    * tokens shared by all ≤ 26 copies; those shingles' LSH buckets grow
+    * with k, an O(k²) slice the df caps bound in production). A per-copy
+    * digit rotation measured how much of a tail exponent that leak
+    * explains (PERF.md, "One hypothesis tested and REFUTED") and was
+    * not kept.
     */
   private val AffineA = Array(1, 3, 5, 7, 9, 11, 15, 17, 19, 21, 23, 25)
-
-  /** Digit handling has two modes. Default (compat): digits rotate by
-    * copy/26 — copies 0-25 keep digits untouched, bit-identical to the
-    * r15 dirs, at the cost of the KNOWN cross-copy digit-shingle leak
-    * (~5% of tokens shared by all ≤26 copies; those shingles' LSH
-    * buckets grow with k, an O(k²) slice the df-cap bounds in
-    * production). SPARK_GRAFT_SCALE_DIGITS=percopy rotates digits by
-    * copy%10 instead — the leak families cap at k/10 copies — to
-    * MEASURE how much of a tail exponent is that artifact versus the
-    * engine (separate derived dirs; does not touch compat dirs).
-    */
-  private def digitShift(copy: Int): Int =
-    if (sys.env.get("SPARK_GRAFT_SCALE_DIGITS").contains("percopy")) copy % 10
-    else (copy / 26) % 10
 
   /** Embedding re-identification mode. Default (compat): copies carry
     * IDENTICAL embeddings — fine for the text/graph/ER curve families
@@ -134,7 +63,7 @@ object ScaleBench {
     * cipher provides. Copy 0 is the identity pattern — 1× stays
     * byte-identical to the source. Separate derived dirs (x{k}sfe).
     */
-  private def embSignFlip: Boolean =
+  private[graft] def embSignFlip: Boolean =
     sys.env.get("SPARK_GRAFT_SCALE_EMB").contains("signflip")
 
   private def reidentifyEmbedding(emb: org.apache.spark.sql.Column, copy: Int) =
@@ -149,7 +78,7 @@ object ScaleBench {
     val dg = "0123456789"
     val a = AffineA((copy / 26) % AffineA.length)
     val b = copy % 26
-    val d = digitShift(copy)
+    val d = (copy / 26) % 10
     if (a == 1 && b == 0 && d == 0) c
     else {
       val mapLo = (0 until 26).map(x => lo((a * x + b) % 26)).mkString
@@ -165,10 +94,8 @@ object ScaleBench {
   def ensureScaled(spark: SparkSession, srcDir: String, k: Int): String = {
     require(k >= 1 && k <= 260,
       "1 <= k <= 260 (affine letter maps must stay pairwise distinct)")
-    val digitMode =
-      (if (sys.env.get("SPARK_GRAFT_SCALE_DIGITS").contains("percopy")) "pcd" else "") +
-        (if (embSignFlip) "sfe" else "")
-    val dest = s"${sys.props.getOrElse("java.io.tmpdir", "/tmp")}/graft_scale/x$k$digitMode"
+    val mode = if (embSignFlip) "sfe" else ""
+    val dest = s"${sys.props("java.io.tmpdir")}/graft_scale/x$k$mode"
     val marker = s"$dest/_SCALE_OK"
     val fp = Seq("lineitem", "orders", "customer", "documents", "embeddings",
         "events", "part", "supplier", "nation", "region")
@@ -176,7 +103,7 @@ object ScaleBench {
       .foldLeft(17L)((a, b) => a * 1000003L ^ b)
     // /v2: content-function version — bumping it invalidates dirs built
     // by an older transform (the digit-only 40× attempt above)
-    val want = s"$fp/$k/v2$digitMode"
+    val want = s"$fp/$k/v2$mode"
     if (graft.store.Fs.readStringIfExists(marker).contains(want)) return dest
     graft.store.Fs.delete(dest)
     def copies(name: String)(remap: (DataFrame, Int) => DataFrame): Unit = {
@@ -210,72 +137,5 @@ object ScaleBench {
     }
     graft.store.Fs.writeStringAtomic(marker, want)
     dest
-  }
-
-  def main(args: Array[String]): Unit = {
-    val (spark, srcDir) = BenchSweep.buildSession()
-    val scales = sys.env.getOrElse("SPARK_GRAFT_SCALES", "1,3,10")
-      .split(",").map(_.trim.toInt).toSeq
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY").map(_.split(",").toSet)
-    val registry = SparkEntry.queries ++ (if (embSignFlip) CurveOnly else Map.empty)
-    val targets = (if (embSignFlip) Targets ++ EmbedTargets else Targets)
-      .filter(t => only.forall(_.contains(t)))
-      .filter(registry.contains)
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
-    val results = scales.map { k =>
-      val dir = ensureScaled(spark, srcDir, k)
-      val docRows = Tables.documents(spark, dir).count()
-      val liRows = Tables.lineitem(spark, dir).count()
-      Engine.clearCaches(spark)
-      // cold pass: first call per query pays the memoized builds — the
-      // doubling rounds / index builds where superlinearity would live.
-      // The result ROW COUNT is recorded alongside: for the queries
-      // whose output is per-copy-local (dedup pairs, ER pairs, winnow
-      // spans…), rows(x_k) = k·rows(x_1) EXACTLY is measured evidence
-      // that the derived corpus replicates structure instead of
-      // inflating it — the premise the exponent fit rests on.
-      val cold = targets.map { q =>
-        val t0 = System.nanoTime()
-        val r = try {
-          val n = registry(q)(spark, dir).count()
-          Right(((System.nanoTime() - t0) / 1e9, n))
-        }
-        catch { case e: Throwable =>
-          Left(s"${e.getClass.getSimpleName}: ${e.getMessage}") }
-        q -> r
-      }.toMap
-      val warmSweeps = (1 to passes).map { _ =>
-        targets.map { q =>
-          val t0 = System.nanoTime()
-          try { registry(q)(spark, dir).count();
-            q -> Some((System.nanoTime() - t0) / 1e9) }
-          catch { case _: Throwable => q -> None }
-        }.toMap
-      }
-      val warm = targets.map { q =>
-        q -> warmSweeps.flatMap(_(q)).sorted.headOption
-      }.toMap
-      (k, docRows, liRows, cold, warm)
-    }
-    import BenchSweep.{jstr, num}
-    val body = targets.map { q =>
-      val per = results.map { case (k, _, _, cold, warm) =>
-        val c = cold(q).fold(e => s""""error":${jstr(e)}""",
-          { case (t, n) => s""""cold":${num(t, 3)},"rows":$n""" })
-        val w = warm(q).fold("")(t => s""","warm":${num(t, 3)}""")
-        s""""x$k":{$c$w}"""
-      }.mkString(",")
-      jstr(q) + s":{$per}"
-    }.mkString("{", ",", "}")
-    val sizes = results.map { case (k, d, l, _, _) =>
-      s""""x$k":{"documents":$d,"lineitem":$l}"""
-    }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"scale_curves","scales":[${scales.mkString(",")}],"passes":$passes,"boot_epoch":${BenchSweep.bootEpoch},"sizes":$sizes,"queries":$body,"src":"$srcDir"}"""
-    println(line)
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "scale_curves.json")
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
-    catch { case _: Throwable => () }
-    spark.stop()
   }
 }

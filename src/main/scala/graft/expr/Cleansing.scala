@@ -26,9 +26,6 @@ object Cleansing {
     */
   def epochToTs(c: Column): Column = timestamp_seconds(c)
 
-  /** E4: epoch seconds → date (partition column derivation). */
-  def epochToDate(c: Column): Column = to_date(epochToTs(c))
-
   /** E6: trim; empty → null (ref lambda_function.py:92-99). */
   def trimToNull(c: Column): Column = {
     val t = trim(c)
@@ -66,12 +63,6 @@ object Cleansing {
   /** E10: guarded percentage (ref script.sql:84-86). */
   def guardedPct(flagSum: Column, total: Column): Column =
     when(total > 0, lit(100.0) * flagSum / total).otherwise(lit(0.0))
-
-  /** E12: duration in (floor) seconds between two timestamps, computed in
-    * integer micros so both engines floor identically.
-    */
-  def durationSec(start: Column, end: Column): Column =
-    ((unix_micros(end) - unix_micros(start)) / lit(1000000.0))
 
   /** E16: hive partition columns from a timestamp
     * (ref transformation.py:163-165).

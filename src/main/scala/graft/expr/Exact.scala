@@ -20,14 +20,4 @@ object Exact {
   /** sum(x) rounded to 2dp, exact: decimal(38,6) accumulation → double. */
   def moneySum(c: Column): Column =
     round(sum(c.cast(Money)), 2).cast("double")
-
-  /** sum(x) unrounded but order-independent, as double. */
-  def exactSum(c: Column): Column =
-    sum(c.cast(Money)).cast("double")
-
-  /** avg(x) over money-like doubles: exact decimal sum, then one double
-    * division (deterministic given identical inputs).
-    */
-  def moneyAvg(c: Column): Column =
-    sum(c.cast(Money)).cast("double") / count(c)
 }

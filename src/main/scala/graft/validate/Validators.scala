@@ -36,9 +36,6 @@ object Validators {
   /** P3: required string present and non-blank (ref transformation.py:61-74). */
   def requiredNonBlank(c: Column): Column = c.isNotNull && trim(c) =!= ""
 
-  /** P4: required non-null. */
-  def requiredNonNull(c: Column): Column = c.isNotNull
-
   /** File-level summary: one row with total count and a violation count per
     * rule (ref inventory_validate.py:238-276 does this with pandas sums).
     * A file is quarantined iff any violation count > 0. Violation sums are

@@ -14,16 +14,16 @@ import graft.llm.Dedup
 
 class ProfileSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
-  private val recordKeys = Set("sec", "rows", "jobs", "stages", "tasks", "shuffle_write",
-    "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "exec_gc_ms", "exchanges",
-    "reused_exchanges", "joins_sorts", "job_detail", "stage_detail")
+  private val recordKeys = Set("sec", "cold_s", "warm_s", "rows", "jobs", "stages", "tasks",
+    "shuffle_write", "shuffle_read", "spill_mem", "spill_disk", "exec_run_ms", "exec_gc_ms",
+    "exchanges", "reused_exchanges", "joins_sorts", "job_detail", "stage_detail")
 
   private def parse(json: String): JsonNode = new ObjectMapper().readTree(json)
 
   test("a registered query's record: listener totals, per-job and per-stage detail, join/sort lines, plan file") {
     val out = Files.createTempDirectory("graft-profile")
     val planFile = out.resolve("sales_by_nation.txt")
-    val r = parse(Profile.record(spark, "sales_by_nation", dir, Some(planFile)))
+    val r = parse(Profile.record(spark, "sales_by_nation", dir, Some(planFile))._2)
     assert(r.fieldNames.asScala.toSet == recordKeys)
     assert(r.get("jobs").asInt >= 1)
     assert(r.get("job_detail").size == r.get("jobs").asInt)
@@ -35,7 +35,7 @@ class ProfileSpec extends SparkSpec {
   }
 
   test("a lazy-form query's record shows the joins its eager checkpoint hides") {
-    val r = parse(Profile.record(spark, "llm_winnow_overlap", dir))
+    val r = parse(Profile.record(spark, "llm_winnow_overlap", dir)._2)
     assert(r.fieldNames.asScala.toSet == recordKeys)
     assert(r.get("jobs").asInt >= 1)
     val joins = r.get("joins_sorts").elements.asScala.map(_.asText).toSeq
@@ -44,7 +44,7 @@ class ProfileSpec extends SparkSpec {
 
   test("the containment record's corpus statistics equal a direct document-frequency count") {
     val q = "llm_dedup_containment"
-    val r = parse(Profile.record(spark, q, dir))
+    val r = parse(Profile.record(spark, q, dir)._2)
     assert(r.fieldNames.asScala.toSet == recordKeys + "corpus")
     assert(r.get("rows").asLong == SparkEntry.queries(q)(spark, dir).count())
     val dfs = Tables.documents(spark, dir)
@@ -58,6 +58,18 @@ class ProfileSpec extends SparkSpec {
     val corpus = r.get("corpus")
     assert(corpus.fieldNames.asScala.map(k => k -> corpus.get(k).asLong).toMap == want)
     assert(want("sum_df2") > 0)
+  }
+
+  test("a linear query's scale record at k = 2 has twice its 1× rows and metamorphic ok") {
+    val q = "llm_dedup_exact"
+    assert(Profile.ScaleTargets.toMap.get(q).contains(Profile.Linear))
+    val (r1, _) = Profile.record(spark, q, dir)
+    val r = parse(Profile.record(spark, q, ScaleBench.ensureScaled(spark, dir, 2),
+      scale = Some(2 -> r1))._2)
+    assert(r.fieldNames.asScala.toSet == recordKeys + "metamorphic")
+    assert(r1 > 0 && r.get("rows").asLong == 2 * r1)
+    assert(r.get("metamorphic").asText == "ok")
+    assert(r.get("warm_s").asDouble <= r.get("sec").asDouble)
   }
 
   test("every lazy form releases the blocks it pins once its plan is read") {

@@ -35,8 +35,7 @@ class SessionBuilderGuardSpec extends AnyFunSuite {
 
   test("src/main/scala defines no main outside the harness mains and graft.Profile") {
     // a new diagnostic becomes a Profile record field, not another main
-    val mains = Set("Bench.scala", "Verify.scala", "ScaleBench.scala", "HotBucketBench.scala",
-      "Profile.scala")
+    val mains = Set("Bench.scala", "Verify.scala", "HotBucketBench.scala", "Profile.scala")
     val offenders = Files.walk(Paths.get("src/main/scala")).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && !mains(p.getFileName.toString))
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("def main("))
