@@ -8,7 +8,10 @@ Reads `.bench_build/work/<workload>/spans.json`, which
 `python3 perfbench/run.py --workload <w> --trace 1` leaves behind, and
 prints one row per op name: how often the op ran, Spark jobs per run,
 the jobs' call sites, job time and the driver time outside any job (both
-in ms per run). Times are the spans' self times, which add up to the op's
+in ms per run), then the op's slowest stage: its wall ms, task count and
+executor ms. A CPU-heavy stage that runs on fewer tasks than the session
+has cores (AQE coalesced its input to one partition) shows there as
+executor ms close to wall ms on one task. Times are the spans' self times, which add up to the op's
 wall time: job time is the self time of the op's job and stage spans,
 non-job time that of its op, build and action spans. A job whose name is
 a streaming batch description (no "at <file>:<line>") is listed under the
@@ -42,7 +45,7 @@ def table(spans):
     rows = OrderedDict()
     for op in (s for s in spans if s["kind"] == "op"):
         r = rows.setdefault(op["name"], {"runs": 0, "jobs": 0, "sites": Counter(),
-                                         "job_ms": 0.0, "nonjob_ms": 0.0})
+                                         "job_ms": 0.0, "nonjob_ms": 0.0, "slowest": None})
         r["runs"] += 1
         for s in spans:
             if s["op"] != op["id"]:
@@ -51,6 +54,10 @@ def table(spans):
                 r["job_ms"] += s["self_ms"]
             else:
                 r["nonjob_ms"] += s["self_ms"]
+            if s["kind"] == "stage":
+                a = s.get("attrs", {})
+                stage = (s["self_ms"], int(a.get("sched.tasks", 0)), 1e3 * a.get("exec.run_s", 0.0))
+                r["slowest"] = max(r["slowest"] or stage, stage)
             if s["kind"] == "job":
                 r["jobs"] += 1
                 r["sites"][call_site(s, by_parent.get(s["id"], []))] += 1
@@ -71,6 +78,9 @@ def print_table(rows):
         n = r["runs"]
         sites = ", ".join(f"{k} ×{v / n:g}" for k, v in r["sites"].items())
         print(f"{name:<18} {n:>4} {r['jobs'] / n:>6g} {r['job_ms'] / n:>9.0f} {r['nonjob_ms'] / n:>10.0f}  {sites}")
+        if r["slowest"]:
+            ms, tasks, exec_ms = r["slowest"]
+            print(f"{'':<18} slowest stage {ms:.0f} ms: {tasks} task{'s' * (tasks != 1)}, {exec_ms:.0f} executor ms")
     t = per_run(rows)["per unit"]
     print(f"{'per unit':<18} {'':>4} {t['jobs']:>6g} {t['job_ms']:>9.0f} {t['nonjob_ms']:>10.0f}")
 

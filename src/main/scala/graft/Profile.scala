@@ -131,8 +131,7 @@ object Profile {
       "er_golden_records" -> Linear,
       "mm_image_neardup" -> Excluded("images are a pure function of doc_id (pixels " +
         "hash it, sizes follow it mod 3 and 5, ids below 8 are corrupt), so each copy " +
-        "is a fresh image set, and the planted variants sit at id + 10⁹, the copy " +
-        "stride itself (sf0.001 pairs per copy 93/99/94)"),
+        "is a fresh image set (sf0.001 pairs per copy 93/99/94)"),
       "basket_pairs" -> Constant)
   }
 

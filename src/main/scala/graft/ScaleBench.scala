@@ -89,18 +89,23 @@ object ScaleBench {
 
   /** Build (or reuse) the k× derived dir. Deterministic: content is a
     * pure function of (source fingerprint, k), recorded in a marker so
-    * reruns and testdata rewrites rebuild exactly when needed.
+    * reruns and testdata rewrites rebuild exactly when needed. The dir is
+    * `graft_scale/<fingerprint>/x<k>` under `java.io.tmpdir`: each source
+    * keeps its own k× dirs, so scaling another source (the suite's
+    * sf0.001 next to an sf0.1 profile) never deletes them, and a rewrite
+    * of the source builds beside the stale dir.
     */
   def ensureScaled(spark: SparkSession, srcDir: String, k: Int): String = {
     require(k >= 1 && k <= 260,
       "1 <= k <= 260 (affine letter maps must stay pairwise distinct)")
     val mode = if (embSignFlip) "sfe" else ""
-    val dest = s"${sys.props("java.io.tmpdir")}/graft_scale/x$k$mode"
-    val marker = s"$dest/_SCALE_OK"
     val fp = Seq("lineitem", "orders", "customer", "documents", "embeddings",
         "events", "part", "supplier", "nation", "region")
       .map(t => graft.store.Snapshot.fingerprint(srcDir, s"$t.parquet"))
       .foldLeft(17L)((a, b) => a * 1000003L ^ b)
+    val dest = s"${sys.props("java.io.tmpdir")}/graft_scale/" +
+      s"${java.lang.Long.toHexString(fp)}/x$k$mode"
+    val marker = s"$dest/_SCALE_OK"
     // /v2: content-function version — bumping it invalidates dirs built
     // by an older transform (the digit-only 40× attempt above)
     val want = s"$fp/$k/v2$mode"

@@ -1,12 +1,15 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, BloomFilterMightContain,
+  Literal, SortOrder}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.graft.{ColumnBridge, RddBridge}
 import org.apache.spark.sql.types.{BinaryType, ByteType, DataType, IntegerType, LongType,
-  ShortType, StructField, StructType}
+  ShortType}
 import graft.Tables
 
 /** Deduplication operators for training-data pipelines (builder brief):
@@ -703,6 +706,12 @@ object Dedup {
     * never a `Row` per pair on the driver. Same schema as the loop's
     * output: both columns take the pair ids' type, nullable when either
     * side is.
+    *
+    * The union-find's ids come out sorted and the slices are cut in
+    * order, so the frame declares what is already true of it: ordered by
+    * `id`, range-partitioned over the slices (`SinglePartition` for one
+    * slice). A consumer's `orderBy(id)`, through any renaming projection,
+    * then plans no exchange and no sort.
     */
   private def ccLocal(p0: DataFrame, nPairs: Long): DataFrame = {
     val spark = p0.sparkSession
@@ -717,15 +726,25 @@ object Dedup {
     val (ids, roots) = graft.ops.UnionFind.components(chunks.toSeq)
     val slices = (0 until ids.length by CcLocalSliceIds).map(i =>
       (ids.slice(i, i + CcLocalSliceIds), roots.slice(i, i + CcLocalSliceIds)))
-    val rows = spark.sparkContext.parallelize(slices, math.max(1, slices.length))
-      .flatMap { case (is, rs) => is.indices.iterator.map(i => Row(is(i), rs(i))) }
     val t = p0.schema("u").dataType
     val nullable = p0.schema.exists(_.nullable)
+    val narrow: Long => Any = t match {
+      case IntegerType => _.toInt
+      case ShortType => _.toShort
+      case ByteType => _.toByte
+      case _ => identity
+    }
+    val rows = spark.sparkContext.parallelize(slices, math.max(1, slices.length))
+      .flatMap { case (is, rs) =>
+        is.indices.iterator.map(i => InternalRow(narrow(is(i)), narrow(rs(i))))
+      }
     graft.store.Checkpoints.free(p0)
     CcLog.info(s"connectedComponents path=union-find pairs=$nPairs rounds=0")
-    spark.createDataFrame(rows, StructType(Seq(
-        StructField("id", LongType, nullable), StructField("cluster_id", LongType, nullable))))
-      .select(col("id").cast(t).as("id"), col("cluster_id").cast(t).as("cluster_id"))
+    val id = AttributeReference("id", t, nullable)()
+    val byId = Seq(SortOrder(id, Ascending))
+    RddBridge.frame(spark, Seq(id, AttributeReference("cluster_id", t, nullable)()), rows,
+      if (slices.length <= 1) SinglePartition else RangePartitioning(byId, slices.length),
+      byId, ids.length, 2L * t.defaultSize * ids.length)
   }
 
   /** The edge/label base frames shared by the CC loop and the round-plan

@@ -773,12 +773,6 @@ object Multimodal {
 
   // ---- perceptual image hashing (dHash over real decoded pixels) ----------
 
-  /** Variant ids live in a disjoint range so (original, variant) pairs
-    * are trivially identifiable in tests while flowing through the SAME
-    * hash/band machinery as any other image.
-    */
-  private val DHashVariantBase = 1000000000L
-
   /** Gradient hash over the DECODED raster: sample a 9×7 grid at exact
     * integer positions x_k = k·(w−1)/8, y_r = r·(h−1)/6 (no
     * interpolation — implementation-defined resampling would break the
@@ -814,14 +808,20 @@ object Multimodal {
     * 73-91k accidental pairs at sf0.1, quadratic in corpus size — and
     * even a quadratic term reduces mod 2⁸ to a ~2¹⁵ class space.)
     * Every id%5==0 original also emits a
-    * +2-brightness variant (id + 10⁹) whose gradient signs flip only
+    * +2-brightness variant whose gradient signs flip only
     * where the +2 wraps past 255 — a planted perceptual near-dup that
     * is NOT byte-identical. Ids below `CorruptBelow` carry non-PNG
-    * bytes, as everywhere.
+    * bytes, as everywhere. A variant's media id is its source id plus
+    * max(doc_id) + 1: above every document's id whatever the table
+    * holds (a k× scaled corpus offsets copies by 10⁹, where a fixed
+    * offset would collide), the way `Similarity.plantTwins` places its
+    * twins above max(vec_id). The oracle derives the same base.
     */
   def syntheticImagesForDHash(spark: SparkSession, dir: String): Dataset[MediaPayload] = {
     import spark.implicits._
-    Tables.documents(spark, dir).select(col("doc_id")).as[Long]
+    val docs = Tables.documents(spark, dir).select(col("doc_id"))
+    val variantBase = docs.agg(coalesce(max(col("doc_id")), lit(0L))).head.getLong(0) + 1
+    docs.as[Long]
       .mapPartitions { ids =>
         val codec = new ImageCodec.Codec
         val md = java.security.MessageDigest.getInstance("SHA-256")
@@ -838,7 +838,7 @@ object Multimodal {
             }
             val orig = MediaPayload(id, "image", codec.encodeGrayPng(w, h, pix(0)))
             if (id % 5 == 0)
-              Iterator(orig, MediaPayload(id + DHashVariantBase, "image",
+              Iterator(orig, MediaPayload(id + variantBase, "image",
                 codec.encodeGrayPng(w, h, pix(2))))
             else Iterator.single(orig)
           }
@@ -1133,7 +1133,8 @@ object Multimodal {
        |mem AS (
        |  SELECT media_id, media_id AS src, 0 AS shift FROM ids
        |  UNION ALL
-       |  SELECT media_id + $DHashVariantBase, media_id, 2 FROM ids WHERE media_id % 5 = 0),
+       |  SELECT media_id + (SELECT MAX(doc_id) FROM documents) + 1, media_id, 2
+       |  FROM ids WHERE media_id % 5 = 0),
        |dims AS (SELECT media_id, src, shift,
        |           8 + (src % 5) * 4 AS w, 8 + (src % 3) * 4 AS h FROM mem),
        |rk AS (SELECT media_id, src, shift, w, h, unnest(range(7)) AS r FROM dims),

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, JoinedRow,
+  Predicate}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.Tables
 
 /** Entity resolution (record linkage): find records that denote the same
@@ -31,13 +38,17 @@ import graft.Tables
   *    set only, inside whole-stage codegen (`levenshtein` is a built-in
   *    expression; no UDF).
   *  - Clusters exploit the blocking invariant: edges never cross blocks,
-  *    so connected components are block-local and fold through ONE
-  *    shuffle of local union-find (`clusterWithinBlocks`, through the
-  *    shared primitive-array [[UnionFind]]) instead of iterative
-  *    min-label propagation — see its doc for why that is the
-  *    scale-correct shape here (the generic `Dedup.connectedComponents`
-  *    remains the tool for unbounded graphs, and finishes small ones
-  *    through the same [[UnionFind]]).
+  *    so connected components are block-local. `blockClusters` sends
+  *    the records through ONE fixed-count hash exchange on the block key
+  *    and then one pass per block: the size gate, the block's pairs, the
+  *    match rule and the shared primitive-array [[UnionFind]]. No
+  *    iterative min-label propagation, and no gate aggregate, semi join
+  *    or self-join exchange either (the generic
+  *    `Dedup.connectedComponents` remains the tool for unbounded graphs,
+  *    and finishes small ones through the same [[UnionFind]]).
+  *  - The match rule is stated once, as a Column over a candidate pair
+  *    row (`erMatch`): the pair queries filter with it, and the block
+  *    pass evaluates the same Column as a bound predicate.
   */
 object Linkage {
 
@@ -140,68 +151,117 @@ object Linkage {
   private val ErMaxEdit = 1
   private val ErMaxBlock = 1000
 
-  /** Matched pairs with the block key retained (clusters group on it). */
-  private def matchedCustomerPairs(spark: SparkSession, dir: String): DataFrame =
-    candidatePairs(Tables.customer(spark, dir), "c_custkey", customerBlock,
-      Seq("c_name", "c_mktsegment"), ErMaxBlock)
-      .withColumn("edit_dist", levenshtein(col("a_c_name"), col("b_c_name")))
-      .filter(col("edit_dist") <= ErMaxEdit &&
-        col("a_c_mktsegment") === col("b_c_mktsegment"))
-      .select(col("bk"), col("id_a").as("custkey_a"),
-        col("id_b").as("custkey_b"), col("edit_dist"))
+  /** The record columns the customer match rule reads. */
+  private val CustomerPayload = Seq("c_name", "c_mktsegment")
 
-  /** Matched customer pairs: same block, edit distance ≤ 1 on the name,
-    * AND market-segment agreement (the cheap exact attribute that keeps
-    * near-identical names of genuinely different entities apart — the
-    * standard match rule shape: fuzzy on the noisy field, exact on the
-    * reliable one).
+  /** Edit distance of the `name` column over a candidate pair row. */
+  private def erEditDist(name: String): Column = levenshtein(col(s"a_$name"), col(s"b_$name"))
+
+  /** THE ER match rule over a candidate pair row, whose columns carry
+    * the two records' payload prefixed a_/b_: edit distance ≤ 1 on the
+    * name AND market-segment agreement (the cheap exact attribute that
+    * keeps near-identical names of genuinely different entities apart —
+    * the standard match rule shape: fuzzy on the noisy field, exact on
+    * the reliable one). A null on either field matches nothing. The
+    * exact test comes first, so an evaluated pair (the block pass) skips
+    * the edit distance of every cross-segment pair; a join pushes the
+    * equality into its keys either way.
     */
+  private[graft] def erMatch(name: String, seg: String): Column =
+    col(s"a_$seg") === col(s"b_$seg") && erEditDist(name) <= ErMaxEdit
+
+  /** Matched customer pairs: same block and [[erMatch]]. */
   def customerPairs(spark: SparkSession, dir: String): DataFrame =
-    matchedCustomerPairs(spark, dir)
-      .select(col("custkey_a"), col("custkey_b"), col("edit_dist"))
+    candidatePairs(Tables.customer(spark, dir), "c_custkey", customerBlock,
+        CustomerPayload, ErMaxBlock)
+      .filter(erMatch("c_name", "c_mktsegment"))
+      .select(col("id_a").as("custkey_a"), col("id_b").as("custkey_b"),
+        erEditDist("c_name").as("edit_dist"))
       .orderBy(col("custkey_a"), col("custkey_b"))
 
-  /** Connected components of a pair graph whose edges provably never
-    * cross `blockCol` — the ER case: candidates are generated within a
-    * block, so components are block-local BY CONSTRUCTION. That collapses
-    * iterative min-label propagation (one shuffle + checkpoint per
-    * round, rounds = graph diameter — the right tool for unbounded
-    * graphs like the text/embedding near-dup families) to ONE shuffle:
-    * each block's edge set (bounded by maxBlock², and in practice by the
-    * match rate) folds locally through [[UnionFind]] inside
-    * flatMapGroups — the same helper, and so the same min-member cluster
-    * ids, as `Dedup.connectedComponents`' small-graph finish. State per
-    * group is the block's edges and distinct ids in primitive arrays —
-    * the same bound the candidate generator already enforces. This is
-    * the standard shape for clustering under blocking at 100 TB: never
-    * iterate globally over a graph the blocking key already partitioned.
+  /** Clusters of the records `rule` links within a block: `(id,
+    * cluster_id)` per record in a multi-member cluster, cluster id = its
+    * min member. Equal to [[candidatePairs]] (same gate), filtered by
+    * `rule`, then connected components, in one exchange:
+    *
+    *  - the keyed records (`idCol` cast to long, the block key, the
+    *    `payload` columns) take one hash exchange on the block key with
+    *    `spark.sql.shuffle.partitions` partitions. A repartition to a
+    *    fixed count is one AQE does not coalesce, so the scoring, the
+    *    CPU-heavy part, runs on every core even when the records are a
+    *    few KB;
+    *  - each task groups its records by block, drops blocks over
+    *    `maxBlock` records whole, and scores every pair (id_a < id_b) of
+    *    a block with `rule`, a Column over the pair row `a_<payload>`,
+    *    `b_<payload>` (the columns [[candidatePairs]] emits), resolved
+    *    once on the driver and bound as a predicate;
+    *  - the block's matched pairs fold through [[UnionFind]], so cluster
+    *    ids are the min member, as in `Dedup.connectedComponents`.
+    *
+    * Records with a null block key or a null id pair with nothing (the
+    * equi-join and `id_a < id_b` drop them too), though a null-id record
+    * still counts toward its block's size. Block keys compare by value,
+    * so they must be atomic (string, number, date). State per task is
+    * its records and one block's edges in primitive arrays, the bound
+    * the gate already enforces. This is the standard shape for
+    * clustering under blocking at 100 TB: never iterate globally over a
+    * graph the blocking key already partitioned.
     */
-  def clusterWithinBlocks(pairs: DataFrame, blockCol: String,
-                          aCol: String, bCol: String): DataFrame = {
-    val spark = pairs.sparkSession
+  def blockClusters(records: DataFrame, idCol: String, blockKey: Column,
+                    payload: Seq[String], rule: Column, maxBlock: Int = 1000): DataFrame = {
+    val spark = records.sparkSession
     import spark.implicits._
-    pairs.select(col(blockCol).cast("string"), col(aCol).cast("long"),
-        col(bCol).cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (_, it) =>
-        val a, b = new scala.collection.mutable.ArrayBuilder.ofLong
-        it.foreach { case (_, x, y) => a += x; b += y }
-        val (ids, roots) = UnionFind.components(Seq((a.result(), b.result())))
-        ids.lazyZip(roots).toSeq
+    val keyed = records.select(
+        (col(idCol).cast("long").as("id") +: blockKey.as("bk") +: payload.map(col)): _*)
+      .filter(col("bk").isNotNull)
+    val pay = StructType(keyed.schema.drop(2))
+    val matches = boundPairRule(spark, pay, rule)
+    keyed.repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt, col("bk"))
+      .mapPartitions { rows =>
+        val rule = Predicate.create(matches)
+        rule.initialize(org.apache.spark.TaskContext.getPartitionId())
+        val toPay = CatalystTypeConverters.createToCatalystConverter(pay)
+        val blocks = scala.collection.mutable.HashMap[Any, ArrayBuffer[Row]]()
+        rows.foreach(r => blocks.getOrElseUpdate(r.get(1), ArrayBuffer()) += r)
+        val pair = new JoinedRow
+        blocks.valuesIterator.filter(_.length <= maxBlock).flatMap { block =>
+          val recs = block.filterNot(_.isNullAt(0)).sortBy(_.getLong(0))
+          val ids = recs.map(_.getLong(0)).toArray
+          val pays = recs.map(r =>
+            toPay(Row.fromSeq(r.toSeq.drop(2))).asInstanceOf[InternalRow]).toArray
+          val a, b = new scala.collection.mutable.ArrayBuilder.ofLong
+          for (i <- ids.indices; j <- i + 1 until ids.length)
+            if (ids(i) < ids(j) && rule.eval(pair(pays(i), pays(j)))) { a += ids(i); b += ids(j) }
+          val (ms, roots) = UnionFind.components(Seq((a.result(), b.result())))
+          ms.indices.iterator.map(k => (ms(k), roots(k)))
+        }
       }
       .toDF("id", "cluster_id")
   }
 
-  /** Entity clusters over the matched pairs (cluster id = min member
-    * custkey); singletons excluded — the view is "which records need
-    * merging", matching the text-side cluster queries. Components are
-    * block-local (the candidate generator guarantees it), so this runs
-    * the one-shuffle `clusterWithinBlocks`, not iterative CC.
+  /** `rule` resolved over the pair row of `pay`'s columns, prefixed a_
+    * then b_, and bound to that row's ordinals.
     */
+  private def boundPairRule(spark: SparkSession, pay: StructType, rule: Column): Expression = {
+    def side(p: String) = pay.fields.map(f => f.copy(name = s"${p}_${f.name}"))
+    val pairs = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), StructType(side("a") ++ side("b")))
+    pairs.select(rule.as("m")).queryExecution.analyzed match {
+      case Project(Seq(Alias(e, _)), child) => BindReferences.bindReference(e, child.output)
+      case other => throw new IllegalStateException(s"unexpected rule plan:\n$other")
+    }
+  }
+
+  /** Entity clusters of the customer table (cluster id = min member
+    * custkey); singletons excluded — the view is "which records need
+    * merging", matching the text-side cluster queries.
+    */
+  private def customerClusterIds(spark: SparkSession, dir: String): DataFrame =
+    blockClusters(Tables.customer(spark, dir), "c_custkey", customerBlock,
+      CustomerPayload, erMatch("c_name", "c_mktsegment"), ErMaxBlock)
+
   def customerClusters(spark: SparkSession, dir: String): DataFrame =
-    clusterWithinBlocks(matchedCustomerPairs(spark, dir),
-        "bk", "custkey_a", "custkey_b")
+    customerClusterIds(spark, dir)
       .select(col("id").as("custkey"), col("cluster_id"))
       .orderBy(col("custkey"))
 
@@ -242,8 +302,7 @@ object Linkage {
     * segment equality is part of the (transitive) match rule.
     */
   def customerGoldenRecords(spark: SparkSession, dir: String): DataFrame = {
-    val cl = clusterWithinBlocks(matchedCustomerPairs(spark, dir),
-      "bk", "custkey_a", "custkey_b")
+    val cl = customerClusterIds(spark, dir)
     // shuffle_hash on the cluster-membership side (round 19): PlanDiag
     // measured this join flipping broadcast → SortMergeJoin at 80× —
     // sorting the full customer table to attach attributes to the
@@ -294,10 +353,9 @@ object Linkage {
   def customerIncremental(spark: SparkSession, dir: String): DataFrame = {
     candidatePairsAcross(customerArrivals(spark, dir), customerMaster(spark, dir), "id",
         expr("substring(name, 1, length(name) - 2)"), Seq("name", "seg"), ErMaxBlock)
-      .withColumn("edit_dist", levenshtein(col("a_name"), col("b_name")))
-      .filter(col("edit_dist") <= ErMaxEdit && col("a_seg") === col("b_seg"))
+      .filter(erMatch("name", "seg"))
       .select(col("id_a").as("new_id"), col("id_b").as("master_custkey"),
-        col("edit_dist"))
+        erEditDist("name").as("edit_dist"))
       .orderBy(col("new_id"), col("master_custkey"))
   }
 
@@ -308,12 +366,10 @@ object Linkage {
     */
   def customerSnmPairs(spark: SparkSession, dir: String): DataFrame =
     sortedNeighborhoodPairs(Tables.customer(spark, dir), "c_custkey",
-      col("c_name"), Seq("c_name", "c_mktsegment"), w = SnmW)
-      .withColumn("edit_dist", levenshtein(col("a_c_name"), col("b_c_name")))
-      .filter(col("edit_dist") <= ErMaxEdit &&
-        col("a_c_mktsegment") === col("b_c_mktsegment"))
+      col("c_name"), CustomerPayload, w = SnmW)
+      .filter(erMatch("c_name", "c_mktsegment"))
       .select(col("id_a").as("custkey_a"), col("id_b").as("custkey_b"),
-        col("edit_dist"))
+        erEditDist("c_name").as("edit_dist"))
       .orderBy(col("custkey_a"), col("custkey_b"))
 
   private val SnmW = 3

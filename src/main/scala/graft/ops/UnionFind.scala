@@ -3,7 +3,7 @@ package graft.ops
 /** Exact connected components of an undirected edge list held in
   * primitive arrays: the one union-find of the engine, shared by
   * `Dedup.connectedComponents`' small-graph finish on the driver and
-  * `Linkage.clusterWithinBlocks`' per-block fold on the executors.
+  * `Linkage.blockClusters`' per-block fold on the executors.
   *
   * Endpoints are sorted and deduplicated once, so a node is an `Int`
   * index into the sorted ids and the forest is one `Int` parent array:

@@ -1,10 +1,19 @@
 package graft.plans
 
+import scala.annotation.tailrec
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution._
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 import graft.llm.{CosineSim, DotProduct, DupTokenFrac, IntDotProduct, MinHashSig, RollingFingerprint, Shingles, SimHash64}
 
@@ -22,7 +31,14 @@ import graft.llm.{CosineSim, DotProduct, DupTokenFrac, IntDotProduct, MinHashSig
   *    the idiomatic built-in form get kernel speed without knowing the
   *    kernel exists. The composable form is CodegenFallback (it
   *    re-interprets its lambda per row); the kernel is one primitive
-  *    loop inside whole-stage codegen.
+  *    loop inside whole-stage codegen;
+  *  - `SmallSortSinglePartition`, an adaptive query-stage preparation
+  *    rule: a global sort whose input is one small, already materialized
+  *    shuffle stage gathers that input through one `SinglePartition`
+  *    exchange instead of a range exchange, so no RangePartitioner
+  *    sample job re-reads the stage. The decision is made from the map
+  *    output of a stage that has run (Shark's partial DAG execution);
+  *    initial plans are unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -58,6 +74,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       case Seq(tok, IntLit(k)) => graft.llm.MisraGriesSummary(tok, k)
     }
     ext.injectOptimizerRule(_ => FuseVectorKernels)
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
   }
 }
 
@@ -123,5 +140,67 @@ object FuseVectorKernels extends Rule[LogicalPlan] {
           ((sameVar(aAcc, acc) && sameVar(aElem, elem)) || (sameVar(aAcc, elem) && sameVar(aElem, acc))) &&
           fin.exprId == facc.exprId =>
       DotProduct(l, r)
+  }
+}
+
+/** Replaces the range exchange under a global sort by a `SinglePartition`
+  * exchange when the exchange's input is small and already measured.
+  *
+  * A range exchange starts with a RangePartitioner, whose boundary
+  * sample is one more Spark job over the whole child: on the small
+  * sorted results of most queries that job re-reads a few hundred KB of
+  * shuffle output, writes nothing, and costs more than the sort. The
+  * rule engages when all of these hold:
+  *
+  *  - the exchange is the one `EnsureRequirements` put under a global
+  *    `SortExec` (origin `ENSURE_REQUIREMENTS`; a user's
+  *    `repartitionByRange` keeps its layout);
+  *  - below it, a chain of single-child operators that do not multiply
+  *    rows ends in one materialized shuffle stage;
+  *  - that stage's map output is at most
+  *    `spark.sql.adaptive.advisoryPartitionSizeInBytes`, the size AQE
+  *    already deems right for one partition.
+  *
+  * The operators that do not multiply rows are the projections, filters,
+  * aggregates, windows, local sorts and limits, the object
+  * (de)serializers, and AQE's shuffle reads. A typed `mapPartitions`
+  * function is opaque; it is taken as non-expanding too, because the
+  * engine's per-partition passes (`graft.ops.Linkage`'s block pass) emit
+  * at most one row per input record, and a function that does multiply
+  * rows over such small input costs one sorted task at worst. A
+  * `Generate`, an `Expand`, a join or any operator with more than one
+  * child keeps the range exchange, and so does an exchange over a stage
+  * that has not run: the rule only acts on adaptive re-planning, after
+  * the stage's statistics exist. The sort itself is unchanged, so the
+  * result is the same rows in the same order.
+  */
+object SmallSortSinglePartition extends Rule[SparkPlan] {
+
+  override def apply(plan: SparkPlan): SparkPlan = {
+    val limit = conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    plan.transformUp {
+      case s: SortExec if s.global => s.child match {
+        case e @ ShuffleExchangeExec(_: RangePartitioning, child, ENSURE_REQUIREMENTS, _)
+            if stageBytes(child).exists(_ <= limit) =>
+          val single = e.copy(outputPartitioning = SinglePartition)
+          single.copyTagsFrom(e)
+          s.withNewChildren(Seq(single))
+        case _ => s
+      }
+    }
+  }
+
+  /** Map output bytes of the materialized shuffle stage at the end of a
+    * chain of non-expanding operators, if `p` is such a chain.
+    */
+  @tailrec private def stageBytes(p: SparkPlan): Option[Long] = p match {
+    case q: ShuffleQueryStageExec =>
+      if (q.isMaterialized) q.mapStats.map(_.bytesByPartitionId.sum) else None
+    case _: ProjectExec | _: FilterExec | _: BaseAggregateExec | _: WindowExec |
+         _: SortExec | _: LocalLimitExec | _: GlobalLimitExec | _: CollectMetricsExec |
+         _: DeserializeToObjectExec | _: SerializeFromObjectExec | _: MapElementsExec |
+         _: MapPartitionsExec | _: AQEShuffleReadExec =>
+      stageBytes(p.children.head)
+    case _ => None
   }
 }

@@ -89,4 +89,31 @@ class CurationJobsSpec extends SparkSpec with JobCount {
     assert(jobs2.size == 3, jobs2.mkString("\n"))
     assert(shuffled.as[(Long, Long)].collect().toMap == want)
   }
+
+  test("union-find labels arrive sorted: a renaming orderBy(id) plans no exchange and no sort, over several slices") {
+    // 40 000 ids = two 32 768-id slices; pairs (2i, 2i + 1)
+    val n = 40000L
+    val pairs = spark.range(0, n / 2).select(($"id" * 2).as("id_a"), ($"id" * 2 + 1).as("id_b"))
+    val cc = Dedup.connectedComponents(pairs)
+    val out = cc.select($"id".as("doc_id"), $"cluster_id").orderBy($"doc_id").as[(Long, Long)]
+    val rows = out.collect()
+    assert(rows.map(_._1).toSeq == (0L until n))
+    assert(rows.forall { case (id, c) => c == id - id % 2 })
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange") && !plan.contains("Sort ["), plan)
+    assert(cc.rdd.getNumPartitions == 2)
+    // narrow id types keep the declaration: ints sort as ints
+    val ints = Dedup.connectedComponents(Seq((7, 9), (3, 4), (4, 9)).toDF("id_a", "id_b"))
+      .orderBy($"id").as[(Int, Int)]
+    assert(ints.collect().toSeq == Seq((3, 3), (4, 3), (7, 3), (9, 3)))
+    assert(!ints.queryExecution.executedPlan.toString.contains("Exchange"))
+  }
+
+  test("er_customer_clusters and llm_dedup_exact run at most 3 jobs each") {
+    Seq("er_customer_clusters", "llm_dedup_exact").foreach { q =>
+      val (rows, jobs) = jobsOf(SparkEntry.queries(q)(spark, dir).collect())
+      assert(rows.nonEmpty, q)
+      assert(jobs.size <= 3, s"$q:\n${jobs.mkString("\n")}")
+    }
+  }
 }

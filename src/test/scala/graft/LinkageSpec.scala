@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import graft.ops.Linkage
 
-class LinkageSpec extends SparkSpec with PropertyCheck {
+class LinkageSpec extends SparkSpec with PropertyCheck with AdaptiveSparkPlanHelper {
   import org.scalacheck.Gen
   import spark.implicits._
 
@@ -60,24 +62,40 @@ class LinkageSpec extends SparkSpec with PropertyCheck {
     assert(!cl.contains(7L), "singletons are not cluster members")
   }
 
-  test("clusterWithinBlocks ≡ iterative connectedComponents when edges are block-local") {
+  test("blockClusters ≡ iterative connectedComponents over the matched candidate pairs") {
     val pairs = Linkage.candidatePairs(recs, "id", block, Seq("name", "seg"))
-      .withColumn("d", levenshtein($"a_name", $"b_name"))
-      .filter($"d" <= 1 && $"a_seg" === $"b_seg")
-    val local = Linkage.clusterWithinBlocks(pairs, "bk", "id_a", "id_b")
+      .filter(Linkage.erMatch("name", "seg"))
+    val local = Linkage.blockClusters(recs, "id", block, Seq("name", "seg"),
+        Linkage.erMatch("name", "seg"))
       .as[(Long, Long)].collect().toMap
+    assert(local == Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L, 6L -> 4L))
     // the round loop, forced: the default bound would finish this graph
-    // through the same UnionFind as clusterWithinBlocks
+    // through the same UnionFind as blockClusters
     val global = graft.llm.Dedup.connectedComponentsWith(
         pairs.select($"id_a", $"id_b"), localMaxEdgeRows = 0)
       .as[(Long, Long)].collect().toMap
     assert(local == global)
-    // path-compressed union by min: chain order can't change the rep
-    val chain = Seq(("x", 9L, 8L), ("x", 7L, 8L), ("x", 6L, 7L), ("y", 1L, 2L))
-      .toDF("bk", "id_a", "id_b")
-    val got = Linkage.clusterWithinBlocks(chain, "bk", "id_a", "id_b")
+    // path-compressed union by min: a chain 6~7~8~9 (each step one edit,
+    // the ends three apart) takes its min whatever the pair order
+    val chain = Seq((9L, "xxxx bbb"), (7L, "xxxx aab"), (8L, "xxxx abb"), (6L, "xxxx aaa"),
+        (2L, "yyyy b"), (1L, "yyyy a"))
+      .toDF("id", "name").withColumn("seg", lit("A"))
+    val got = Linkage.blockClusters(chain, "id", block, Seq("name", "seg"),
+        Linkage.erMatch("name", "seg"))
       .as[(Long, Long)].collect().toMap
     assert(got == Map(6L -> 6L, 7L -> 6L, 8L -> 6L, 9L -> 6L, 1L -> 1L, 2L -> 1L))
+  }
+
+  test("blockClusters runs its scoring in one stage of spark.sql.shuffle.partitions tasks") {
+    val plan = Linkage.blockClusters(recs, "id", block, Seq("name", "seg"),
+      Linkage.erMatch("name", "seg"))
+    plan.collect()
+    val exchanges = collect(plan.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }
+    assert(exchanges.map(e => (e.numPartitions, e.shuffleOrigin)) ==
+      Seq((spark.conf.get("spark.sql.shuffle.partitions").toInt, REPARTITION_BY_NUM)),
+      plan.queryExecution.executedPlan.toString)
+    assert(collect(plan.queryExecution.executedPlan) { case r: AQEShuffleReadExec => r }.isEmpty,
+      plan.queryExecution.executedPlan.toString)
   }
 
   test("sortedNeighborhood: exactly the w successors in sort order, layout-invariant") {
@@ -131,24 +149,37 @@ class LinkageSpec extends SparkSpec with PropertyCheck {
     }
   }
 
-  test("clusterWithinBlocks property: ≡ iterative CC on random block-local graphs") {
+  test("blockClusters property: ≡ candidatePairs + match rule + connected components") {
+    // random block corpora: oversized blocks (dropped whole), null block
+    // keys, null ids (counted by the gate, paired with nothing), null
+    // names and segments; names one or two edits apart inside a block
+    val maxBlock = 6
+    val rec = for {
+      name <- Gen.frequency(9 -> Gen.listOfN(3, Gen.oneOf('a', 'b')).map(_.mkString), 1 -> Gen.const(null))
+      seg <- Gen.frequency(4 -> Gen.oneOf("A", "B"), 1 -> Gen.const(null))
+      nullId <- Gen.frequency(9 -> false, 1 -> true)
+    } yield (name, seg, nullId)
     val gen = for {
-      nb <- Gen.choose(1, 4)
-      edges <- Gen.listOfN(12, for {
-        b <- Gen.choose(0, nb - 1)
-        x <- Gen.choose(0, 7)
-        y <- Gen.choose(0, 7)
-        if x != y
-      } yield (b.toString, b * 100L + math.min(x, y), b * 100L + math.max(x, y)))
-    } yield edges.distinct
-    forAll(gen) { edges =>
-      val df = edges.toDF("bk", "id_a", "id_b")
-      val local = Linkage.clusterWithinBlocks(df, "bk", "id_a", "id_b")
-        .as[(Long, Long)].collect().toMap
-      val global = graft.llm.Dedup.connectedComponentsWith(df.select($"id_a", $"id_b"),
-          localMaxEdgeRows = 0)
-        .as[(Long, Long)].collect().toMap
-      assert(local == global, edges.toString)
+      sizes <- Gen.listOfN(4, Gen.frequency(4 -> Gen.choose(1, maxBlock), 1 -> Gen.choose(maxBlock + 1, 9)))
+      blocks <- Gen.sequence[List[List[(String, String, Boolean)]], List[(String, String, Boolean)]](
+        sizes.map(n => Gen.listOfN(n, rec)))
+      nullBlock <- Gen.choose(-1, 3)
+    } yield blocks.zipWithIndex.flatMap { case (rs, b) =>
+      rs.map { case (name, seg, nullId) =>
+        (nullId, if (b == nullBlock) null else s"g$b", name, seg) }
+    }.zipWithIndex.map { case ((nullId, g, name, seg), i) =>
+      (if (nullId) None else Some(i.toLong * 7 % 101), g, name, seg)
+    }
+    forAll(gen) { rows =>
+      val df = rows.toDF("id", "g", "name", "seg")
+      val rule = Linkage.erMatch("name", "seg")
+      val got = Linkage.blockClusters(df, "id", $"g", Seq("name", "seg"), rule, maxBlock)
+        .as[(Long, Long)].collect().toSeq.sorted
+      val pairs = Linkage.candidatePairs(df, "id", $"g", Seq("name", "seg"), maxBlock)
+        .filter(rule).select($"id_a", $"id_b")
+      val want = graft.llm.Dedup.connectedComponents(pairs)
+        .as[(Long, Long)].collect().toSeq.sorted
+      assert(got == want, rows.toString)
     }
   }
 

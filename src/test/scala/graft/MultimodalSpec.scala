@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.max
 import graft.llm.Multimodal
 import graft.llm.Multimodal.{MediaRow, StubCodec}
 
@@ -269,10 +270,12 @@ class MultimodalSpec extends SparkSpec {
     }
     val hashes = Multimodal.imageDHash(Multimodal.syntheticImagesForDHash(spark, dir))
       .as[(Long, Long)].collect().toMap
+    // variants sit above every doc id: source id + max(doc_id) + 1
+    val base = Tables.documents(spark, dir).agg(max($"doc_id")).as[Long].head() + 1
     // the decoded-raster hash equals the formula hash for every member —
     // the PNG round-trip adds nothing and loses nothing
     hashes.foreach { case (id, h) =>
-      val (src, shift) = if (id >= 1000000000L) (id - 1000000000L, 2) else (id, 0)
+      val (src, shift) = if (id >= base) (id - base, 2) else (id, 0)
       assert(h == expectedHash(src, shift), s"id $id hash")
     }
     val got = Multimodal.imageNearDupPairs(
@@ -280,10 +283,10 @@ class MultimodalSpec extends SparkSpec {
       .as[(Long, Long, Int)].collect()
     // exactly the planted (original, variant) pairs whose true hamming
     // is within the banded guarantee — and no accidental pairs
-    val expect = hashes.keys.filter(id => id >= 8 && id < 1000000000L && id % 5 == 0)
+    val expect = hashes.keys.filter(id => id >= 8 && id < base && id % 5 == 0)
       .flatMap { id =>
         val ham = java.lang.Long.bitCount(expectedHash(id, 0) ^ expectedHash(id, 2))
-        if (ham <= 3) Some((id, id + 1000000000L, ham)) else None
+        if (ham <= 3) Some((id, id + base, ham)) else None
       }.toSet
     assert(expect.nonEmpty, "fixture must plant discoverable pairs")
     assert(got.toSet == expect,
@@ -309,5 +312,14 @@ class MultimodalSpec extends SparkSpec {
         assert(silent == (w % 2 == 1), s"id $id window $w silence flag")
       }
     }
+  }
+
+  test("dHash variants take media ids above every doc id: unique on a 3x scaled corpus") {
+    val x3 = ScaleBench.ensureScaled(spark, "/root/testdata/sf0.001", 3)
+    val ids = Multimodal.syntheticImagesForDHash(spark, x3).select($"media_id").as[Long].collect()
+    val docs = Tables.documents(spark, x3).count()
+    assert(ids.length > docs, "the corpus must plant variants")
+    assert(ids.distinct.length == ids.length,
+      s"duplicate media ids: ${ids.groupBy(identity).collect { case (i, g) if g.length > 1 => i }.take(5)}")
   }
 }

@@ -217,11 +217,15 @@ class PlanInvariantsSpec extends SparkSpec {
           maxHamming = 3))
       // round-20 pins, both caught by the 160× PlanDiag sweep: the
       // containment overflow's member×reps star join, and the ER
-      // blocking family's scalar size-gate semi + block self-join
+      // blocking family's scalar size-gate semi + block self-join (the
+      // pairs query); the golden records join the block pass's clusters
+      // to the customer table through a pinned hash join
       check("containmentPairs+overflow", 0)(
         graft.llm.Dedup.containmentPairs(docs, "text", "doc_id",
           n = 3, minContainment = 0.9, maxDf = 16, overflowReps = 8))
-      check("er candidatePairs (golden-records family)", 0)(
+      check("er candidatePairs (pairs family)", 0)(
+        graft.ops.Linkage.customerPairs(spark, dir))
+      check("er block pass (golden-records family)", 0)(
         graft.ops.Linkage.customerGoldenRecords(spark, dir))
       // cross-doc LCP stage: r21 inlined the order-predecessor into
       // globalSeq's TwoPass carry, so the s-shifted self-join (r20's one

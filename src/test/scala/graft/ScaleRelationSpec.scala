@@ -49,4 +49,29 @@ class ScaleRelationSpec extends SparkSpec {
     assert(Profile.metamorphic("mm_image_neardup", 3, 10, 31) == "excluded")
     assert(Profile.metamorphic("sales_by_nation", 3, 10, 30) == "excluded")
   }
+
+  test("each source keeps its own k× dir: scaling a second source leaves the first's marker and files untouched") {
+    import graft.store.Fs
+    def state(d: String) = Fs.listFilesRecursive(d).map(e => (e.path, e.len, e.mtime)).sortBy(_._1)
+    val first = ScaleBench.ensureScaled(spark, dir, 2)
+    val marker = Fs.readStringIfExists(s"$first/_SCALE_OK")
+    val before = state(first)
+    assert(marker.isDefined && before.nonEmpty)
+    // the same tables at another path: another source fingerprint
+    val src2 = java.nio.file.Files.createTempDirectory("scale_src2")
+    java.nio.file.Files.list(java.nio.file.Paths.get(dir)).forEach(f =>
+      java.nio.file.Files.copy(f, src2.resolve(f.getFileName)))
+    val second = ScaleBench.ensureScaled(spark, src2.toString, 2)
+    try {
+      assert(second != first)
+      assert(Fs.readStringIfExists(s"$second/_SCALE_OK").exists(!marker.contains(_)))
+      assert(Fs.readStringIfExists(s"$first/_SCALE_OK") == marker)
+      assert(state(first) == before, "the first source's k× files were rewritten")
+      // and the first source's dir is still reused as built
+      assert(ScaleBench.ensureScaled(spark, dir, 2) == first && state(first) == before)
+    } finally {
+      Fs.delete(new java.io.File(second).getParent)
+      Fs.delete(src2.toString)
+    }
+  }
 }
